@@ -46,14 +46,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from datarepo_spark.session import get_spark  # noqa: E402
 from datarepo_spark.queries.registry import REGISTRY  # noqa: E402
-from datarepo_spark.queries import analysis  # noqa: E402,F401  (registers the r10b headline ops)
-from datarepo_spark.queries import extensions  # noqa: E402,F401
-from datarepo_spark.queries import insights  # noqa: E402,F401  (registers the r11 batch)
-from datarepo_spark.queries import physical  # noqa: E402,F401  (registers bench_calibration)
-from datarepo_spark.queries import ranked  # noqa: E402,F401  (registers the r12 batch)
-from datarepo_spark.queries import sources  # noqa: E402,F401  (registers streaming_ewma_twin)
-from datarepo_spark.queries import tpch_extra  # noqa: E402,F401  (registers q18)
-from datarepo_spark.functions.dedup import unpersist_intermediates  # noqa: E402
+from datarepo_spark.core.exec import release  # noqa: E402
 
 HEADLINE = [
     # r11 (VERDICT r10 #6): noise-floor calibration row FIRST — a fixed
@@ -257,13 +250,12 @@ def _steady_child(plan_path: str) -> None:
                 break
             # Release caches INSIDE the rep loop (r14, VERDICT r13
             # what's-wrong #3): rep 2+ of a persist-using query used
-            # to hit rep 1's _scoped_persist caches via Spark's
+            # to hit rep 1's scoped_persist caches via Spark's
             # logical-plan cache matching, so its "steady" measured
             # cache reads, not the query (graph_local_clustering read
             # 1.16 s steady vs ~6.5 s honest fresh). Steady now means
             # "quiet-session floor of the FULL computation".
-            unpersist_intermediates()
-            spark.catalog.clearCache()
+            release(spark)
             start = time.perf_counter()
             n = REGISTRY[name].spark_fn(spark, sf_dir).count()
             elapsed = round(time.perf_counter() - start, 4)
@@ -288,8 +280,7 @@ def main() -> None:
     for _pass in range(2):
         # drop persisted intermediates so pass 2 re-does the WORK and
         # min-of-2 removes only environment noise, not computation
-        unpersist_intermediates()
-        spark.catalog.clearCache()
+        release(spark)
         for name in names:
             start = time.perf_counter()
             n = REGISTRY[name].spark_fn(spark, sf_dir).count()

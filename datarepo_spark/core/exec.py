@@ -1,0 +1,157 @@
+"""Per-query execution decisions shared by the operator modules: cache
+lifetime (scoped persists and their release), partition sizing for
+small cached intermediates, input spreading, and the byte size of a
+plan's scanned input."""
+
+from __future__ import annotations
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+
+def parallelism(df: DataFrame) -> int:
+    """Partition count for small persisted intermediates: the lesser of
+    the cluster's core count and the session's shuffle-partition setting.
+    Either alone can be badly oversized for a tiny cached DataFrame (a
+    200-shuffle-partition session pins 200 near-empty cached partitions;
+    a many-core driver pins one per core under a deliberately small
+    shuffle setting) — and AQE's partition coalescing can't reach inside
+    cached plans, so every downstream stage would run that many tasks."""
+    sess = df.sparkSession
+    cores = sess.sparkContext.defaultParallelism
+    try:
+        shuffle = int(sess.conf.get("spark.sql.shuffle.partitions"))
+    except Exception:
+        shuffle = cores
+    return max(1, min(cores, shuffle))
+
+
+# Internal persists awaiting release: pipelines cache small
+# intermediates (candidate buckets, candidate signatures) that both
+# sides of a self-join consume — the cache must outlive the *caller's*
+# consumption of the returned (lazy) DataFrame, so the functions cannot
+# unpersist before returning. Long-lived sessions running many pipelines
+# should call :func:`unpersist_intermediates` (or :func:`release`)
+# between pipelines; otherwise each pipeline run leaves its small
+# caches pinned until session end.
+LIVE_CACHES: list[DataFrame] = []
+
+
+def scoped_persist(df: DataFrame) -> DataFrame:
+    """persist() + register for later release via unpersist_intermediates."""
+    LIVE_CACHES.append(df.persist())
+    return df
+
+
+# (session id, semanticHash) → observed partition count. The partition
+# probe below costs a full plan-to-RDD translation on the driver; the
+# same (id, text) projections are probed repeatedly within one query
+# build (both streams of a contamination join, every signature lane
+# family) and across bench passes, so the count is memoized per
+# semantically-equal plan. Staleness is possible only if the underlying
+# files change within a session — a performance-only miss (spread is
+# never result-bearing), accepted per the r13 advice.
+SPREAD_PARTS_MEMO: dict[tuple[int, int], int] = {}
+
+
+def spread_input(df: DataFrame, id_col: str) -> DataFrame:
+    """Fix severe input under-parallelism before per-row-expensive work
+    (guide §2.5 "input skew": one unsplittable file — a single-row-group
+    parquet, a gzip — plans as ONE scan task, so the whole tokenize/
+    hash/decode pipeline above it runs on one core while the rest of
+    the cluster idles). When the frame has fewer than min(4,
+    defaultParallelism) partitions, hash-repartition it by ``id_col``
+    to the cluster's parallelism — deterministic placement (no
+    round-robin, so no sort-before-repartition pass and no retry
+    hazard), and the shuffled bytes are the raw input read once, paid
+    only in the degenerate case. Any healthy scan (or any post-shuffle
+    frame) passes through untouched, so at production scale this is a
+    no-op by construction. The partition-count probe (an RDD
+    translation) is memoized per semantically-equal plan — see
+    ``SPREAD_PARTS_MEMO``."""
+    sc = df.sparkSession.sparkContext
+    target = max(sc.defaultParallelism, 1)
+    try:
+        key = (id(df.sparkSession), df.semanticHash())
+    except Exception:  # pragma: no cover - semanticHash is stable API
+        key = None
+    parts = SPREAD_PARTS_MEMO.get(key) if key is not None else None
+    if parts is None:
+        parts = df.rdd.getNumPartitions()
+        if key is not None:
+            SPREAD_PARTS_MEMO[key] = parts
+    if parts >= min(4, target):
+        return df
+    return df.repartition(target, F.col(id_col))
+
+
+def unpersist_intermediates() -> int:
+    """Release every internal cache created by :func:`scoped_persist`
+    in this process; returns the number released. Safe to call at any
+    point where no previously-returned pipeline DataFrame will be
+    re-evaluated (already-collected results are unaffected)."""
+    n = 0
+    while LIVE_CACHES:
+        df = LIVE_CACHES.pop()
+        try:
+            df.unpersist()
+            n += 1
+        except Exception:
+            pass
+    return n
+
+
+def release(spark: SparkSession) -> None:
+    """Drop every cache before the next query: the scoped persists,
+    then anything else cached in ``spark``."""
+    unpersist_intermediates()
+    spark.catalog.clearCache()
+
+
+class dedup_scope:
+    """Automatic cache scoping for pipelines that persist intermediates::
+
+        with dedup_scope():
+            result = minhash_lsh_dedup(docs).collect()
+
+    On exit, every internal persist created INSIDE the scope is
+    released — a long-lived session running many pipelines no longer
+    accretes cached partitions unless it forgets a manual
+    :func:`unpersist_intermediates` call. Scopes nest: an inner scope
+    releases only its own caches. Collect (or write) the results before
+    the scope closes — a still-lazy DataFrame that leaves the scope will
+    recompute its severed cache on evaluation (correct, just slower)."""
+
+    def __enter__(self) -> "dedup_scope":
+        self._start = len(LIVE_CACHES)
+        return self
+
+    def __exit__(self, exc_type, exc, tb) -> None:
+        released = LIVE_CACHES[self._start:]
+        del LIVE_CACHES[self._start:]
+        for df in released:
+            try:
+                df.unpersist()
+            except Exception:
+                pass
+
+
+_LOGICAL_RELATION = "org.apache.spark.sql.execution.datasources.LogicalRelation"
+
+
+def plan_bytes(df: DataFrame) -> int:
+    """Bytes of file-backed input under ``df``: the sum of ``sizeInBytes``
+    over the optimized plan's ``LogicalRelation`` leaves, every other
+    leaf counting 0. The sizes come from the file index the scan already
+    listed, so this runs no job and stats no file, on any Hadoop
+    filesystem. Leaves only: Catalyst's whole-plan estimate scales
+    projections by default type widths, and an RDD-backed leaf reports
+    Long.MaxValue, so the plan-root figure would not be an input size."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    total = 0
+    it = leaves.iterator()
+    while it.hasNext():
+        leaf = it.next()
+        if leaf.getClass().getName() == _LOGICAL_RELATION:
+            total += int(leaf.stats().sizeInBytes())
+    return total

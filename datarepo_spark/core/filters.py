@@ -127,12 +127,3 @@ def exactly_one_equality_filter(
     if len(values) != 1:
         return None
     return values.pop()
-
-
-def partition_conjunction(
-    conj: list[Filter], column: str
-) -> tuple[list[Filter], list[Filter]]:
-    """Split one AND-list into (filters on ``column``, the rest)."""
-    on = [f for f in conj if f.column == column]
-    rest = [f for f in conj if f.column != column]
-    return on, rest

@@ -30,125 +30,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-
-def _parallelism(df: DataFrame) -> int:
-    """Partition count for small persisted intermediates: the lesser of
-    the cluster's core count and the session's shuffle-partition setting.
-    Either alone can be badly oversized for a tiny cached DataFrame (a
-    200-shuffle-partition session pins 200 near-empty cached partitions;
-    a many-core driver pins one per core under a deliberately small
-    shuffle setting) — and AQE's partition coalescing can't reach inside
-    cached plans, so every downstream stage would run that many tasks."""
-    sess = df.sparkSession
-    cores = sess.sparkContext.defaultParallelism
-    try:
-        shuffle = int(sess.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        shuffle = cores
-    return max(1, min(cores, shuffle))
-
-
-# Internal persists awaiting release: dedup/similarity pipelines cache
-# small intermediates (candidate buckets, candidate signatures) that both
-# sides of a self-join consume — the cache must outlive the *caller's*
-# consumption of the returned (lazy) DataFrame, so the functions cannot
-# unpersist before returning. Long-lived sessions running many pipelines
-# should call :func:`unpersist_intermediates` between pipelines (or
-# ``spark.catalog.clearCache()``); otherwise each pipeline run leaves its
-# small caches pinned until session end.
-_LIVE_CACHES: list[DataFrame] = []
-
-
-def _scoped_persist(df: DataFrame) -> DataFrame:
-    """persist() + register for later release via unpersist_intermediates."""
-    _LIVE_CACHES.append(df.persist())
-    return df
-
-
-# (session id, semanticHash) → observed partition count. The partition
-# probe below costs a full plan-to-RDD translation on the driver; the
-# same (id, text) projections are probed repeatedly within one query
-# build (both streams of a contamination join, every signature lane
-# family) and across bench passes, so the count is memoized per
-# semantically-equal plan. Staleness is possible only if the underlying
-# files change within a session — a performance-only miss (spread is
-# never result-bearing), accepted per the r13 advice.
-_SPREAD_PARTS_MEMO: dict[tuple[int, int], int] = {}
-
-
-def spread_input(df: DataFrame, id_col: str) -> DataFrame:
-    """Fix severe input under-parallelism before per-row-expensive work
-    (guide §2.5 "input skew": one unsplittable file — a single-row-group
-    parquet, a gzip — plans as ONE scan task, so the whole tokenize/
-    hash/decode pipeline above it runs on one core while the rest of
-    the cluster idles). When the frame has fewer than min(4,
-    defaultParallelism) partitions, hash-repartition it by ``id_col``
-    to the cluster's parallelism — deterministic placement (no
-    round-robin, so no sort-before-repartition pass and no retry
-    hazard), and the shuffled bytes are the raw input read once, paid
-    only in the degenerate case. Any healthy scan (or any post-shuffle
-    frame) passes through untouched, so at production scale this is a
-    no-op by construction. The partition-count probe (an RDD
-    translation) is memoized per semantically-equal plan — see
-    ``_SPREAD_PARTS_MEMO``."""
-    sc = df.sparkSession.sparkContext
-    target = max(sc.defaultParallelism, 1)
-    try:
-        key = (id(df.sparkSession), df.semanticHash())
-    except Exception:  # pragma: no cover - semanticHash is stable API
-        key = None
-    parts = _SPREAD_PARTS_MEMO.get(key) if key is not None else None
-    if parts is None:
-        parts = df.rdd.getNumPartitions()
-        if key is not None:
-            _SPREAD_PARTS_MEMO[key] = parts
-    if parts >= min(4, target):
-        return df
-    return df.repartition(target, F.col(id_col))
-
-
-def unpersist_intermediates() -> int:
-    """Release every internal cache created by dedup/similarity pipelines
-    in this process; returns the number released. Safe to call at any
-    point where no previously-returned pipeline DataFrame will be
-    re-evaluated (already-collected results are unaffected)."""
-    n = 0
-    while _LIVE_CACHES:
-        df = _LIVE_CACHES.pop()
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:
-            pass
-    return n
-
-
-class dedup_scope:
-    """Automatic cache scoping for dedup/similarity pipelines::
-
-        with dedup_scope():
-            result = minhash_lsh_dedup(docs).collect()
-
-    On exit, every internal persist created INSIDE the scope is
-    released — a long-lived session running many pipelines no longer
-    accretes cached partitions unless it forgets a manual
-    :func:`unpersist_intermediates` call. Scopes nest: an inner scope
-    releases only its own caches. Collect (or write) the results before
-    the scope closes — a still-lazy DataFrame that leaves the scope will
-    recompute its severed cache on evaluation (correct, just slower)."""
-
-    def __enter__(self) -> "dedup_scope":
-        self._start = len(_LIVE_CACHES)
-        return self
-
-    def __exit__(self, exc_type, exc, tb) -> None:
-        released = _LIVE_CACHES[self._start:]
-        del _LIVE_CACHES[self._start:]
-        for df in released:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
+from ..core.exec import (  # noqa: F401  (unpersist_intermediates: re-export)
+    parallelism,
+    scoped_persist,
+    spread_input,
+    unpersist_intermediates,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -323,38 +210,6 @@ def shingle_rows(
     ).otherwise(F.concat_ws(" ", "__toks"))
     out = idx.select(F.col(id_col), gram.alias("gram"))
     return out.distinct() if distinct else out
-
-
-def minhash_signature(shingle_col: Column, num_hashes: int = 64) -> Column:
-    """MinHash signature: for seed i, min over shingles of xxhash64(s, i).
-    64 independent 64-bit hash mins ≈ permutation mins (Broder)."""
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(shingle_col, lambda s: F.xxhash64(s, F.lit(i)))
-            )
-            for i in range(num_hashes)
-        ]
-    )
-
-
-def lsh_bands(sig_col: Column, bands: int = 16, rows_per_band: int = 4) -> Column:
-    """Split the signature into ``bands`` buckets of ``rows_per_band`` and
-    hash each band → array of (band_id, bucket_hash) structs."""
-    return F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(
-                    *[
-                        F.element_at(sig_col, b * rows_per_band + r + 1)
-                        for r in range(rows_per_band)
-                    ]
-                ).alias("bucket"),
-            )
-            for b in range(bands)
-        ]
-    )
 
 
 def minhash_doc_bands(
@@ -581,7 +436,7 @@ def containment_pairs(
     in head-gram document frequency — band it behind MinHash-LSH
     (:func:`minhash_lsh_dedup_pairs` geometry) and use this on the
     candidate pairs, exactly like the Jaccard pipeline does."""
-    g = _scoped_persist(
+    g = scoped_persist(
         shingle_rows(df, text_col, id_col, n=n, distinct=True)
     )
     sizes = g.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
@@ -622,10 +477,10 @@ def minhash_lsh_dedup_pairs(
     # verification join; without a persist the whole signature pipeline
     # (the dominant cost) re-executes once per consumer. The cache is
     # O(candidate pairs) — two longs per row, ≪ corpus.
-    cands = _scoped_persist(
+    cands = scoped_persist(
         minhash_lsh_candidates(
             df, text_col, id_col, n, num_hashes, bands
-        ).coalesce(_parallelism(df))
+        ).coalesce(parallelism(df))
     )
     # Shingle sets are only needed for CANDIDATE docs — semi-join first.
     # (LSH typically leaves <<1% of the corpus as candidates; computing
@@ -640,14 +495,14 @@ def minhash_lsh_dedup_pairs(
     # duplication — AQE broadcast conversion defeats exchange reuse).
     # Candidates are <<1% of the corpus, so this is a small cache
     # (coalesced: AQE can't shrink partition counts inside cached plans).
-    sh = _scoped_persist(
+    sh = scoped_persist(
         with_shingles(
             df.join(cand_ids, id_col, "left_semi"),
             text_col,
             id_col,
             n,
             out="sh",
-        ).coalesce(_parallelism(df))
+        ).coalesce(parallelism(df))
     )
     return (
         cands.join(
@@ -1034,10 +889,10 @@ def semantic_dedup(
     # counts aggregate and the blocked pair generation — persist it once
     # (registered for release via unpersist_intermediates/dedup_scope)
     # or the most expensive stage executes twice
-    assigned = _scoped_persist(
+    assigned = scoped_persist(
         index.assign(
             df, vec_col=vec_col, id_col=id_col, nprobe=nprobe
-        ).coalesce(_parallelism(df))
+        ).coalesce(parallelism(df))
     )
 
     # Sub-block oversized cells: nb per cell from a k-row broadcast of
@@ -1445,11 +1300,11 @@ def minhash_lsh_cross_pairs(
     )
     if broadcast_right:
         rb = F.broadcast(rb)
-    cands = _scoped_persist(
+    cands = scoped_persist(
         lb.join(rb, ["band", "bucket"])
         .select("left_id", "right_id")
         .distinct()
-        .coalesce(_parallelism(left))
+        .coalesce(parallelism(left))
     )
     lsh = with_shingles(
         left.join(

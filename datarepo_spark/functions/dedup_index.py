@@ -46,13 +46,8 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .dedup import (
-    _parallelism,
-    _scoped_persist,
-    jaccard,
-    minhash_doc_bands,
-    with_shingles,
-)
+from ..core.exec import parallelism, scoped_persist
+from .dedup import jaccard, minhash_doc_bands, with_shingles
 
 _META_REL = os.path.join("_dedup_index", "meta.json")
 
@@ -132,10 +127,10 @@ def build_dedup_index(
     from ..tables.delta_writer import write_delta
 
     os.makedirs(uri.rstrip("/"), exist_ok=True)
-    banded = _scoped_persist(
+    banded = scoped_persist(
         minhash_doc_bands(
             df, text_col, id_col, n, num_hashes, bands, with_sig=True
-        ).coalesce(_parallelism(df))
+        ).coalesce(parallelism(df))
     )
     # Cluster bucket rows by their partition value before the
     # partitioned write (guide §6 small files / §3.3 write
@@ -186,7 +181,7 @@ def append_to_dedup_index(
     from ..tables.delta_writer import write_delta
 
     meta = _load_meta(uri)
-    banded = _scoped_persist(
+    banded = scoped_persist(
         minhash_doc_bands(
             df,
             meta["text_col"],
@@ -195,7 +190,7 @@ def append_to_dedup_index(
             meta["num_hashes"],
             meta["bands"],
             with_sig=True,
-        ).coalesce(_parallelism(df))
+        ).coalesce(parallelism(df))
     )
     txn = (
         {"txn_app_id": txn_app_id, "txn_version": txn_version}
@@ -274,7 +269,7 @@ def dedup_against_index(
         )
     meta = _load_meta(uri)
     id_col, text_col = meta["id_col"], meta["text_col"]
-    banded = _scoped_persist(
+    banded = scoped_persist(
         minhash_doc_bands(
             batch,
             text_col,
@@ -283,7 +278,7 @@ def dedup_against_index(
             meta["num_hashes"],
             meta["bands"],
             with_sig=(verify == "estimate"),
-        ).coalesce(_parallelism(batch))
+        ).coalesce(parallelism(batch))
     )
     index_buckets = DeltalakeTable("buckets", os.path.join(uri, "buckets"))(
         spark=spark
@@ -353,7 +348,7 @@ def dedup_against_index(
         )
         return est.filter(F.col("jaccard") >= threshold)
 
-    cands = _scoped_persist(cands.coalesce(_parallelism(batch)))
+    cands = scoped_persist(cands.coalesce(parallelism(batch)))
     # corpus text for CANDIDATE ids only (<<1% of the corpus under LSH)
     corpus_ids = cands.select(F.col("corpus_id").alias(id_col)).distinct()
     sh_corpus = with_shingles(

@@ -84,7 +84,7 @@ def _pin_keyed(
       lineage and materializes it once — but a checkpointed RDD scan
       reports UnknownPartitioning (measured on Spark 4.1 with AQE), so
       every iteration's join would still exchange+sort the edge side.
-    - a ``_scoped_persist`` of ``repartition(key) + sortWithinPartitions``
+    - a ``scoped_persist`` of ``repartition(key) + sortWithinPartitions``
       ON TOP of the pin: cached-plan output partitioning/ordering IS
       visible to EnsureRequirements, so the per-iteration sort-merge
       join sees a satisfied distribution on the big side and the
@@ -92,18 +92,18 @@ def _pin_keyed(
       ITERATION. If the cache is ever evicted, the rebuild re-reads the
       pinned leaf — never the generation subtree.
 
-    Partition count comes from :func:`dedup._parallelism` (min(cores,
+    Partition count comes from :func:`core.exec.parallelism` (min(cores,
     shuffle setting)) so the node-sized probe side exchanges to the
     same count. Known trade-off: a hash partitioning fixed at pin time
     cannot be skew-split by AQE per iteration — on hub-heavy graphs the
     hot partition persists; callers' degree-based orientations or
     salting remain the remedy (edge lists here are near-uniform hash
     keys)."""
-    from .dedup import _parallelism, _scoped_persist
+    from ..core.exec import parallelism, scoped_persist
 
     pinned = _pin(df, checkpoint_dir)
-    return _scoped_persist(
-        pinned.repartition(_parallelism(df), F.col(key))
+    return scoped_persist(
+        pinned.repartition(parallelism(df), F.col(key))
         .sortWithinPartitions(key)
     )
 
@@ -439,15 +439,15 @@ def _canonical_undirected(
     edges: DataFrame, src: str, dst: str
 ) -> tuple[DataFrame, DataFrame]:
     """Canonical undirected edge list + full degrees, both
-    ``_scoped_persist``-pinned: every triangle-family consumer re-reads
+    ``scoped_persist``-pinned: every triangle-family consumer re-reads
     each of them several times (orientation joins, adjacency builds,
     degree summaries), and both are small relative to the edge
     GENERATION subtree they sever (e is O(m), deg is node-sized).
     Returns (e, deg) with e = (x, y), x < y, distinct, and
     deg = (node, d) full undirected degrees."""
-    from .dedup import _scoped_persist
+    from ..core.exec import scoped_persist
 
-    e = _scoped_persist(
+    e = scoped_persist(
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("x"),
             F.greatest(F.col(src), F.col(dst)).alias("y"),
@@ -455,7 +455,7 @@ def _canonical_undirected(
         .filter(F.col("x") != F.col("y"))
         .distinct()
     )
-    deg = _scoped_persist(
+    deg = scoped_persist(
         e.select(F.col("x").alias("node"))
         .unionAll(e.select(F.col("y").alias("node")))
         .groupBy("node")
@@ -477,13 +477,13 @@ def _oriented_adjacency(
     (s, t, nbrs_s, nbrs_t) with null-free (coalesced-empty) neighbor
     arrays — ``array_intersect(nbrs_s, nbrs_t)`` enumerates exactly
     the triangles whose orientation-minimum vertex is s."""
-    from .dedup import _scoped_persist
+    from ..core.exec import scoped_persist
 
     dx = deg.select(F.col("node").alias("x"), F.col("d").alias("dx"))
     dy = deg.select(F.col("node").alias("y"), F.col("d").alias("dy"))
     ed = e.join(dx, "x").join(dy, "y")
     # orient from lower (deg, id) to higher — a DAG, out-deg ≤ √(2m)
-    oriented = _scoped_persist(
+    oriented = scoped_persist(
         ed.select(
             F.when(
                 (F.col("dx") < F.col("dy"))
@@ -523,12 +523,22 @@ def _oriented_adjacency(
     return with_nbrs
 
 
-def _bitmap_edge_triangles(
-    e: DataFrame,
-    deg: DataFrame,
-    n: int,
-    broadcast_adjacency_bytes: int,
-) -> DataFrame:
+def _bitmap_gate(
+    n: int, m: int, dense_threshold: float, broadcast_adjacency_bytes: int
+) -> bool:
+    """Whether the triangle family takes :func:`_bitmap_edge_triangles`:
+    edge density 2m/(n(n-1)) reaches ``dense_threshold`` AND the
+    n·(⌈n/64⌉·8+24)-byte bitmap table fits ``broadcast_adjacency_bytes``.
+    Past that budget a shuffle join would ship ⌈n/64⌉ words per edge
+    row, so such graphs keep the oriented form."""
+    return (
+        n >= 3
+        and 2 * m >= dense_threshold * n * (n - 1)
+        and n * ((n + 63) // 64 * 8 + 24) <= broadcast_adjacency_bytes
+    )
+
+
+def _bitmap_edge_triangles(e: DataFrame, deg: DataFrame, n: int) -> DataFrame:
     """Per-edge triangle counts on a DENSE graph via neighborhood
     BITMAPS: (x, y, __c) for every canonical edge, where __c =
     |N(x) ∩ N(y)| over full neighborhoods — the number of triangles
@@ -540,12 +550,13 @@ def _bitmap_edge_triangles(
     so SUM of the per-bit words equals their OR), and the per-edge
     count is zip_with + bit_count + aggregate — all JVM built-ins,
     integer-exact, no Python boundary. The bitmap table is n rows ×
-    ⌈n/64⌉ longs = n²/8 bytes total — broadcast when it fits (at any
-    density ≥ 1/32 it is SMALLER than the equivalent long-array
-    adjacency), shuffle-joined otherwise."""
+    ⌈n/64⌉ longs = n²/8 bytes total and is always broadcast:
+    :func:`_bitmap_gate` admits only graphs whose table fits the
+    budget (at any density ≥ 1/32 it is SMALLER than the equivalent
+    long-array adjacency)."""
     from pyspark.sql.window import Window
 
-    from .dedup import _scoped_persist
+    from ..core.exec import scoped_persist
 
     nwords = (n + 63) // 64
     rank = deg.select(
@@ -566,7 +577,7 @@ def _bitmap_edge_triangles(
     ).agg(
         F.sum(F.expr("shiftleft(1L, CAST(__r % 64 AS INT))")).alias("__v")
     )
-    bm = _scoped_persist(
+    bm = scoped_persist(
         words.groupBy("node")
         .agg(
             F.map_from_entries(
@@ -581,8 +592,7 @@ def _bitmap_edge_triangles(
             ).alias("bm"),
         )
     )
-    if n * (nwords * 8 + 24) <= broadcast_adjacency_bytes:
-        bm = F.broadcast(bm)
+    bm = F.broadcast(bm)
     bm_x = bm.select(F.col("node").alias("x"), F.col("bm").alias("bx"))
     bm_y = bm.select(F.col("node").alias("y"), F.col("bm").alias("by"))
     return (
@@ -634,7 +644,7 @@ def local_triangle_counts(
     struct-array allocation beat the saved pass; the two-branch form
     measured 7.4 s.) Identical per-node totals: each triangle still
     credits its three vertices exactly once. Both outputs are
-    ``_scoped_persist``-pinned: they are node-sized (≤ |V| rows), and
+    ``scoped_persist``-pinned: they are node-sized (≤ |V| rows), and
     callers fan out over each more than once (summary + per-node
     join), which would otherwise re-execute the enumeration per
     reference.
@@ -669,16 +679,14 @@ def local_triangle_counts(
     Measured at sf0.1 (1000 nodes, ρ = 0.87, 1.24×10⁸ triangles):
     dense-bitmap 3.0-3.8 s vs oriented-explode 6.2-9.5 s in the same
     interleaved session, bit-identical per-node map."""
-    from .dedup import _scoped_persist
+    from ..core.exec import scoped_persist
 
     e, deg = _canonical_undirected(edges, src, dst)
     m = e.count()
     n = deg.count()
-    if n >= 3 and 2 * m >= dense_threshold * n * (n - 1):
-        c = _bitmap_edge_triangles(
-            e, deg, n, broadcast_adjacency_bytes
-        )
-        per_node = _scoped_persist(
+    if _bitmap_gate(n, m, dense_threshold, broadcast_adjacency_bytes):
+        c = _bitmap_edge_triangles(e, deg, n)
+        per_node = scoped_persist(
             c.select(F.col("x").alias("node"), "__c")
             .unionAll(c.select(F.col("y").alias("node"), "__c"))
             .groupBy("node")
@@ -710,7 +718,7 @@ def local_triangle_counts(
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("__n2"))
     )
-    per_node = _scoped_persist(
+    per_node = scoped_persist(
         st.join(wside, "node", "full")
         .select(
             "node",
@@ -768,9 +776,11 @@ def triangle_count(
     intersections. The single BroadcastNestedLoopJoin in the plan is
     the deliberate 1-row × 1-row scalar cross at the end.
 
-    DENSE graphs (edge density ≥ ``dense_threshold``) take the
-    bitmap counting pass instead (:func:`_bitmap_edge_triangles`, r14
-    — see :func:`local_triangle_counts` for the gate's cost argument):
+    DENSE graphs (edge density ≥ ``dense_threshold`` and a bitmap
+    table within ``broadcast_adjacency_bytes``, :func:`_bitmap_gate`)
+    take the bitmap counting pass instead
+    (:func:`_bitmap_edge_triangles`, r14 — see
+    :func:`local_triangle_counts` for the gate's cost argument):
     Σ per-edge |N(x) ∩ N(y)| counts every triangle exactly 3 times
     (once per containing edge), so n_triangles = Σ __c DIV 3,
     integer-exact.
@@ -778,10 +788,8 @@ def triangle_count(
     e, deg = _canonical_undirected(edges, src, dst)
     m = e.count()
     n = deg.count()
-    if n >= 3 and 2 * m >= dense_threshold * n * (n - 1):
-        tri = _bitmap_edge_triangles(
-            e, deg, n, broadcast_adjacency_bytes
-        ).agg(
+    if _bitmap_gate(n, m, dense_threshold, broadcast_adjacency_bytes):
+        tri = _bitmap_edge_triangles(e, deg, n).agg(
             F.coalesce(
                 F.expr("CAST(SUM(__c) DIV 3 AS BIGINT)"), F.lit(0)
             )

@@ -41,7 +41,7 @@ def tfidf_keywords(
     Returns (id, token, score) with ties broken on the token.
     Input spread_input-routed: the tokenize+explode+tf stage otherwise
     runs on a single-file scan's one task (r13)."""
-    from .dedup import spread_input
+    from ..core.exec import spread_input
 
     df = spread_input(df.select(F.col(id_col), F.col(text_col)), id_col)
     toks = df.select(
@@ -101,7 +101,7 @@ def bm25_search(
     the result is a global top-k (TakeOrdered), never a full sort.
     Input spread_input-routed (three tokenizing corpus scans — all
     single-task on a one-file scan otherwise; r13)."""
-    from .dedup import spread_input
+    from ..core.exec import spread_input
 
     df = spread_input(df.select(F.col(id_col), F.col(text_col)), id_col)
     qtoks = sorted(set(query_tokens))

@@ -296,7 +296,7 @@ def token_budget_select(
     """
     if budget < 0:
         raise ValueError(f"budget must be >= 0, got {budget}")
-    from .dedup import _scoped_persist
+    from ..core.exec import scoped_persist
 
     # Persist the narrow (id, score, tokens) projection: the plan below
     # reads it THREE times (bucket-mass aggregate, whole-bucket
@@ -306,7 +306,7 @@ def token_budget_select(
     # guide §5; the analogous persist in nucleus_select measured
     # curate_v3 5.1 s → 2.0 s at sf0.1). Scope-released like every
     # dedup-pipeline intermediate.
-    base = _scoped_persist(
+    base = scoped_persist(
         df.select(
             F.col(id_col),
             F.col(score_col).alias("__score"),
@@ -439,7 +439,7 @@ def nucleus_select(
             f"first (e.g. round(score * 1e6) cast to long)"
         )
     groups = [F.col(g) for g in group_cols]
-    from .dedup import _scoped_persist
+    from ..core.exec import scoped_persist
 
     # Persist the narrow (id, groups, score) projection: the two-level
     # plan reads it FOUR times (group envelope, bucket-mass aggregate,
@@ -451,7 +451,7 @@ def nucleus_select(
     # two-level machinery was re-running the scoring job per reference
     # (r14, guide §5). Scope-released like every dedup-pipeline
     # intermediate.
-    base = _scoped_persist(
+    base = scoped_persist(
         df.select(
             F.col(id_col),
             *groups,
@@ -462,7 +462,7 @@ def nucleus_select(
     # negative-mass validation below materializes it once and the
     # broadcast join reuses the cache — validation costs no second
     # corpus pass
-    env = _scoped_persist(
+    env = scoped_persist(
         base.groupBy(*group_cols).agg(
             F.min("__s").alias("__lo"),
             F.max("__s").alias("__hi"),
@@ -614,7 +614,7 @@ def ntile_shards(
     """
     if n_shards < 1:
         raise ValueError(f"n_shards must be >= 1, got {n_shards}")
-    from .dedup import _scoped_persist
+    from ..core.exec import scoped_persist
 
     base = df.select(F.col(id_col), F.col(score_col).alias("__s"))
     env = base.agg(
@@ -648,7 +648,7 @@ def ntile_shards(
             )
         )
     )
-    bucketed = _scoped_persist(
+    bucketed = scoped_persist(
         b.withColumn("__b", bucket).select(id_col, "__s", "__b", "__n")
     )
     counts = bucketed.groupBy("__b").agg(F.count(F.lit(1)).alias("__c"))

@@ -243,14 +243,14 @@ def mmr_rerank(
     ties break by id — bit-reproducible against the SQL recursive-CTE
     spelling.
     """
-    from .dedup import _scoped_persist
+    from ..core.exec import scoped_persist
 
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     # persisted: the pool feeds BOTH sides of the pair self-join plus
     # the candidate collect — unpersisted, the corpus TakeOrdered scan
     # would re-execute per consumer (broadcast conversion breaks
     # ReusedExchange, SCALE.md r2)
-    pool_df = _scoped_persist(
+    pool_df = scoped_persist(
         df.select(
             F.col(id_col),
             F.col(vec_col).alias("__v"),

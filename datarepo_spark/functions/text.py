@@ -136,19 +136,6 @@ def fingerprint(text: Column) -> Column:
     )
 
 
-def analyze_documents(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """One-pass text analysis: stats + quality + language + fingerprint."""
-    c = F.col(text_col)
-    return df.select(
-        "*",
-        token_count(c, WS_TOKEN_RE).alias("n_tokens_ws"),
-        token_count(c, BPE_TOKEN_RE).alias("n_tokens_bpe"),
-        quality_score(c).alias("quality"),
-        detect_language(c).alias("lang_detected"),
-        fingerprint(c).alias("fingerprint"),
-    )
-
-
 POSITIVE_RE = (
     r"\b(good|great|fast|best|excellent|love|happy|win|easy|clean)\b"
 )
@@ -373,7 +360,8 @@ def repetition_stats(
 # distinct pairs instead of occurrences (a 2-5x row reduction on web
 # text) and its per-pair tf×logp product is decimal-exact, so the fold
 # is bit-identical to the instance sum. The gate is the scanned corpus
-# byte size: a ~1 GiB tokenized web corpus has on the order of 10^6-10^7
+# byte size (``core.exec.plan_bytes``, so it holds on any filesystem): a
+# ~1 GiB tokenized web corpus has on the order of 10^6-10^7
 # distinct types ≈ 50-150 MB as a hashed relation — an order of
 # magnitude past the 10 MB auto-broadcast default. Overridable per
 # deployment via SPARK_GRAFT_TF_GRAIN_BYTES (0 forces tf-grain — also
@@ -384,16 +372,11 @@ _TF_GRAIN_BYTES_DEFAULT = 1 << 30
 def _use_tf_grain(df: DataFrame) -> bool:
     import os
 
+    from ..core.exec import plan_bytes
+
     raw = os.environ.get("SPARK_GRAFT_TF_GRAIN_BYTES")
     threshold = int(raw) if raw else _TF_GRAIN_BYTES_DEFAULT
-    try:
-        total = 0
-        for uri in df.inputFiles():
-            path = uri[len("file:"):] if uri.startswith("file:") else uri
-            total += os.path.getsize(path)
-        return total >= threshold
-    except Exception:
-        return False
+    return plan_bytes(df) >= threshold
 
 
 def unigram_perplexity(
@@ -430,7 +413,8 @@ def unigram_perplexity(
     (the r13 probe measured the tf form slower there), (doc, token,
     tf) grain once the corpus outgrows the broadcast regime, with a
     decimal-exact tf×logp product keeping the fold bit-identical."""
-    from .dedup import spread_input, tokens_of
+    from ..core.exec import spread_input
+    from .dedup import tokens_of
 
     base = spread_input(df.select(F.col(id_col), F.col(text_col)), id_col)
     toks = base.select(
@@ -562,7 +546,8 @@ def bigram_perplexity(
     Output: (id, n_bigrams, perplexity rounded to 4)."""
     from pyspark.sql import Window
 
-    from .dedup import spread_input, tokens_of
+    from ..core.exec import spread_input
+    from .dedup import tokens_of
 
     base = spread_input(df.select(F.col(id_col), F.col(text_col)), id_col)
     toks_arr = base.select(
@@ -696,10 +681,11 @@ def boilerplate_fraction(
     """
     from pyspark.sql import functions as F
 
-    from .dedup import _scoped_persist, shingle_rows
+    from ..core.exec import scoped_persist
+    from .dedup import shingle_rows
 
     if grams is None:
-        grams = _scoped_persist(
+        grams = scoped_persist(
             # spread=False: the distinct IS the first exchange; the
             # pre-exchange tokenize is cheap (no per-gram hashing), so
             # the degenerate-scan repartition measured a consistent
@@ -762,10 +748,11 @@ def novelty_score(
     """
     from pyspark.sql import functions as F
 
-    from .dedup import _scoped_persist, shingle_rows
+    from ..core.exec import scoped_persist
+    from .dedup import shingle_rows
 
     if grams is None:
-        grams = _scoped_persist(
+        grams = scoped_persist(
             # spread=False: the distinct IS the first exchange; the
             # pre-exchange tokenize is cheap (no per-gram hashing), so
             # the degenerate-scan repartition measured a consistent
@@ -871,10 +858,11 @@ def gram_set_scores(
     novel_grams, novelty)."""
     from pyspark.sql import functions as F
 
-    from .dedup import _scoped_persist, shingle_rows
+    from ..core.exec import scoped_persist
+    from .dedup import shingle_rows
 
     if grams is None:
-        grams = _scoped_persist(
+        grams = scoped_persist(
             # spread=False: the distinct IS the first exchange; the
             # pre-exchange tokenize is cheap (no per-gram hashing), so
             # the degenerate-scan repartition measured a consistent

@@ -48,11 +48,11 @@ Correctness requirements (asserted by the property tests):
   (``eqNullSafe`` groups nulls, ``<``/``>`` already implement the
   NaN-largest total order).
 
-The input is persisted (``_scoped_persist``) purely as a PERFORMANCE
+The input is persisted (``scoped_persist``) purely as a PERFORMANCE
 measure — the count/sample jobs and both downstream branches reread
 it. Removing the persist recomputes lineage but cannot change any
 ``__pid``: the split keys are literals (proved by the property test
-that monkeypatches ``_scoped_persist`` to identity).
+that monkeypatches ``scoped_persist`` to identity).
 
 Plan invariant (pinned by tests/test_plans.py): every ``Window`` node
 in a two-pass plan mentions ``__pid`` — either as its partition spec
@@ -70,7 +70,7 @@ from typing import Sequence, Union
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import _scoped_persist
+from ..core.exec import scoped_persist
 
 OrderSpec = Union[str, Column]
 
@@ -259,7 +259,7 @@ def _range_tagged(
     downstream branches reread the input); correctness never depends
     on it — the split keys are plan literals (module docstring)."""
     specs = [_parse_order(o) for o in order_by]
-    df = _scoped_persist(df)
+    df = scoped_persist(df)
     bounds = _range_boundaries(df, specs, n)
     return df.withColumn("__pid", _pid_expr(specs, bounds))
 

@@ -1907,14 +1907,14 @@ def profile_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     "form, broadcast self-join of the per-source stats frame",
 )
 def profile_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.dedup import _scoped_persist
+    from ..core.exec import scoped_persist
 
     docs = load(spark, sf_dir, "documents")
     x = F.col("n_chars").cast("long")
     # persist the |sources|-row stats frame: both sides of the pair
     # join read it, and without the pin each side would re-run the
     # full corpus aggregate (two 100 TB scans for a 20-row frame)
-    s = _scoped_persist(
+    s = scoped_persist(
         docs.groupBy("source").agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(x).cast("long").alias("sx"),
@@ -2161,13 +2161,13 @@ def events_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
 def events_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from ..functions.dedup import _scoped_persist
+    from ..core.exec import scoped_persist
 
     e = load(spark, sf_dir, "events")
     # persist the hour-grain frame: both the per-type totals and the
     # deviation join read it — unpinned, the full-corpus hourly
     # aggregate would execute twice
-    hr = _scoped_persist(
+    hr = scoped_persist(
         e.groupBy(
             "event_type", F.date_trunc("hour", F.col("ts")).alias("h")
         ).agg(
@@ -2532,9 +2532,9 @@ def events_rolling_distinct_users(
     hu = e.select(
         F.date_trunc("hour", F.col("ts")).alias("h"), "user_id"
     ).distinct()
-    from ..functions.dedup import _scoped_persist
+    from ..core.exec import scoped_persist
 
-    hu = _scoped_persist(hu)
+    hu = scoped_persist(hu)
     expanded = hu.select(
         F.explode(
             F.transform(
@@ -2614,10 +2614,10 @@ def events_rolling_distinct_users(
     "broadcast back, exact integer counts",
 )
 def agg_frequent_itemsets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.dedup import _scoped_persist
+    from ..core.exec import scoped_persist
 
     li = load(spark, sf_dir, "lineitem")
-    basket = _scoped_persist(
+    basket = scoped_persist(
         li.select("l_orderkey", "l_partkey").distinct()
     )
     item = basket.groupBy("l_partkey").agg(
@@ -3174,12 +3174,12 @@ def profile_conformal_interval(
     sx, sy = F.col("sx").cast("double"), F.col("sy").cast("double")
     sxy, sxx = F.col("sxy").cast("double"), F.col("sxx").cast("double")
     b = (n * sxy - sx * sy) / (n * sxx - sx * sx)
-    from ..functions.dedup import _scoped_persist
+    from ..core.exec import scoped_persist
 
     # persist the 1-row fit: the calibration pass, the test pass, and
     # the final select all read it — unpinned, the full train-split
     # co-moment aggregate would re-execute per consumer
-    fit = _scoped_persist(
+    fit = scoped_persist(
         tr.select(
             F.col("n").alias("n_train"),
             b.alias("b"),
@@ -3188,7 +3188,7 @@ def profile_conformal_interval(
     )
     # persist the calibration residuals: consumed by the count AND the
     # quantile window (one materialization instead of two corpus reads)
-    cal = _scoped_persist(
+    cal = scoped_persist(
         u.filter((F.col("f") >= 0.6) & (F.col("f") < 0.8))
         .crossJoin(F.broadcast(fit))
         .select(

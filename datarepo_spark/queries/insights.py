@@ -858,11 +858,11 @@ def window_pareto_cumshare(spark: SparkSession, sf_dir: str) -> DataFrame:
     "top-20",
 )
 def graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.dedup import _scoped_persist
+    from ..core.exec import scoped_persist
 
     orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    base = _scoped_persist(
+    base = scoped_persist(
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .select(
             F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s")
@@ -970,11 +970,11 @@ def graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     "iterative dense-subgraph operator",
 )
 def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.dedup import _scoped_persist
+    from ..core.exec import scoped_persist
 
     orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    edges = _scoped_persist(
+    edges = scoped_persist(
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .select(
             F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s")
@@ -996,7 +996,7 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("d") >= 3)
             .select("s")
         )
-        cur = _scoped_persist(
+        cur = scoped_persist(
             cur.join(keep_c, "c", "left_semi").join(
                 keep_s, "s", "left_semi"
             )
@@ -1105,7 +1105,7 @@ def window_top_with_ties(spark: SparkSession, sf_dir: str) -> DataFrame:
     "cells, two pinned divisions",
 )
 def text_ttr_hapax(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.dedup import spread_input
+    from ..core.exec import spread_input
 
     # parallelize the tokenize + cell partial-agg past the one-task
     # single-file scan (r13; see spread_input); projected to the two
@@ -1686,9 +1686,9 @@ def events_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     sess = s.groupBy("user_id", "session_id").agg(
         F.min("ts").alias("s_start"), F.max("ts").alias("s_end")
     )
-    from ..functions.dedup import _scoped_persist
+    from ..core.exec import scoped_persist
 
-    sess = _scoped_persist(sess)
+    sess = scoped_persist(sess)
     pts = sess.select(
         F.col("s_start").alias("t"), F.lit(1).alias("d")
     ).unionByName(
@@ -1814,9 +1814,9 @@ def events_conversion_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("first_click").alias("first_click"),
         )
     )
-    from ..functions.dedup import _scoped_persist
+    from ..core.exec import scoped_persist
 
-    lat = _scoped_persist(
+    lat = scoped_persist(
         p.select(
             (
                 (
@@ -1923,10 +1923,10 @@ def events_conversion_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     "join, exact distinct counts; the activity dashboard staple",
 )
 def events_dau_wau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.dedup import _scoped_persist
+    from ..core.exec import scoped_persist
 
     e = load(spark, sf_dir, "events")
-    grid = _scoped_persist(
+    grid = scoped_persist(
         e.select(
             F.date_trunc("day", F.col("ts")).alias("d"), "user_id"
         ).distinct()
@@ -2022,10 +2022,10 @@ def events_dau_wau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
     "rates",
 )
 def events_error_rate_slo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.dedup import _scoped_persist
+    from ..core.exec import scoped_persist
 
     e = load(spark, sf_dir, "events")
-    hr = _scoped_persist(
+    hr = scoped_persist(
         e.groupBy(
             F.date_trunc("hour", F.col("ts")).alias("h")
         ).agg(
@@ -2146,10 +2146,10 @@ def profile_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # global NTILE windows were single-task sorts (verdict watch
     # item). Each score shuffles on its own order; the three join back
     # on the key (hash joins, corpus-partitioned).
-    from ..functions.dedup import _scoped_persist
+    from ..core.exec import scoped_persist
     from ..functions.twopass import distributed_ntile
 
-    cust = _scoped_persist(cust)
+    cust = scoped_persist(cust)
     r_ = distributed_ntile(
         cust.select("o_custkey", "recency_days"),
         [F.desc("recency_days"), F.asc("o_custkey")],
@@ -2213,7 +2213,6 @@ def _nb_confusion_oracle() -> str:
     its registration — ONE spelling of the NB scorer, never two copies
     to drift apart) with confusion-matrix cells and per-class
     precision/recall/F1."""
-    from . import extensions  # noqa: F401  (registers the NB scorer)
     from .registry import REGISTRY
 
     base = REGISTRY["classify_nb_language"].oracle

@@ -62,10 +62,6 @@ def _doubled_midrank_from_cells(cells: DataFrame) -> DataFrame:
     )
 
 
-def _doubled_midrank_cells(df: DataFrame, val_col: str) -> DataFrame:
-    return _doubled_midrank_from_cells(_value_cells(df, val_col))
-
-
 _SKETCH_K = 4096
 
 
@@ -674,9 +670,9 @@ def events_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    from ..functions.dedup import _scoped_persist
+    from ..core.exec import scoped_persist
 
-    cells = _scoped_persist(
+    cells = scoped_persist(
         users.groupBy(F.col("t_hours").alias("t")).agg(
             F.sum(1 - F.col("censored")).cast("long").alias("d"),
             F.sum("censored").cast("long").alias("cens"),
@@ -825,9 +821,9 @@ def events_interarrival(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.select("event_type", gap.alias("gap_us"))
         .filter(F.col("gap_us").isNotNull())
     )
-    from ..functions.dedup import _scoped_persist
+    from ..core.exec import scoped_persist
 
-    g = _scoped_persist(g)
+    g = scoped_persist(g)
     cells = g.groupBy("event_type", "gap_us").agg(
         F.count(F.lit(1)).alias("c")
     )
@@ -939,9 +935,9 @@ def events_interarrival(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
-    from ..functions.dedup import _scoped_persist
+    from ..core.exec import scoped_persist
 
-    items = _scoped_persist(
+    items = scoped_persist(
         li.select(
             F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")
         ).distinct()
@@ -1294,9 +1290,9 @@ def sample_neyman_allocation(
         F.col("l_extendedprice").alias("price"),
         (F.col("l_orderkey") * 8 + F.col("l_linenumber")).alias("rid"),
     )
-    from ..functions.dedup import _scoped_persist
+    from ..core.exec import scoped_persist
 
-    src = _scoped_persist(src)
+    src = scoped_persist(src)
     ps = (F.col("price") / 1000).cast("decimal(38,6)")
     stats = src.groupBy("flag").agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
@@ -1463,9 +1459,9 @@ def agg_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys = part.filter(F.col("p_size") > 40).select(
         F.col("p_partkey").alias("x")
     )
-    from ..functions.dedup import _scoped_persist
+    from ..core.exec import scoped_persist
 
-    keys = _scoped_persist(keys)
+    keys = scoped_persist(keys)
     bits = (
         keys.select(
             F.posexplode(
@@ -1618,9 +1614,9 @@ def agg_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_extendedprice").alias("price"),
         (F.col("l_orderkey") * 8 + F.col("l_linenumber")).alias("rid"),
     )
-    from ..functions.dedup import _scoped_persist
+    from ..core.exec import scoped_persist
 
-    src = _scoped_persist(src)
+    src = scoped_persist(src)
     mix = F.pmod(F.col("rid") * F.lit(48271), F.lit(2147483647))
     # the sketch: bottom-k by the pinned hash — per-partition heaps +
     # one bounded merge (TakeOrderedAndProject; plan-pinned), never a

@@ -145,6 +145,21 @@ def source_orc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 import contextlib
 
 
+def _largest_file_bytes(spark: SparkSession, input_path: str) -> int:
+    """Size of the largest file directly under directory ``input_path``
+    (0 when it is not a directory), listed through the Hadoop
+    FileSystem so a ``file://``, ``s3a://`` or ``hdfs://`` URI sizes
+    the same as a bare local path."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(input_path)
+    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not (fs.exists(path) and fs.getFileStatus(path).isDirectory()):
+        return 0
+    return max(
+        (st.getLen() for st in fs.listStatus(path) if st.isFile()),
+        default=0,
+    )
+
+
 def _stream_partitions(
     spark: SparkSession,
     input_path: Optional[str] = None,
@@ -173,15 +188,8 @@ def _stream_partitions(
     if override:
         return max(1, int(override))
     cores = max(spark.sparkContext.defaultParallelism, 1)
-    trigger_bytes = 0
-    if input_path and os.path.isdir(input_path):
-        sizes = [
-            e.stat().st_size
-            for e in os.scandir(input_path)
-            if e.is_file()
-        ]
-        # maxFilesPerTrigger=1 in every gate twin: one file per trigger
-        trigger_bytes = max(sizes, default=0)
+    # maxFilesPerTrigger=1 in every gate twin: one file per trigger
+    trigger_bytes = _largest_file_bytes(spark, input_path) if input_path else 0
     par = max(8, min((trigger_bytes >> 25) + 1, 4 * cores))
     if python_stateful:
         par = max(par, cores // 2)

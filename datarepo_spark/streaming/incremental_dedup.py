@@ -80,7 +80,8 @@ def _probe_duplicate_ids(
     loop started (not present in ``out_uri``) keep the estimate
     decision.
     """
-    from ..functions.dedup import _scoped_persist, jaccard, with_shingles
+    from ..core.exec import scoped_persist
+    from ..functions.dedup import jaccard, with_shingles
     from ..functions.dedup_index import dedup_against_index
     from ..tables.delta_table import DeltalakeTable
 
@@ -107,7 +108,7 @@ def _probe_duplicate_ids(
     )
     lo = max(0.0, threshold - 2.0 * sigma)
     hi = threshold + 2.0 * sigma
-    est = _scoped_persist(
+    est = scoped_persist(
         dedup_against_index(
             spark,
             batch,
@@ -200,12 +201,8 @@ def admit_novel_documents(
     avg id width in one job) and the measurement is reused by the probe
     and the winners gate — no per-stage count jobs.
     """
-    from ..functions.dedup import (
-        _scoped_persist,
-        content_key,
-        dedup_scope,
-        minhash_lsh_dedup_pairs,
-    )
+    from ..core.exec import dedup_scope, scoped_persist
+    from ..functions.dedup import content_key, minhash_lsh_dedup_pairs
     from ..functions.dedup_index import (
         _load_meta,
         _within_broadcast_budget,
@@ -237,7 +234,7 @@ def admit_novel_documents(
         survivors = batch.join(dup_ids, id_col, "left_anti")
         # within-batch exact dedup (a batch can carry its own repeats):
         # keep the min id per content key — deterministic under replay
-        keyed = _scoped_persist(
+        keyed = scoped_persist(
             survivors.withColumn("__ck", content_key(F.col(text_col)))
         )
         winners = keyed.groupBy("__ck").agg(F.min(id_col).alias(id_col))

@@ -18,7 +18,6 @@ import pytest
 
 from test_oracle_parity import TABLES, result_multiset
 
-from datarepo_spark.queries import extensions  # noqa: F401  (registers)
 from datarepo_spark.queries.registry import REGISTRY
 
 SRC_SF = "/root/testdata/sf0.001"

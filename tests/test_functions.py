@@ -8,6 +8,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from datarepo_spark.core import exec as E
 from datarepo_spark.functions import dedup as D
 from datarepo_spark.functions import multimodal as M
 from datarepo_spark.functions import similarity as S
@@ -108,13 +109,13 @@ class TestCacheLifecycle:
         def n_persisted():
             return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
 
-        D.unpersist_intermediates()
+        E.unpersist_intermediates()
         base = _settled_persist_count(spark)
         for _ in range(3):
             D.simhash_dedup_pairs(docs_df, portable=False).count()
             D.minhash_lsh_dedup_pairs(docs_df, threshold=0.5).count()
         assert n_persisted() > 0  # pipelines did persist
-        released = D.unpersist_intermediates()
+        released = E.unpersist_intermediates()
         # minhash's candidate-shingle cache is the one internal persist
         # per pipeline run (simhash/bucket_pairs are persist-free since
         # the nested-generator rewrite)
@@ -131,35 +132,35 @@ class TestCacheLifecycle:
         def n_persisted():
             return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
 
-        D.unpersist_intermediates()
+        E.unpersist_intermediates()
         base = n_persisted()
-        with D.dedup_scope():
+        with E.dedup_scope():
             D.minhash_lsh_dedup_pairs(docs_df, threshold=0.5).count()
             D.minhash_lsh_dedup_pairs(docs_df, threshold=0.6).count()
             assert n_persisted() > base  # pipelines did persist
         assert n_persisted() == base  # scope exit released them
-        assert D.unpersist_intermediates() == 0  # nothing left over
+        assert E.unpersist_intermediates() == 0  # nothing left over
 
     def test_dedup_scope_nests(self, spark, docs_df):
         def n_persisted():
             return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
 
-        D.unpersist_intermediates()
+        E.unpersist_intermediates()
         base = n_persisted()
-        with D.dedup_scope():
+        with E.dedup_scope():
             D.minhash_lsh_dedup_pairs(docs_df, threshold=0.5).count()
             outer_n = n_persisted()
-            outer_live = len(D._LIVE_CACHES)
-            with D.dedup_scope():
+            outer_live = len(E.LIVE_CACHES)
+            with E.dedup_scope():
                 # different shingle width -> a genuinely distinct plan
                 # (same-plan persists dedupe in Spark's CacheManager)
                 D.minhash_lsh_dedup_pairs(docs_df, n=4, threshold=0.6).count()
-                assert len(D._LIVE_CACHES) > outer_live
+                assert len(E.LIVE_CACHES) > outer_live
             # inner scope released only its own caches
-            assert len(D._LIVE_CACHES) == outer_live
+            assert len(E.LIVE_CACHES) == outer_live
             assert n_persisted() >= outer_n
         assert n_persisted() == base
-        assert len(D._LIVE_CACHES) == 0
+        assert len(E.LIVE_CACHES) == 0
 
 
 class TestMinHashLSH:
@@ -1663,7 +1664,7 @@ class TestSpreadInput:
     frame to cluster parallelism, and never change the row multiset."""
 
     def test_fires_on_single_partition_and_preserves_rows(self, spark):
-        from datarepo_spark.functions.dedup import spread_input
+        from datarepo_spark.core.exec import spread_input
 
         df = spark.createDataFrame(
             [(i, f"doc {i}") for i in range(50)], ["doc_id", "text"]
@@ -1675,7 +1676,7 @@ class TestSpreadInput:
         assert sorted(r.doc_id for r in out.collect()) == list(range(50))
 
     def test_noop_on_parallel_input(self, spark):
-        from datarepo_spark.functions.dedup import spread_input
+        from datarepo_spark.core.exec import spread_input
 
         df = spark.range(100).withColumnRenamed("id", "doc_id")
         df = df.repartition(4, "doc_id")

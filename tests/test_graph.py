@@ -395,8 +395,12 @@ class TestLocalTriangleCounts:
     def test_dense_and_sparse_paths_agree(self, spark):
         """The r14 dense fast path (per-edge full-neighborhood
         intersection, halved incident sum — no explode) must produce
-        the exact per-node map of the oriented explode form on the
-        same graph, whichever side of the density gate it sits on."""
+        the brute-force per-node map, as the oriented explode form
+        does, whichever side of the bitmap gate the graph sits on. The
+        gate also caps the n·(⌈n/64⌉·8+24)-byte bitmap table at the
+        broadcast budget: exactly the table size keeps the bitmap path
+        (bit_count in the plan), one byte less sends the graph to the
+        oriented form."""
         import itertools
         import random
 
@@ -409,19 +413,35 @@ class TestLocalTriangleCounts:
                 for a, b in itertools.combinations(range(28), 2)
                 if rng.random() < p
             ]
+            adj = {v: set() for e in edges for v in e}
+            for a, b in edges:
+                adj[a].add(b)
+                adj[b].add(a)
+            want_deg = {v: len(nb) for v, nb in adj.items()}
+            want_tri = {}
+            for v, nb in adj.items():
+                t = sum(y in adj[x] for x, y in itertools.combinations(nb, 2))
+                if t:
+                    want_tri[v] = t
+            n = len(adj)
+            table = n * ((n + 63) // 64 * 8 + 24)
             df = spark.createDataFrame(edges, ["src", "dst"])
-            results = []
-            for thresh in (0.0, 2.0):  # 0.0 forces dense, 2.0 sparse
+            # (dense_threshold, budget, bitmap path): 0.0 forces dense
+            # by density, 2.0 sparse
+            for thresh, budget, bitmap in [
+                (0.0, table, True),
+                (0.0, table - 1, False),
+                (2.0, 64 * 1024 * 1024, False),
+            ]:
                 deg, per = local_triangle_counts(
-                    df, dense_threshold=thresh
+                    df,
+                    dense_threshold=thresh,
+                    broadcast_adjacency_bytes=budget,
                 )
-                results.append(
-                    (
-                        {r.node: r.d for r in deg.collect()},
-                        {r.node: r.n_tri for r in per.collect()},
-                    )
-                )
-            assert results[0] == results[1]
+                plan = per._jdf.queryExecution().toString()
+                assert ("bit_count" in plan) == bitmap
+                assert {r.node: r.d for r in deg.collect()} == want_deg
+                assert {r.node: r.n_tri for r in per.collect()} == want_tri
 
     def test_dense_path_has_no_explode(self, spark):
         """The density gate's point: the dense plan carries NO

@@ -16,14 +16,6 @@ import pytest
 
 from _typecanon import canon_duck, canon_spark
 
-from datarepo_spark.queries import analysis  # noqa: F401  (registers)
-from datarepo_spark.queries import delta_queries  # noqa: F401  (registers)
-from datarepo_spark.queries import extensions  # noqa: F401  (registers)
-from datarepo_spark.queries import insights  # noqa: F401  (registers)
-from datarepo_spark.queries import physical  # noqa: F401  (registers)
-from datarepo_spark.queries import ranked  # noqa: F401  (registers)
-from datarepo_spark.queries import sources  # noqa: F401  (registers)
-from datarepo_spark.queries import tpch_extra  # noqa: F401  (registers)
 from datarepo_spark.queries.registry import REGISTRY
 
 SF_DIR = os.environ.get("SPARK_GRAFT_PARITY_SF", "/root/testdata/sf0.001")

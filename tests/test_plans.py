@@ -5,9 +5,6 @@ partial aggregation, and no quadratic join shapes in the dedup family."""
 
 import pytest
 
-from datarepo_spark.queries import analysis  # noqa: F401
-from datarepo_spark.queries import extensions  # noqa: F401
-from datarepo_spark.queries import physical  # noqa: F401
 from datarepo_spark.queries.registry import REGISTRY
 
 
@@ -572,7 +569,7 @@ class TestRound9Plans:
         assert "Exchange" not in plan
         assert "Join" not in plan
 
-        from datarepo_spark.functions.dedup import spread_input
+        from datarepo_spark.core.exec import spread_input
         from datarepo_spark.queries.extensions import _ahash_gate_media
 
         media = _ahash_gate_media(spark, sf_dir).repartition(
@@ -1124,8 +1121,6 @@ class TestR11Insights:
     def test_psi_single_pass_then_tiny_spine(self, spark, sf_dir):
         """The corpus collapses in ONE partial+final aggregate; the
         10-bucket spine join is a broadcast."""
-        from datarepo_spark.queries import insights  # noqa: F401
-
         plan = plan_of(spark, sf_dir, "profile_psi_drift")
         assert plan.count("HashAggregate") >= 2  # partial + final
         assert "BroadcastHashJoin" in plan
@@ -1137,8 +1132,6 @@ class TestR11Insights:
         __pid-scoped (local per-range pass) or order the bounded
         per-partition totals by __pid — never an unpartitioned sort of
         a data-scaled frame (r12 rewrite of r11's scale-killer #1)."""
-        from datarepo_spark.queries import insights  # noqa: F401
-
         plan = plan_of(spark, sf_dir, "profile_spearman_rank")
         assert "HashAggregate" in plan
         assert "BroadcastHashJoin" in plan
@@ -1147,8 +1140,6 @@ class TestR11Insights:
     def test_covariance_one_combinable_aggregate(self, spark, sf_dir):
         """All 14 co-moment sums fold in one partial+final aggregate —
         no join, no window, no second scan."""
-        from datarepo_spark.queries import insights  # noqa: F401
-
         plan = plan_of(spark, sf_dir, "profile_covariance_matrix")
         assert plan.count("HashAggregate") >= 2
         assert "SortMergeJoin" not in plan
@@ -1159,8 +1150,6 @@ class TestR11Insights:
         equi self-join (residual s1<s2 filter) — a hash join, never a
         nested loop over supplier x supplier; the final ranking is a
         TakeOrdered heap."""
-        from datarepo_spark.queries import insights  # noqa: F401
-
         plan = plan_of(spark, sf_dir, "graph_common_neighbors")
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
@@ -1173,8 +1162,6 @@ class TestR11Insights:
         quadratic work and the broadcast are CONSTANT at any corpus
         size (r12 rewrite of r11's scale-killer #3: a fixed-FRACTION
         sample kept pair work quadratic in the corpus)."""
-        from datarepo_spark.queries import insights  # noqa: F401
-
         plan = plan_of(spark, sf_dir, "similarity_cosine_histogram")
         assert "BroadcastNestedLoopJoin" in plan
         assert "TakeOrderedAndProject" in plan
@@ -1183,8 +1170,6 @@ class TestR11Insights:
     def test_ohlc_window_bounded_by_day_partition(self, spark, sf_dir):
         """The OHLC ranker is a partitioned window (type, day) feeding
         a grouped aggregate — exactly one Sort above the scan side."""
-        from datarepo_spark.queries import insights  # noqa: F401
-
         plan = plan_of(spark, sf_dir, "events_ohlc_bars")
         assert "Window" in plan
         assert plan.count("HashAggregate") >= 2
@@ -1193,8 +1178,6 @@ class TestR11Insights:
         """The cumulative share + rank run over per-part CELLS via the
         two-pass prefix sum: every Window node __pid-scoped, one
         shared shuffle for both running sums."""
-        from datarepo_spark.queries import insights  # noqa: F401
-
         plan = plan_of(spark, sf_dir, "window_pareto_cumshare")
         assert "HashAggregate" in plan
         _assert_windows_pid_scoped(plan)
@@ -1205,16 +1188,12 @@ class TestR11Insights:
         the per-user sessionizer's (partitioned by user_id); nothing
         unpartitioned touches a data-scaled frame (r12 rewrite of
         r11's scale-killer #2)."""
-        from datarepo_spark.queries import insights  # noqa: F401
-
         plan = plan_of(spark, sf_dir, "events_peak_concurrency")
         _assert_windows_pid_scoped(plan, also_allowed=("user_id",))
 
     def test_rfm_ntile_two_pass(self, spark, sf_dir):
         """All three quintile scores come from the distributed NTILE
         closed form — no global NTILE window over customer cells."""
-        from datarepo_spark.queries import insights  # noqa: F401
-
         plan = plan_of(spark, sf_dir, "profile_rfm_segmentation")
         assert "ntile" not in plan.lower()
         _assert_windows_pid_scoped(plan)
@@ -1225,8 +1204,6 @@ class TestR11Insights:
         first-click join is not a forced broadcast of a per-user
         frame (AQE may still pick broadcast at this SF — the pin is
         on the window shape, the scale argument lives in the query)."""
-        from datarepo_spark.queries import insights  # noqa: F401
-
         plan = plan_of(spark, sf_dir, "events_conversion_latency")
         assert "row_number" not in plan.lower()
         _assert_windows_pid_scoped(plan)
@@ -1238,15 +1215,11 @@ class TestR12Ranked:
     no unpartitioned Window ever touches a data-scaled frame."""
 
     def test_mann_whitney_two_pass_midranks(self, spark, sf_dir):
-        from datarepo_spark.queries import ranked  # noqa: F401
-
         plan = plan_of(spark, sf_dir, "profile_mann_whitney")
         assert "HashAggregate" in plan
         _assert_windows_pid_scoped(plan)
 
     def test_kruskal_wallis_two_pass_midranks(self, spark, sf_dir):
-        from datarepo_spark.queries import ranked  # noqa: F401
-
         plan = plan_of(spark, sf_dir, "profile_kruskal_wallis")
         assert "CartesianProduct" not in plan
         _assert_windows_pid_scoped(plan)
@@ -1256,8 +1229,6 @@ class TestR12Ranked:
         __pid), the carry per flag ordered by __pid — both mention
         __pid; no PARTITION-BY-only window hands a whole return flag
         to one task."""
-        from datarepo_spark.queries import ranked  # noqa: F401
-
         plan = plan_of(spark, sf_dir, "profile_weighted_median")
         _assert_windows_pid_scoped(plan)
 
@@ -1265,15 +1236,11 @@ class TestR12Ranked:
         """Customer deciles use the distributed NTILE closed form (no
         ntile window function anywhere); the only remaining windows
         run over the ten decile cells."""
-        from datarepo_spark.queries import ranked  # noqa: F401
-
         plan = plan_of(spark, sf_dir, "window_lorenz_deciles")
         assert "ntile" not in plan.lower()
         assert "__pid" in plan  # the two-pass row-number machinery
 
     def test_kaplan_meier_two_pass_risk_sets(self, spark, sf_dir):
-        from datarepo_spark.queries import ranked  # noqa: F401
-
         plan = plan_of(spark, sf_dir, "events_kaplan_meier")
         _assert_windows_pid_scoped(plan)
 
@@ -1281,8 +1248,6 @@ class TestR12Ranked:
         """Gaps come from per-(user, type) lag windows (bounded per
         user); percentile indexes from the grouped two-pass — no
         global or per-type-only sort of the gap corpus."""
-        from datarepo_spark.queries import ranked  # noqa: F401
-
         plan = plan_of(spark, sf_dir, "events_interarrival")
         _assert_windows_pid_scoped(plan, also_allowed=("user_id",))
 
@@ -1292,8 +1257,6 @@ class TestR12Ranked:
         parts x parts; the final ranking is a TakeOrdered heap. (The
         one BroadcastNestedLoopJoin in the plan is the 1-row
         n_baskets scalar attach — bounded by construction.)"""
-        from datarepo_spark.queries import ranked  # noqa: F401
-
         plan = plan_of(spark, sf_dir, "agg_association_rules")
         assert "CartesianProduct" not in plan
         # the basket self-join must be an equi hash join carrying the
@@ -1308,8 +1271,6 @@ class TestR12Ranked:
     def test_cms_one_combinable_aggregate(self, spark, sf_dir):
         """The sketch build is partial+final aggregation into <= d*w
         cells; the probe side joins the broadcast sketch."""
-        from datarepo_spark.queries import ranked  # noqa: F401
-
         plan = plan_of(spark, sf_dir, "agg_count_min_sketch")
         assert plan.count("HashAggregate") >= 2
         assert "BroadcastHashJoin" in plan
@@ -1319,8 +1280,6 @@ class TestR12Ranked:
         """Per-stratum selection ranks go through the grouped two-pass
         — no PARTITION-BY-stratum ROW_NUMBER handing a whole return
         flag to one task."""
-        from datarepo_spark.queries import ranked  # noqa: F401
-
         plan = plan_of(spark, sf_dir, "sample_neyman_allocation")
         assert "row_number" not in plan.lower()
         _assert_windows_pid_scoped(plan)
@@ -1328,8 +1287,6 @@ class TestR12Ranked:
     def test_cohort_ltv_windows_cell_bounded(self, spark, sf_dir):
         """The cumulative runs over (cohort, offset) cells — the only
         Window partitions by cohort_week above the cell aggregate."""
-        from datarepo_spark.queries import ranked  # noqa: F401
-
         plan = plan_of(spark, sf_dir, "events_cohort_ltv")
         _assert_windows_pid_scoped(plan, also_allowed=("cohort_week",))
 
@@ -1338,8 +1295,6 @@ class TestR12Ranked:
         final aggregate) and the probe joins those cells broadcast —
         no data-scaled window, no nested loop beyond the 1-row scalar
         attaches."""
-        from datarepo_spark.queries import ranked  # noqa: F401
-
         plan = plan_of(spark, sf_dir, "agg_bloom_filter")
         assert plan.count("HashAggregate") >= 2
         assert "BroadcastHashJoin" in plan
@@ -1357,8 +1312,6 @@ class TestR13Sketches:
         sketch execution) — never a rangepartitioning global sort of
         the data; the estimate/rank plumbing is all bounded
         broadcasts, no data-scaled window anywhere."""
-        from datarepo_spark.queries import ranked  # noqa: F401
-
         plan = plan_of(spark, sf_dir, "agg_quantile_sketch")
         assert "TakeOrderedAndProject(limit=4096" in plan
         self._only_output_range_sort(plan)
@@ -1378,8 +1331,6 @@ class TestR13Sketches:
         combine IS the sketch merge); the quantile walk's window runs
         over the <= 1024-cell bucket frame above that aggregate, and
         the only range exchange is the 4-row output sort."""
-        from datarepo_spark.queries import ranked  # noqa: F401
-
         plan = plan_of(spark, sf_dir, "agg_exp_histogram")
         assert plan.count("HashAggregate") >= 2
         self._only_output_range_sort(plan)

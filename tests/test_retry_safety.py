@@ -23,14 +23,6 @@ import re
 
 import pytest
 
-from datarepo_spark.queries import analysis  # noqa: F401  (registers)
-from datarepo_spark.queries import delta_queries  # noqa: F401  (registers)
-from datarepo_spark.queries import extensions  # noqa: F401  (registers)
-from datarepo_spark.queries import insights  # noqa: F401  (registers)
-from datarepo_spark.queries import physical  # noqa: F401  (registers)
-from datarepo_spark.queries import ranked  # noqa: F401  (registers)
-from datarepo_spark.queries import sources  # noqa: F401  (registers)
-from datarepo_spark.queries import tpch_extra  # noqa: F401  (registers)
 from datarepo_spark.queries.registry import REGISTRY
 
 PKG = os.path.join(os.path.dirname(os.path.dirname(__file__)), "datarepo_spark")

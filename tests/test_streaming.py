@@ -592,7 +592,6 @@ class TestStatefulEwma:
     must be bit-identical to the batch windowed fold."""
 
     def test_matches_batch_per_event(self, spark, events_dir, sf_dir):
-        from datarepo_spark.queries import extensions  # noqa: F401
         from datarepo_spark.streaming.stateful import stateful_ewma
 
         stream = SE.read_events_stream(

@@ -198,14 +198,14 @@ class TestPrefixSum:
 
     def test_correct_without_persist(self, spark, monkeypatch):
         """The r12 verdict's hardening contract: __pid assignment must
-        not rest on a physical-plan property. With _scoped_persist
+        not rest on a physical-plan property. With scoped_persist
         monkeypatched to identity (the exact refactor hazard named in
         VERDICT r12 #3 — a dropped persist), the literal-boundary tags
         still agree across the local and carry branches and the result
         is exact."""
         from datarepo_spark.functions import twopass
 
-        monkeypatch.setattr(twopass, "_scoped_persist", lambda df: df)
+        monkeypatch.setattr(twopass, "scoped_persist", lambda df: df)
         df = _mkdf(spark, 300, seed=42)
         got = {
             r.k: r.cum

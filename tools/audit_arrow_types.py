@@ -16,11 +16,6 @@ import pyarrow as pa
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from datarepo_spark.queries import delta_queries  # noqa: F401
-from datarepo_spark.queries import extensions  # noqa: F401
-from datarepo_spark.queries import physical  # noqa: F401
-from datarepo_spark.queries import sources  # noqa: F401
-from datarepo_spark.queries import tpch_extra  # noqa: F401
 from datarepo_spark.queries.registry import REGISTRY
 from datarepo_spark.session import get_spark
 

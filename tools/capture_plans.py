@@ -23,17 +23,7 @@ sys.path.insert(
 
 from datarepo_spark.session import get_spark  # noqa: E402
 from datarepo_spark.queries.registry import REGISTRY  # noqa: E402
-from datarepo_spark.queries import (  # noqa: E402,F401
-    analysis,
-    delta_queries,
-    extensions,
-    insights,
-    physical,
-    ranked,
-    sources,
-    tpch_extra,
-)
-from datarepo_spark.functions.dedup import unpersist_intermediates  # noqa: E402
+from datarepo_spark.core.exec import release  # noqa: E402
 
 
 def main() -> None:
@@ -55,8 +45,7 @@ def main() -> None:
         "formatted"
     )
     for name in names:
-        unpersist_intermediates()
-        spark.catalog.clearCache()
+        release(spark)
         df = REGISTRY[name].spark_fn(spark, sf_dir)
         text = df._jdf.queryExecution().explainString(mode)
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")

@@ -34,13 +34,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from datarepo_spark.session import get_spark  # noqa: E402
 from datarepo_spark.queries.registry import REGISTRY  # noqa: E402
-from datarepo_spark.queries import analysis  # noqa: E402,F401
-from datarepo_spark.queries import extensions  # noqa: E402,F401
-from datarepo_spark.queries import insights  # noqa: E402,F401
-from datarepo_spark.queries import physical  # noqa: E402,F401
-from datarepo_spark.queries import ranked  # noqa: E402,F401
-from datarepo_spark.queries import sources  # noqa: E402,F401
-from datarepo_spark.functions.dedup import unpersist_intermediates  # noqa: E402
+from datarepo_spark.core.exec import release  # noqa: E402
 
 SRC = "/root/testdata/sf0.1"
 GAUNTLET = [
@@ -269,8 +263,7 @@ def main() -> None:
     # warmup compiles the generated code at tiny sf (bench methodology)
     for name in GAUNTLET:
         REGISTRY[name].spark_fn(spark, "/root/testdata/sf0.001").count()
-    unpersist_intermediates()
-    spark.catalog.clearCache()
+    release(spark)
 
     print(f"\n| query | sf0.1 (r7 composite) | sf{sf:g} | ratio |")
     print("|---|---|---|---|")
@@ -282,8 +275,7 @@ def main() -> None:
         r7["tail"].strip().splitlines()[-1]))["queries"]
     total = 0.0
     for name in GAUNTLET:
-        unpersist_intermediates()
-        spark.catalog.clearCache()
+        release(spark)
         t0 = time.perf_counter()
         REGISTRY[name].spark_fn(spark, out).count()
         el = time.perf_counter() - t0
