@@ -1,12 +1,16 @@
 """Per-query execution decisions shared by the operator modules: cache
 lifetime (scoped persists and their release), partition sizing for
-small cached intermediates, input spreading, and the byte size of a
-plan's scanned input."""
+small cached intermediates, input spreading, the byte size of a
+plan's scanned input, and driver-side tables built as JVM relations."""
 
 from __future__ import annotations
 
+import decimal
+from typing import Sequence, Union
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def parallelism(df: DataFrame) -> int:
@@ -155,3 +159,55 @@ def plan_bytes(df: DataFrame) -> int:
         if leaf.getClass().getName() == _LOGICAL_RELATION:
             total += int(leaf.stats().sizeInBytes())
     return total
+
+
+_DATETIME = (T.DateType, T.TimestampType, T.TimestampNTZType)
+# rounds to a scale without a context-precision limit (the default 28
+# digits would reject a decimal(38, s) value)
+_EXACT = decimal.Context(prec=decimal.MAX_PREC)
+
+
+def local_frame(
+    spark: SparkSession,
+    rows: Sequence[Sequence],
+    schema: Union[T.StructType, str],
+) -> DataFrame:
+    """A DataFrame over driver-side ``rows`` (positional tuples) with
+    exactly ``schema`` (a ``StructType`` or a DDL string), built without
+    a Python job. ``spark.createDataFrame(<python list>)`` parallelizes a
+    pickled Python RDD, so every job over it (a broadcast of a 3-row
+    lookup included) starts Python workers. Handed a ``pyarrow.Table``,
+    Spark instead builds a ``LocalRelation`` (below
+    ``spark.sql.execution.arrow.localRelationThreshold``) or a JVM-only
+    Arrow RDD.
+
+    The Arrow columns hold the values the list path stores: dates and
+    timestamps go in as their Spark type's own ``toInternal`` value
+    (days, epoch microseconds), so a naive ``datetime`` in a
+    ``timestamp`` field still reads as process-local time; decimals are
+    rounded half-up to the field's scale, as the JVM does. ``None`` in a
+    non-nullable field raises ``ValueError``, as ``verifySchema`` does:
+    Spark casts the table to the schema's Arrow form, which refuses it.
+    Values inside nested types go to pyarrow as they are."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    columns = []
+    for i, field in enumerate(schema.fields):
+        dtype = field.dataType
+        values = [row[i] for row in rows]
+        if isinstance(dtype, _DATETIME):
+            values = [dtype.toInternal(v) for v in values]
+        elif isinstance(dtype, T.DecimalType):
+            quantum = decimal.Decimal(1).scaleb(-dtype.scale)
+            values = [
+                None
+                if v is None
+                else v.quantize(quantum, decimal.ROUND_HALF_UP, _EXACT)
+                for v in values
+            ]
+        columns.append(pa.array(values, to_arrow_type(dtype)))
+    table = pa.Table.from_arrays(columns, names=schema.names)
+    return spark.createDataFrame(table, schema)

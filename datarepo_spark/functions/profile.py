@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..core.exec import local_frame
+
 
 def _render(col, dt) -> "F.Column":
     if isinstance(dt, (T.DoubleType, T.FloatType)):
@@ -89,7 +91,7 @@ def profile(
             T.StructField("max_value", T.StringType(), True),
         ]
     )
-    return df.sparkSession.createDataFrame(out_rows, schema)
+    return local_frame(df.sparkSession, out_rows, schema)
 
 
 def histogram(

@@ -28,6 +28,8 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..core.exec import local_frame, scoped_persist
+
 HASH_BITS = 60  # 15 hex chars: fits a signed long, exact as a double
 
 
@@ -240,8 +242,8 @@ def mixture_sample(
         F.sum("n_tokens").alias("__total")
     )
     weight_rows = [(s, float(w)) for s, w in sorted(weights.items())]
-    wdf = df.sparkSession.createDataFrame(
-        weight_rows, f"{source_col} string, __w double"
+    wdf = local_frame(
+        df.sparkSession, weight_rows, f"{source_col} string, __w double"
     )
     rates = totals.join(wdf, source_col).select(
         source_col,
@@ -296,7 +298,6 @@ def token_budget_select(
     """
     if budget < 0:
         raise ValueError(f"budget must be >= 0, got {budget}")
-    from ..core.exec import scoped_persist
 
     # Persist the narrow (id, score, tokens) projection: the plan below
     # reads it THREE times (bucket-mass aggregate, whole-bucket
@@ -439,7 +440,6 @@ def nucleus_select(
             f"first (e.g. round(score * 1e6) cast to long)"
         )
     groups = [F.col(g) for g in group_cols]
-    from ..core.exec import scoped_persist
 
     # Persist the narrow (id, groups, score) projection: the two-level
     # plan reads it FOUR times (group envelope, bucket-mass aggregate,
@@ -614,7 +614,6 @@ def ntile_shards(
     """
     if n_shards < 1:
         raise ValueError(f"n_shards must be >= 1, got {n_shards}")
-    from ..core.exec import scoped_persist
 
     base = df.select(F.col(id_col), F.col(score_col).alias("__s"))
     env = base.agg(

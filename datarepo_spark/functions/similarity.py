@@ -23,6 +23,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..core.exec import local_frame, scoped_persist
 from .dedup import cosine_similarity
 
 
@@ -243,8 +244,6 @@ def mmr_rerank(
     ties break by id — bit-reproducible against the SQL recursive-CTE
     spelling.
     """
-    from ..core.exec import scoped_persist
-
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     # persisted: the pool feeds BOTH sides of the pair self-join plus
     # the candidate collect — unpersisted, the corpus TakeOrdered scan
@@ -305,9 +304,10 @@ def mmr_rerank(
         picked.append(best[1])
     spark = df.sparkSession
     # the id column keeps its INPUT type (string/int ids must not be
-    # forced long — createDataFrame would crash or silently mis-type)
+    # forced long — a fixed type would crash or silently mis-type)
     id_type = df.schema[id_col].dataType.simpleString()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(n + 1, i, rel[i]) for n, i in enumerate(picked)],
         f"rank int, {id_col} {id_type}, relevance double",
     )

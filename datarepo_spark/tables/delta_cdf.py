@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..core.exec import local_frame
 from .delta_dv import read_deletion_vector
 from .delta_log import AddFile, DeltaLog
 
@@ -308,7 +309,8 @@ def table_changes(
                 None,
                 keep_pos=True,
             )
-            wanted = spark.createDataFrame(
+            wanted = local_frame(
+                spark,
                 pairs,
                 T.StructType(
                     [
@@ -363,7 +365,7 @@ def table_changes(
         T.StructField(COMMIT_VERSION, T.LongType(), False),
     ]
     if not frames:
-        return spark.createDataFrame([], T.StructType(out_fields))
+        return local_frame(spark, [], T.StructType(out_fields))
     result = frames[0]
     for f in frames[1:]:
         result = result.unionByName(f, allowMissingColumns=True)

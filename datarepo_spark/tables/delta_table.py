@@ -14,7 +14,10 @@ Execution strategy, Spark-first:
      on the driver — exactly what a Delta Snapshot is — after pruning files
      whose ``partitionValues`` can't satisfy the filters. Data is then read
      with Spark's native distributed parquet reader; partition columns are
-     restored with a broadcast join on the (globally unique) file name.
+     restored with a broadcast join on the (globally unique) relative file
+     path against a driver-local relation (``core.exec.local_frame``: a
+     JVM ``LocalRelation``, so the broadcast starts no Python worker).
+     Small deletion-vector position sets are anti-joined the same way.
 
 Unlike the reference's eager fetchall-then-re-lazy flow (deltalake_table.py
 :244-257), both paths stay lazy: nothing executes until an action.
@@ -24,6 +27,7 @@ from __future__ import annotations
 
 import os
 import re
+import weakref
 from dataclasses import dataclass
 from typing import Any, Optional, Sequence, Union
 from urllib.parse import unquote
@@ -33,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..core.compile import filters_to_column
+from ..core.exec import local_frame
 from ..core.readconf import apply_parquet_read_compat
 from ..core.filters import (
     Filter,
@@ -64,6 +69,14 @@ ExtraCol = tuple[str, Union[Column, str]]
 # the driver, memory is bounded by one file's DV. Tests monkeypatch
 # this to force the distributed path.
 DV_BROADCAST_MAX_CARDINALITY = 1_000_000
+
+# SparkContext → whether delta-spark is on its classpath. The classpath
+# is fixed for a JVM's life, and a failed probe costs a py4j round trip
+# that converts the ClassNotFoundException (about 20 ms), so each live
+# context probes once; a new context probes again.
+_NATIVE_DELTA: "weakref.WeakKeyDictionary[Any, bool]" = (
+    weakref.WeakKeyDictionary()
+)
 
 
 def _scan_key(path: str, nseg: int) -> str:
@@ -348,13 +361,18 @@ class DeltalakeTable:
     def _native_available(self, spark: SparkSession) -> bool:
         if self.use_native is not None:
             return self.use_native
-        try:
-            spark._jvm.java.lang.Class.forName(  # type: ignore[union-attr]
-                "org.apache.spark.sql.delta.DeltaLog"
-            )
-            return True
-        except Exception:
-            return False
+        sc = spark.sparkContext
+        found = _NATIVE_DELTA.get(sc)
+        if found is None:
+            try:
+                sc._jvm.java.lang.Class.forName(  # type: ignore[union-attr]
+                    "org.apache.spark.sql.delta.DeltaLog"
+                )
+                found = True
+            except Exception:
+                found = False
+            _NATIVE_DELTA[sc] = found
+        return found
 
     # -- read ----------------------------------------------------------------
 
@@ -545,7 +563,7 @@ class DeltalakeTable:
                 )
                 for add in files
             ]
-            lookup = spark.createDataFrame(rows, lookup_schema)
+            lookup = local_frame(spark, rows, lookup_schema)
             segs = F.split(F.col("_metadata.file_path"), "/")
             rel_uri = F.concat_ws("/", F.slice(segs, -nseg, nseg))
             df = (
@@ -584,7 +602,8 @@ class DeltalakeTable:
                         self.uri, add.deletion_vector
                     )
                 ]
-                dv_df = spark.createDataFrame(
+                dv_df = local_frame(
+                    spark,
                     dv_rows,
                     T.StructType(
                         [

@@ -28,6 +28,7 @@ from urllib.parse import quote, unquote
 
 from pyspark.sql import DataFrame
 
+from ..core.exec import local_frame
 from .delta_log import DeltaLog
 from .delta_stats import collect_file_stats
 
@@ -499,7 +500,7 @@ def _assign_identity(df: DataFrame, name: str, next_value: int, step: int):
     if acc == 0:
         return df.withColumn(name, F.lit(None).cast("long")), None
     spark = df.sparkSession
-    off_df = spark.createDataFrame(offsets, "__pid int, __off long")
+    off_df = local_frame(spark, offsets, "__pid int, __off long")
     w = Window.partitionBy("__pid").orderBy(
         F.monotonically_increasing_id()
     )
@@ -2798,7 +2799,7 @@ def describe_detail(spark, uri: str) -> "DataFrame":
             T.StructField("schema_string", T.StringType(), False),
         ]
     )
-    return spark.createDataFrame([row], schema)
+    return local_frame(spark, [row], schema)
 
 
 def describe_history(spark, uri: str) -> "DataFrame":
@@ -2840,7 +2841,7 @@ def describe_history(spark, uri: str) -> "DataFrame":
             T.StructField("n_removes", T.LongType(), False),
         ]
     )
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def restore_table(spark, uri: str, version: int) -> dict[str, int]:

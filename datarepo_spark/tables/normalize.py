@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..core.exec import local_frame
+
 
 def _strip_nullability(dt: T.DataType) -> T.DataType:
     """Same type with every nested nullability flag set True — casting is
@@ -77,4 +79,4 @@ def normalize_df(
 def empty_normalized_df(spark: SparkSession, schema: T.StructType) -> DataFrame:
     """Empty frame with the exact declared schema (reference
     _empty_normalized_df, deltalake_table.py:377-386)."""
-    return spark.createDataFrame([], schema)
+    return local_frame(spark, [], schema)
