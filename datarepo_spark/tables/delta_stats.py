@@ -44,10 +44,11 @@ Soundness rules encoded here:
 
 from __future__ import annotations
 
+import bisect
 import datetime as _dt
 import json
 import math
-from typing import Any, Optional, Sequence
+from typing import Any, NamedTuple, Optional, Sequence
 
 from pyspark.sql import types as T
 
@@ -234,6 +235,15 @@ def _comparable(a: Any, b: Any) -> bool:
     return True
 
 
+def _all_null(nulls: Optional[int], num_records: Optional[int]) -> bool:
+    return (
+        nulls is not None
+        and num_records is not None
+        and num_records > 0
+        and nulls >= num_records
+    )
+
+
 def _filter_possible(
     f: Filter,
     dtype: T.DataType,
@@ -266,12 +276,7 @@ def _filter_possible(
             if value is None:
                 return True
 
-    all_null = (
-        nulls is not None
-        and num_records is not None
-        and num_records > 0
-        and nulls >= num_records
-    )
+    all_null = _all_null(nulls, num_records)
     if op == "=" and value is None:
         # isNull semantics (matches delta_table._eval_filter)
         return nulls is None or nulls > 0
@@ -327,26 +332,112 @@ def _filter_possible(
     return True  # contains / includes*: not index-prunable
 
 
-def file_may_match(
-    stats_json: Optional[str],
-    conj: Sequence[Filter],
-    data_schema: T.StructType,
+class _InList(NamedTuple):
+    """An ``in`` filter's member list, prepared once per prune call so
+    each file's test is a bisect instead of a scan of the list.
+    :func:`_in_possible` answers exactly as :func:`_filter_possible`
+    does for the original filter, which it falls back to whenever the
+    envelope or the members are not one totally ordered family."""
+
+    column: str
+    has_none: bool
+    always: bool  # a NaN or non-ASCII member: no bound excludes it
+    kind: Optional[str]  # ordering family of the rest; None = mixed
+    values: list  # the rest (temporal ones coerced), sorted by kind
+
+
+def _kind(v: Any) -> Optional[str]:
+    """The family inside which ``<`` is a total order agreeing with the
+    linear test, or None (NaN, other types)."""
+    if isinstance(v, bool):
+        return "bool"
+    if isinstance(v, (int, float)):
+        return None if v != v else "num"
+    if isinstance(v, str):
+        return "str"
+    if isinstance(v, _dt.datetime):
+        return "naive" if v.utcoffset() is None else "aware"
+    if type(v) is _dt.date:
+        return "date"
+    return None
+
+
+def _prepare(f: Filter, dtype: Optional[T.DataType]):
+    """``f`` itself, or an :class:`_InList` for an ``in`` list on a
+    column the stats index (not for a temporal list with a member that
+    does not parse: the linear test keeps every file for it)."""
+    if dtype is None or f.operator != "in" or not isinstance(
+        f.value, (list, tuple, set)
+    ):
+        return f
+    temporal = isinstance(
+        dtype, (T.DateType, T.TimestampType, T.TimestampNTZType)
+    )
+    has_none = always = False
+    rest = []
+    for v in f.value:
+        if v is None:
+            has_none = True
+            continue
+        if temporal:
+            v = _coerce(v, dtype)
+            if v is None:
+                return f
+        if (isinstance(v, float) and v != v) or (
+            isinstance(v, str) and not v.isascii()
+        ):
+            always = True
+        else:
+            rest.append(v)
+    kinds = {_kind(v) for v in rest}
+    kind = kinds.pop() if len(kinds) == 1 else None
+    if kind is not None:
+        rest.sort()
+    return _InList(f.column, has_none, always, kind, rest)
+
+
+def _in_possible(
+    p: _InList,
+    dtype: T.DataType,
+    mn: Any,
+    mx: Any,
+    nulls: Optional[int],
+    num_records: Optional[int],
 ) -> bool:
-    """Sound per-file test: can a file with these stats satisfy every
-    filter of one DNF conjunction? No stats → always True."""
-    if not stats_json:
+    if _all_null(nulls, num_records):
+        return p.has_none  # all-null file: only a NULL member matches
+    if mn is None or mx is None or p.has_none or p.always:
         return True
+    if not p.values:
+        return False
+    if p.kind is None or _kind(mn) != p.kind or _kind(mx) != p.kind or (
+        p.kind == "str" and not mn.isascii()
+    ):
+        linear = Filter(p.column, "in", p.values)
+        return _filter_possible(linear, dtype, mn, mx, nulls, num_records)
+    i = bisect.bisect_left(p.values, mn)
+    return i < len(p.values) and p.values[i] <= mx
+
+
+def _parse_stats(stats_json: Any) -> Optional[dict]:
+    if not stats_json:
+        return None
     try:
         stats = json.loads(stats_json) if isinstance(stats_json, str) else stats_json
     except (ValueError, TypeError):
-        return True
-    if not isinstance(stats, dict):
+        return None
+    return stats if isinstance(stats, dict) else None
+
+
+def _may_match(stats: Optional[dict], conj: Sequence, dtypes: dict) -> bool:
+    """:func:`file_may_match` over parsed stats and a prepared
+    conjunction."""
+    if stats is None:
         return True
     min_values = stats.get("minValues") or {}
     max_values = stats.get("maxValues") or {}
     null_count = stats.get("nullCount") or {}
     num_records = stats.get("numRecords")
-    dtypes = {fld.name: fld.dataType for fld in data_schema.fields}
 
     for f in conj:
         dtype = dtypes.get(f.column)
@@ -355,9 +446,25 @@ def file_may_match(
         mn = _coerce(min_values.get(f.column), dtype)
         mx = _coerce(max_values.get(f.column), dtype)
         nulls = null_count.get(f.column)
-        if not _filter_possible(f, dtype, mn, mx, nulls, num_records):
+        test = _in_possible if isinstance(f, _InList) else _filter_possible
+        if not test(f, dtype, mn, mx, nulls, num_records):
             return False
     return True
+
+
+def file_may_match(
+    stats_json: Optional[str],
+    conj: Sequence[Filter],
+    data_schema: T.StructType,
+) -> bool:
+    """Sound per-file test: can a file with these stats satisfy every
+    filter of one DNF conjunction? No stats → always True."""
+    dtypes = {fld.name: fld.dataType for fld in data_schema.fields}
+    return _may_match(
+        _parse_stats(stats_json),
+        [_prepare(f, dtypes.get(f.column)) for f in conj],
+        dtypes,
+    )
 
 
 def stats_prune(files: list, dnf, data_schema: T.StructType) -> list:
@@ -365,14 +472,17 @@ def stats_prune(files: list, dnf, data_schema: T.StructType) -> list:
     records whose ``stats`` attribute carries the add action's JSON
     string (None → kept). Sound by construction: every "don't know"
     path in :func:`file_may_match` keeps the file, and the full
-    predicate is re-applied to rows after the scan."""
+    predicate is re-applied to rows after the scan. ``in`` lists are
+    prepared once here, so a file costs O(log K) per K-member list."""
     if not dnf:
         return files
-    return [
-        add
-        for add in files
-        if any(
-            file_may_match(getattr(add, "stats", None), conj, data_schema)
-            for conj in dnf
-        )
+    dtypes = {fld.name: fld.dataType for fld in data_schema.fields}
+    prepared = [
+        [_prepare(f, dtypes.get(f.column)) for f in conj] for conj in dnf
     ]
+    kept = []
+    for add in files:
+        stats = _parse_stats(getattr(add, "stats", None))
+        if any(_may_match(stats, conj, dtypes) for conj in prepared):
+            kept.append(add)
+    return kept

@@ -188,23 +188,41 @@ def _partition_prune(
         return snapshot.files
     part_cols = set(snapshot.partition_columns)
 
-    def conj_matches(conj: list[Filter], values: dict) -> bool:
-        for f in conj:
-            if f.column not in part_cols:
-                continue
-            field = snapshot.partition_field(f.column)
-            actual = cast_partition_value(
-                values.get(snapshot.physical_name(field)), field.dataType
-            )
-            if not _eval_filter(actual, f):
-                return False
-        return True
+    def prepare(f: Filter) -> tuple:
+        # resolved once per call, not per file; an in-list becomes a set
+        field = snapshot.partition_field(f.column)
+        return snapshot.physical_name(field), field.dataType, _as_set(f)
+
+    prepared = [
+        [prepare(f) for f in conj if f.column in part_cols] for conj in dnf
+    ]
+
+    def conj_matches(conj: list, values: dict) -> bool:
+        return all(
+            _eval_filter(cast_partition_value(values.get(key), dtype), f)
+            for key, dtype, f in conj
+        )
 
     return [
         add
         for add in snapshot.files
-        if any(conj_matches(conj, add.partition_values) for conj in dnf)
+        if any(conj_matches(conj, add.partition_values) for conj in prepared)
     ]
+
+
+def _as_set(f: Filter) -> Filter:
+    """``f`` with an ``in``/``not in`` list turned into a frozenset, so
+    each file's test is one hash lookup. Membership agrees with the
+    list's for hashable members (equal values hash equal); a list with
+    an unhashable member stays a list."""
+    if f.operator in ("in", "not in") and isinstance(
+        f.value, (list, tuple, set)
+    ):
+        try:
+            return f._replace(value=frozenset(f.value))
+        except TypeError:
+            pass
+    return f
 
 
 def _names_differ(

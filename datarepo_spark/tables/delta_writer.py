@@ -40,6 +40,12 @@ from .delta_stats import collect_file_stats
 # can raise the cap per call (max_affected_files=).
 DEFAULT_MAX_AFFECTED_FILES = 1_000_000
 
+# MERGE collects the source's distinct keys (one row each) to prune its
+# target scan to the files that can hold them. Past this many keys the
+# list would cost driver memory and per-file test time for little
+# pruning, so the merge scans the whole table instead.
+MERGE_KEY_PRUNE_MAX = 10_000
+
 
 def _check_affected_cap(n_collected: int, cap: int, op: str) -> None:
     if n_collected > cap:
@@ -1468,8 +1474,12 @@ def merge_delta(
 
     Scale shape (the same one delta-spark's MERGE uses):
     1. find the AFFECTED files — those containing at least one matched
-       key — with a semi join against the source keys; only file paths
-       reach the driver;
+       key. One bounded job collects the source's distinct keys (at
+       most ``MERGE_KEY_PRUNE_MAX`` of them, with their row counts for
+       the duplicate check); the target scan then opens only the files
+       whose partition values or min/max stats can hold one of them. A
+       semi join of that scan against the source keys sends only file
+       paths to the driver. Past the bound, the whole table is scanned;
     2. rewrite ONLY those files: unmatched rows pass through, matched
        rows are replaced/dropped, not-matched source rows append;
     3. commit remove(affected) + add(new) atomically, dataChange: true.
@@ -1528,21 +1538,40 @@ def merge_delta(
     if missing_keys:
         raise ValueError(f"merge keys not in table schema: {missing_keys}")
     source = source.select(*table_cols)
+    if when_matched is None and when_not_matched is None:
+        return {
+            "version": snapshot.version,
+            "files_rewritten": 0,
+            "files_added": 0,
+        }
 
-    if when_matched == "update":
-        dup = (
-            source.groupBy(*on).count().filter(F.col("count") > 1).limit(1)
+    # one row per distinct key (NULL keys form groups too), with its
+    # source row count
+    key_rows = source.groupBy(*on).agg(
+        F.count(F.lit(1)).alias("__merge_key_rows")
+    )
+    groups = key_rows.limit(MERGE_KEY_PRUNE_MAX + 1).collect()
+    if len(groups) <= MERGE_KEY_PRUNE_MAX:
+        has_dup = any(g[-1] > 1 for g in groups)
+        key_dnf = _merge_key_dnf(snapshot, source, on, groups)
+    else:
+        has_dup = when_matched == "update" and (
+            key_rows.filter(F.col("__merge_key_rows") > 1).limit(1).count()
+            > 0
         )
-        if dup.count() > 0:
-            raise ValueError(
-                "source has duplicate merge keys — a matched target row "
-                "would receive multiple updates"
-            )
+        key_dnf = None
+    if when_matched == "update" and has_dup:
+        raise ValueError(
+            "source has duplicate merge keys — a matched target row "
+            "would receive multiple updates"
+        )
 
     from .delta_table import DeltalakeTable
 
     table = DeltalakeTable(os.path.basename(uri), uri)
-    target = table._read_from_log(spark, snapshot, None, keep_rel=True)
+    # Pruning is sound for the rewrite: a dropped file holds no source
+    # key, so it has no affected row and adds nothing to tgt_keys below.
+    target = table._read_from_log(spark, snapshot, key_dnf, keep_rel=True)
 
     src_keys = source.select(*on).distinct()
     cap = (
@@ -1650,8 +1679,8 @@ def merge_delta(
             read_version=snapshot.version,
             operation="MERGE",
             operation_params={"predicate": on},
-            # the join reads every target key: ANY concurrent
-            # dataChange append may contain a matched key
+            # ANY concurrent dataChange append may contain a matched
+            # key (the key pruning saw only this snapshot's files)
             read_whole_table=True,
         )
     except _TxnAlreadyLanded as landed:
@@ -1669,6 +1698,43 @@ def merge_delta(
         "files_rewritten": len(affected),
         "files_added": n_added,
     }
+
+
+def _merge_key_dnf(snapshot, source: DataFrame, on: list, groups: list):
+    """``[[Filter(k, "in", keys of k) for k in on]]`` from the collected
+    key groups, or None when no key column can prune. NULL keys are
+    left out (they never match). A key column is left out when the
+    pruning test could disagree with the join's equality: source and
+    table types differ (unless both are integral), the type is
+    ``timestamp`` (a collected value is a process-local naive datetime:
+    not comparable with the UTC stats, and not the same instant again
+    around a DST change),
+    ``float`` (partition values parse as doubles) or a type no pruning
+    reads, or a NaN key (the join matches NaN to NaN, Python does
+    not)."""
+    from pyspark.sql import types as T
+
+    from ..core.filters import Filter
+
+    prunable = (
+        T.IntegralType, T.DoubleType, T.DecimalType, T.StringType,
+        T.BooleanType, T.DateType, T.TimestampNTZType,
+    )
+    table_types = {f.name: f.dataType for f in snapshot.schema.fields}
+    source_types = {f.name: f.dataType for f in source.schema.fields}
+    conj = []
+    for i, k in enumerate(on):
+        tt, st = table_types[k], source_types[k]
+        if not isinstance(tt, prunable) or not (
+            tt == st
+            or isinstance(tt, T.IntegralType) and isinstance(st, T.IntegralType)
+        ):
+            continue
+        keys = {g[i] for g in groups if g[i] is not None}
+        if any(v != v for v in keys):
+            continue
+        conj.append(Filter(k, "in", list(keys)))
+    return [conj] if conj else None
 
 
 def _stage_adds(
