@@ -39,6 +39,14 @@ Soundness rules encoded here:
   columns therefore only prune when the footer guarantees NaN-free
   pages is unknowable → we keep comparisons but treat ``=``/``in`` on
   float NaN values as non-prunable;
+- decimal bounds are never read: JSON carries them as numbers, which
+  parse as floats, and some writers pass them through a double — so a
+  bound may sit on either side of the true one. A decimal filter
+  literal is never compared with a float (Spark compares them as
+  doubles, Python exactly);
+- a timestamp bound on a whole millisecond may be a truncated one
+  (delta-spark writes timestamp stats to the millisecond): it is
+  widened outward by 999 µs before any comparison;
 - any type mismatch or parse failure → keep the file.
 """
 
@@ -46,6 +54,7 @@ from __future__ import annotations
 
 import bisect
 import datetime as _dt
+import decimal
 import json
 import math
 from typing import Any, NamedTuple, Optional, Sequence
@@ -58,6 +67,8 @@ from ..core.filters import Filter
 _DEFAULT_INDEXED_COLS = 32
 # Beyond this, string min/max are omitted (see module docstring).
 _MAX_STR_STATS = 64
+# A timestamp bound on a whole millisecond may be truncated by this much.
+_MS_SLACK = _dt.timedelta(microseconds=999)
 
 _STATS_TYPES = (
     T.ByteType,
@@ -199,7 +210,7 @@ def collect_file_stats(
 def _coerce(value: Any, dtype: T.DataType) -> Any:
     """Bring a JSON-decoded stats bound back to a comparable Python value
     for ``dtype``. Returns None when no sound comparison exists."""
-    if value is None:
+    if value is None or isinstance(dtype, T.DecimalType):
         return None
     if isinstance(dtype, T.DateType):
         if isinstance(value, str):
@@ -230,6 +241,10 @@ def _comparable(a: Any, b: Any) -> bool:
         # parquet string stats are byte-ordered; Python is code-point
         # ordered. They agree on ASCII — prune only there.
         return a.isascii() and b.isascii()
+    if isinstance(a, decimal.Decimal) and isinstance(b, float) or (
+        isinstance(a, float) and isinstance(b, decimal.Decimal)
+    ):
+        return False  # Spark compares them as doubles, Python exactly
     if isinstance(b, float) and math.isnan(b):
         return False  # NaN never bounded by row-group stats
     return True
@@ -419,6 +434,17 @@ def _in_possible(
     return i < len(p.values) and p.values[i] <= mx
 
 
+def _widen_ms(bound: Any, slack: _dt.timedelta) -> Any:
+    """``bound`` moved by ``slack`` when it is on a whole millisecond
+    (where a writer that truncates to milliseconds leaves it)."""
+    if bound is None or bound.microsecond % 1000:
+        return bound
+    try:
+        return bound + slack
+    except OverflowError:
+        return None
+
+
 def _parse_stats(stats_json: Any) -> Optional[dict]:
     if not stats_json:
         return None
@@ -445,6 +471,8 @@ def _may_match(stats: Optional[dict], conj: Sequence, dtypes: dict) -> bool:
             continue  # partition or unknown column: not ours to judge
         mn = _coerce(min_values.get(f.column), dtype)
         mx = _coerce(max_values.get(f.column), dtype)
+        if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
+            mn, mx = _widen_ms(mn, -_MS_SLACK), _widen_ms(mx, _MS_SLACK)
         nulls = null_count.get(f.column)
         test = _in_possible if isinstance(f, _InList) else _filter_possible
         if not test(f, dtype, mn, mx, nulls, num_records):

@@ -10,17 +10,22 @@ key and run no many-task file-listing job.
 
 import datetime as dt
 import decimal
+import json
 import os
 import shutil
 import time
 from contextlib import contextmanager
+from urllib.parse import unquote
 
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from datarepo_spark.core.exec import local_frame
 from datarepo_spark.core.filters import Filter
 from datarepo_spark.tables import delta_writer
+from datarepo_spark.tables.delta_log import invalidate_snapshot_cache
 from datarepo_spark.tables.delta_table import DeltalakeTable
 from datarepo_spark.tables.delta_writer import (
     delete_delta,
@@ -122,6 +127,60 @@ def timestamp_source(spark, uri):
     )
 
 
+def restate_stats(uri, column, render):
+    """Rewrite ``column``'s bounds in every add action the way another
+    writer states them: ``render`` maps a file's true min or max to the
+    JSON value written."""
+    log = os.path.join(uri, "_delta_log")
+    for name in sorted(os.listdir(log)):
+        if not name.endswith(".json"):
+            continue
+        with open(os.path.join(log, name)) as fh:
+            actions = [json.loads(line) for line in fh]
+        for action in actions:
+            add = action.get("add")
+            if not add:
+                continue
+            values = pq.read_table(
+                os.path.join(uri, unquote(add["path"])), columns=[column]
+            ).column(column)
+            stats = json.loads(add["stats"])
+            stats["minValues"][column] = render(pc.min(values).as_py())
+            stats["maxValues"][column] = render(pc.max(values).as_py())
+            add["stats"] = json.dumps(stats)
+        with open(os.path.join(log, name), "w") as fh:
+            fh.write("".join(json.dumps(a) + "\n" for a in actions))
+    invalidate_snapshot_cache(uri)
+
+
+TENTHS = [decimal.Decimal(i) / 10 for i in range(1, 21)]
+
+
+def decimal_numbers(spark, uri):
+    # m = 0.1 .. 2.0 in 4 files, with m's bounds as JSON numbers (as
+    # delta-spark and delta-rs write them): 0.1, 1.1 and 1.6 parse to
+    # floats just above the file's true min
+    rows = [(m, i) for i, m in enumerate(TENTHS)]
+    df = local_frame(spark, rows, "m decimal(10,2), v int")
+    write_delta(df.repartitionByRange(4, "m"), uri)
+    restate_stats(uri, "m", float)
+
+
+SUB_MS = [
+    dt.datetime(2024, 1, 1, 12, 0, 0, 700) + dt.timedelta(hours=i)
+    for i in range(20)
+]
+
+
+def ntz_ms_stats(spark, uri):
+    # n on a sub-millisecond instant in 4 files, with n's bounds
+    # truncated to the millisecond (as delta-spark writes them)
+    rows = [(n, i) for i, n in enumerate(SUB_MS)]
+    df = local_frame(spark, rows, "n timestamp_ntz, v int")
+    write_delta(df.repartitionByRange(4, "n"), uri)
+    restate_stats(uri, "n", lambda v: v.isoformat(timespec="milliseconds"))
+
+
 def with_dvs(spark, uri):
     delete_delta(spark, uri, [Filter("k", "in", [4, 6, 30])])
 
@@ -187,6 +246,17 @@ CASES = {
         [typed_row(3, -1), typed_row(0, -2, m=decimal.Decimal("99.50"))],
         TYPED, {"on": ["m"]},
     ),
+    "decimal_stats_as_numbers": (
+        decimal_numbers, None,
+        [(TENTHS[0], -1), (TENTHS[10], -2), (TENTHS[15], -3),
+         (decimal.Decimal("9.99"), -4)],
+        "m decimal(10,2), v int", {"on": ["m"]},
+    ),
+    "timestamp_ntz_ms_stats": (
+        ntz_ms_stats, None,
+        [(SUB_MS[4], -1), (SUB_MS[9], -2), (dt.datetime(2030, 1, 1), -3)],
+        "n timestamp_ntz, v int", {"on": ["n"]},
+    ),
     "timestamp_key": (
         by_timestamp, None, timestamp_source, None, {"on": ["t"]},
     ),
@@ -237,7 +307,11 @@ def test_merge_on_a_column_named_count(spark, tmp_path, monkeypatch, key_max):
         DeltalakeTable("t", uri)(spark=spark).select("count", "v").collect()
     )
     assert got == {**{k: k for k in range(10)}, 3: -3, 20: -20}
-    dup = local_frame(spark, [(4, 1), (4, 2)], "count long, v long")
+    # past the bound the collect holds one key: it must be the repeated one
+    dup = local_frame(
+        spark, [(1, 1), (2, 2), (4, 1), (4, 2), (5, 5), (6, 6)],
+        "count long, v long",
+    )
     with pytest.raises(ValueError, match="duplicate merge keys"):
         merge_delta(spark, uri, dup, on=["count"])
 

@@ -3,13 +3,17 @@
 ``stats_prune`` sorts each ``in`` list once and bisects it per file;
 ``_partition_prune`` turns it into a set. Both must answer exactly as
 the per-file linear tests (``_filter_possible``, ``_eval_filter`` on
-the list) do, for every mix of member and envelope types.
+the list) do, for every mix of member and envelope types. Bounds stated
+by other writers (decimals as JSON numbers, timestamps truncated to the
+millisecond) must keep every file that can hold a member.
 """
 
 import datetime as dt
 import json
 import string
+from decimal import Decimal
 
+import pytest
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import types as T
@@ -180,3 +184,60 @@ def test_unhashable_partition_list_stays_a_list():
     f = Filter("p", "in", [[1], 2])
     assert _as_set(f) is f
     assert _eval_filter(2, _as_set(f))
+
+
+# -- bounds another writer states ---------------------------------------------
+
+
+def one_file(dtype, mn, mx):
+    stats = {
+        "numRecords": 5,
+        "minValues": {"c": mn},
+        "maxValues": {"c": mx},
+        "nullCount": {"c": 0},
+    }
+    return AddFile("f0", {}, stats=json.dumps(stats)), T.StructType(
+        [T.StructField("c", dtype)]
+    )
+
+
+@pytest.mark.parametrize("op, value", [
+    ("=", Decimal("0.1")), ("in", [Decimal("0.1"), Decimal("7")]),
+    ("<=", Decimal("0.1")), (">=", Decimal("0.3")),
+])
+def test_decimal_bounds_written_as_json_numbers_keep_the_file(op, value):
+    # 0.1 and 0.3 parse to floats just above 0.1 and just below 0.3
+    add, schema = one_file(T.DecimalType(10, 2), 0.1, 0.3)
+    assert stats_prune([add], [[Filter("c", op, value)]], schema) == [add]
+
+
+def test_a_decimal_literal_is_not_compared_with_a_float_bound():
+    # Spark compares a double column with a decimal literal as doubles
+    add, schema = one_file(T.DoubleType(), 0.1, 0.3)
+    for f in (Filter("c", "=", Decimal("0.1")),
+              Filter("c", "in", [Decimal("0.3")])):
+        assert stats_prune([add], [[f]], schema) == [add]
+
+
+NOON = dt.datetime(2024, 1, 1, 12)
+
+
+@pytest.mark.parametrize("op, value", [
+    ("=", NOON.replace(microsecond=700)),
+    ("in", [NOON.replace(microsecond=999)]),
+    (">", NOON.replace(microsecond=500)),
+    ("<", NOON - dt.timedelta(microseconds=500)),
+])
+def test_millisecond_timestamp_bounds_are_widened(op, value):
+    # both bounds truncated to the millisecond: the file may hold any
+    # instant in [11:59:59.999001, 12:00:00.000999]
+    ms = NOON.isoformat(timespec="milliseconds")
+    add, schema = one_file(T.TimestampNTZType(), ms, ms)
+    assert stats_prune([add], [[Filter("c", op, value)]], schema) == [add]
+
+
+def test_sub_millisecond_timestamp_bounds_stay_exact():
+    at = NOON.replace(microsecond=123).isoformat()
+    add, schema = one_file(T.TimestampNTZType(), at, at)
+    f = Filter("c", "=", NOON.replace(microsecond=124))
+    assert stats_prune([add], [[f]], schema) == []
