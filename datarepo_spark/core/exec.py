@@ -1,7 +1,7 @@
 """Per-query execution decisions shared by the operator modules: cache
 lifetime (scoped persists and their release), partition sizing for
-small cached intermediates, input spreading, the byte size of a
-plan's scanned input, and driver-side tables built as JVM relations."""
+small cached intermediates, input spreading, and driver-side tables
+built as JVM relations."""
 
 from __future__ import annotations
 
@@ -138,27 +138,6 @@ class dedup_scope:
                 df.unpersist()
             except Exception:
                 pass
-
-
-_LOGICAL_RELATION = "org.apache.spark.sql.execution.datasources.LogicalRelation"
-
-
-def plan_bytes(df: DataFrame) -> int:
-    """Bytes of file-backed input under ``df``: the sum of ``sizeInBytes``
-    over the optimized plan's ``LogicalRelation`` leaves, every other
-    leaf counting 0. The sizes come from the file index the scan already
-    listed, so this runs no job and stats no file, on any Hadoop
-    filesystem. Leaves only: Catalyst's whole-plan estimate scales
-    projections by default type widths, and an RDD-backed leaf reports
-    Long.MaxValue, so the plan-root figure would not be an input size."""
-    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
-    total = 0
-    it = leaves.iterator()
-    while it.hasNext():
-        leaf = it.next()
-        if leaf.getClass().getName() == _LOGICAL_RELATION:
-            total += int(leaf.stats().sizeInBytes())
-    return total
 
 
 _DATETIME = (T.DateType, T.TimestampType, T.TimestampNTZType)

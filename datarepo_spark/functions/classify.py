@@ -81,39 +81,13 @@ def nb_classify(
         ),
         6,
     ).cast("decimal(38,6)")
-    # Size-gated scoring grain (r14, VERDICT r13 #5 — shared gate with
-    # the perplexity family): instance grain while the (token, class)
-    # count table rides broadcast-fused joins (the r13 probe measured
-    # the tf form slower there); (doc, token, tf) grain once the
-    # corpus outgrows the broadcast regime — the score join then ships
-    # distinct pairs instead of every token occurrence ×|classes|, and
-    # the decimal tf×lp product keeps the per-(doc, class) fold
-    # bit-identical (pinned by TestTfGrainEquivalence).
-    from .text import _use_tf_grain
-
-    if _use_tf_grain(df.select(F.col(id_col), F.col(text_col))):
-        tf = toks.groupBy(id_col, "__tok").agg(
-            F.count(F.lit(1)).alias("__tf")
-        )
-        scored = (
-            tf.crossJoin(F.broadcast(label_set))
-            .join(counts, ["__tok", "__label"], "left")
-            .join(F.broadcast(totals), "__label")
-            .crossJoin(F.broadcast(vocab))
-            .select(
-                F.col(id_col),
-                "__label",
-                (lp * F.col("__tf").cast("decimal(10,0)")).alias("__lp"),
-            )
-        )
-    else:
-        scored = (
-            toks.crossJoin(F.broadcast(label_set))
-            .join(counts, ["__tok", "__label"], "left")
-            .join(F.broadcast(totals), "__label")
-            .crossJoin(F.broadcast(vocab))
-            .select(F.col(id_col), "__label", lp.alias("__lp"))
-        )
+    scored = (
+        toks.crossJoin(F.broadcast(label_set))
+        .join(counts, ["__tok", "__label"], "left")
+        .join(F.broadcast(totals), "__label")
+        .crossJoin(F.broadcast(vocab))
+        .select(F.col(id_col), "__label", lp.alias("__lp"))
+    )
     agg = scored.groupBy(id_col, "__label").agg(
         F.sum("__lp").alias("__s")
     )

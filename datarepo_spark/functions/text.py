@@ -349,36 +349,6 @@ def repetition_stats(
     return line_frac.join(gram_frac, id_col)
 
 
-# Corpus-size gate for the perplexity scoring grain (r14, VERDICT r13
-# #5). Instance grain (join every token OCCURRENCE against the vocab)
-# wins while the vocab broadcasts: the score join fuses into the map
-# stage and an extra (id, token) aggregate would only add an exchange
-# (r13 measured the tf-grain form 0.93-1.21 s vs 0.66 s instance-grain
-# at sf0.1). Past the point where the vocabulary no longer broadcasts,
-# the join becomes a token-keyed shuffle of every occurrence — zipfian
-# keys, corpus-sized — and the (doc, token, tf) grain wins: it shuffles
-# distinct pairs instead of occurrences (a 2-5x row reduction on web
-# text) and its per-pair tf×logp product is decimal-exact, so the fold
-# is bit-identical to the instance sum. The gate is the scanned corpus
-# byte size (``core.exec.plan_bytes``, so it holds on any filesystem): a
-# ~1 GiB tokenized web corpus has on the order of 10^6-10^7
-# distinct types ≈ 50-150 MB as a hashed relation — an order of
-# magnitude past the 10 MB auto-broadcast default. Overridable per
-# deployment via SPARK_GRAFT_TF_GRAIN_BYTES (0 forces tf-grain — also
-# how the parity tests exercise the fork at gate scale).
-_TF_GRAIN_BYTES_DEFAULT = 1 << 30
-
-
-def _use_tf_grain(df: DataFrame) -> bool:
-    import os
-
-    from ..core.exec import plan_bytes
-
-    raw = os.environ.get("SPARK_GRAFT_TF_GRAIN_BYTES")
-    threshold = int(raw) if raw else _TF_GRAIN_BYTES_DEFAULT
-    return plan_bytes(df) >= threshold
-
-
 def unigram_perplexity(
     df: DataFrame,
     text_col: str = "text",
@@ -408,11 +378,10 @@ def unigram_perplexity(
     r13: the input is spread_input-routed first — the tokenize +
     explode + both aggregates otherwise run on the one task a
     single-row-group parquet scan plans to (measured 0.87-1.26 s →
-    0.66 s at sf0.1). r14: the scoring grain is size-gated (see
-    ``_use_tf_grain``) — instance grain while the vocab broadcasts
-    (the r13 probe measured the tf form slower there), (doc, token,
-    tf) grain once the corpus outgrows the broadcast regime, with a
-    decimal-exact tf×logp product keeping the fold bit-identical."""
+    0.66 s at sf0.1). Scoring joins every token occurrence (instance
+    grain): r13 measured a (doc, token, tf) grain slower at sf0.1
+    (0.93-1.21 s vs 0.66 s), since the join fuses into the map stage
+    while the vocabulary broadcasts."""
     from ..core.exec import spread_input
     from .dedup import tokens_of
 
@@ -432,37 +401,6 @@ def unigram_perplexity(
         ),
         6,
     ).cast("decimal(38,6)")
-    if _use_tf_grain(base):
-        # (doc, token, tf) grain: the score join ships distinct pairs,
-        # not occurrences; tf × logp is a decimal-exact product so the
-        # per-doc fold equals the instance-grain sum bit-for-bit
-        # (pinned by TestTfGrainEquivalence).
-        tf = toks.groupBy(id_col, "__tok").agg(
-            F.count(F.lit(1)).alias("__tf")
-        )
-        scored = (
-            tf.join(vocab, "__tok")
-            .crossJoin(F.broadcast(totals))
-            .select(
-                F.col(id_col),
-                F.col("__tf"),
-                (logp * F.col("__tf").cast("decimal(10,0)")).alias(
-                    "__lp"
-                ),
-            )
-        )
-        return scored.groupBy(id_col).agg(
-            F.sum("__tf").cast("long").alias("n_tokens"),
-            F.round(
-                F.exp(
-                    -(
-                        F.sum("__lp").cast("double")
-                        / F.sum("__tf").cast("double")
-                    )
-                ),
-                4,
-            ).alias("perplexity"),
-        )
     scored = (
         toks.join(vocab, "__tok")
         .crossJoin(F.broadcast(totals))
@@ -578,35 +516,6 @@ def bigram_perplexity(
         ),
         6,
     ).cast("decimal(38,6)")
-    if _use_tf_grain(base):
-        # (doc, pair, tf) grain past the broadcast point — same
-        # decimal-exact tf×logp argument as unigram_perplexity.
-        tf = pairs.groupBy(id_col, "__w1", "__w2").agg(
-            F.count(F.lit(1)).alias("__tf")
-        )
-        scored = (
-            tf.join(counts, ["__w1", "__w2"])
-            .crossJoin(F.broadcast(vocab))
-            .select(
-                F.col(id_col),
-                F.col("__tf"),
-                (logp * F.col("__tf").cast("decimal(10,0)")).alias(
-                    "__lp"
-                ),
-            )
-        )
-        return scored.groupBy(id_col).agg(
-            F.sum("__tf").cast("long").alias("n_bigrams"),
-            F.round(
-                F.exp(
-                    -(
-                        F.sum("__lp").cast("double")
-                        / F.sum("__tf").cast("double")
-                    )
-                ),
-                4,
-            ).alias("perplexity"),
-        )
     scored = (
         pairs.join(counts, ["__w1", "__w2"])
         .crossJoin(F.broadcast(vocab))

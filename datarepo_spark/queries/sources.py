@@ -181,12 +181,7 @@ def _stream_partitions(
     (applyInPandasWithState) additionally floor at parallelism/2:
     their dominant cost is the per-group Arrow/state protocol, which
     parallelizes with cores (same probe: EWMA twin min 4.45 s at 16
-    stores vs 5.18/5.23 at 8/32 on local[32]).
-    ``SPARK_GRAFT_STREAM_SHUFFLE`` overrides everything for
-    deployments that know better."""
-    override = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE")
-    if override:
-        return max(1, int(override))
+    stores vs 5.18/5.23 at 8/32 on local[32])."""
     cores = max(spark.sparkContext.defaultParallelism, 1)
     # maxFilesPerTrigger=1 in every gate twin: one file per trigger
     trigger_bytes = _largest_file_bytes(spark, input_path) if input_path else 0

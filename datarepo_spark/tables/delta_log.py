@@ -5,13 +5,11 @@ active file set, table schema, and partition values at a version — the same
 job delta-rs does for the reference (deltalake_table.py:286-300) and the
 Delta PROTOCOL.md documents publicly.
 
-Why it exists: this environment ships no delta-spark jars, so
-``spark.read.format("delta")`` is unavailable. The log is small, driver-side
+Why it exists: it reads Delta without delta-spark jars, so
+``spark.read.format("delta")`` is never needed. The log is small, driver-side
 metadata (one record per data file — the same thing delta-spark's Snapshot
 holds on the driver); the *data* path stays fully distributed:
 ``spark.read.parquet(<active files>)`` with partition values joined back in.
-On a cluster with delta-spark present, `DeltalakeTable` uses the native
-reader instead (see delta_table.py).
 
 Supported: JSON commits, checkpoints in all three public layouts
 (classic single-part, classic multi-part — only when every part is
@@ -24,8 +22,11 @@ Refused loudly: any reader feature outside the supported allowlist.
 
 from __future__ import annotations
 
+import datetime as _dt
 import json
 import os
+import re
+import zoneinfo
 from dataclasses import dataclass, field
 from typing import Any, Optional
 
@@ -669,10 +670,42 @@ class DeltaLog:
         )
 
 
-def cast_partition_value(raw: Optional[str], dtype: T.DataType) -> Any:
+# a fixed-offset session time zone: +8, -05:30, UTC+08:00, GMT-5
+_OFFSET_RE = re.compile(
+    r"(?:UTC|GMT|UT)?([+-])(\d{1,2})(?::?(\d{2}))?(?::?(\d{2}))?"
+)
+
+
+def session_zone(spark) -> _dt.tzinfo:
+    """``spark.sql.session.timeZone`` as a ``tzinfo``: a region ID
+    (``America/Los_Angeles``, ``UTC``) or a fixed offset (``Z``,
+    ``+08:00``, ``GMT-5``)."""
+    name = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        return zoneinfo.ZoneInfo(name)
+    except (zoneinfo.ZoneInfoNotFoundError, ValueError):
+        pass
+    if name == "Z":
+        return _dt.timezone.utc
+    m = _OFFSET_RE.fullmatch(name)
+    if m is None:
+        raise ValueError(f"Unsupported session time zone: {name!r}")
+    sign, hh, mm, ss = m.groups()
+    offset = _dt.timedelta(
+        hours=int(hh), minutes=int(mm or 0), seconds=int(ss or 0)
+    )
+    return _dt.timezone(-offset if sign == "-" else offset)
+
+
+def cast_partition_value(
+    raw: Optional[str], dtype: T.DataType, tz: Optional[_dt.tzinfo]
+) -> Any:
     """Delta stores partition values as strings; cast per declared type
-    (protocol's 'Partition Value Serialization' rules)."""
-    import datetime as dt
+    (protocol's 'Partition Value Serialization' rules). A ``timestamp``
+    value is an instant: Spark writes it as wall time in the session
+    time zone ``tz`` (required for this type), or as ISO 8601 with ``Z``
+    or an offset, which then keeps that zone. ``timestamp_ntz`` stays
+    naive."""
     import decimal
 
     if raw is None or raw == "__HIVE_DEFAULT_PARTITION__":
@@ -686,7 +719,10 @@ def cast_partition_value(raw: Optional[str], dtype: T.DataType) -> Any:
     if isinstance(dtype, T.BooleanType):
         return raw == "true"
     if isinstance(dtype, T.DateType):
-        return dt.date.fromisoformat(raw)
-    if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
-        return dt.datetime.fromisoformat(raw)
+        return _dt.date.fromisoformat(raw)
+    if isinstance(dtype, T.TimestampType):
+        value = _dt.datetime.fromisoformat(raw)
+        return value if value.tzinfo else value.replace(tzinfo=tz)
+    if isinstance(dtype, T.TimestampNTZType):
+        return _dt.datetime.fromisoformat(raw)
     return raw

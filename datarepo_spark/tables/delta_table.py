@@ -6,28 +6,26 @@ with unique-column read-set widening, ``extra_cols`` computed columns,
 ``unique_columns`` dedup, schema normalization, empty-result synthesis,
 and ``version=`` time travel.
 
-Execution strategy, Spark-first:
-  1. If delta-spark is on the classpath, ``spark.read.format("delta")``
-     does everything natively (lazy end-to-end, data skipping, versionAsOf).
-  2. Otherwise (this environment), a pure-Python log replay
-     (:mod:`datarepo_spark.tables.delta_log`) resolves the active file set
-     on the driver — exactly what a Delta Snapshot is — after pruning files
-     whose ``partitionValues`` can't satisfy the filters. Data is then read
-     with Spark's native distributed parquet reader; partition columns are
-     restored with a broadcast join on the (globally unique) relative file
-     path against a driver-local relation (``core.exec.local_frame``: a
-     JVM ``LocalRelation``, so the broadcast starts no Python worker).
-     Small deletion-vector position sets are anti-joined the same way.
+Execution: a pure-Python log replay
+(:mod:`datarepo_spark.tables.delta_log`) resolves the active file set on
+the driver — exactly what a Delta Snapshot is — after pruning files whose
+``partitionValues`` or ``stats`` can't satisfy the filters. Data is then
+read with Spark's native distributed parquet reader; partition columns
+are restored with a broadcast join on the (globally unique) relative
+file path against a driver-local relation (``core.exec.local_frame``: a
+JVM ``LocalRelation``, so the broadcast starts no Python worker). Small
+deletion-vector position sets are anti-joined the same way. Reads,
+MERGE, DELETE and UPDATE all go through this one reader.
 
 Unlike the reference's eager fetchall-then-re-lazy flow (deltalake_table.py
-:244-257), both paths stay lazy: nothing executes until an action.
+:244-257), the read stays lazy: nothing executes until an action.
 """
 
 from __future__ import annotations
 
+import datetime as _dt
 import os
 import re
-import weakref
 from dataclasses import dataclass
 from typing import Any, Optional, Sequence, Union
 from urllib.parse import unquote
@@ -46,7 +44,12 @@ from ..core.filters import (
     normalize_filters,
     validate_filters,
 )
-from .delta_log import DeltaLog, DeltaSnapshot, cast_partition_value
+from .delta_log import (
+    DeltaLog,
+    DeltaSnapshot,
+    cast_partition_value,
+    session_zone,
+)
 from .delta_stats import stats_prune
 from .metadata import (
     TableColumn,
@@ -69,15 +72,6 @@ ExtraCol = tuple[str, Union[Column, str]]
 # the driver, memory is bounded by one file's DV. Tests monkeypatch
 # this to force the distributed path.
 DV_BROADCAST_MAX_CARDINALITY = 1_000_000
-
-# SparkContext → whether delta-spark is on its classpath. The classpath
-# is fixed for a JVM's life, and a failed probe costs a py4j round trip
-# that converts the ClassNotFoundException (about 20 ms), so each live
-# context probes once; a new context probes again.
-_NATIVE_DELTA: "weakref.WeakKeyDictionary[Any, bool]" = (
-    weakref.WeakKeyDictionary()
-)
-
 
 def _scan_key(path: str, nseg: int) -> str:
     """The driver-side join key matching the scan's ``__delta_rel``
@@ -176,30 +170,51 @@ def parse_duration(text: Optional[str]) -> Optional[float]:
     return float(m.group(1)) * _DURATION_UNITS[m.group(2)]
 
 
+def partition_zone(
+    spark: SparkSession, snapshot: DeltaSnapshot
+) -> Optional[_dt.tzinfo]:
+    """The session time zone when ``snapshot`` has a ``timestamp``
+    partition column to read (see ``cast_partition_value``), else None."""
+    if any(
+        isinstance(snapshot.partition_field(c).dataType, T.TimestampType)
+        for c in snapshot.partition_columns
+    ):
+        return session_zone(spark)
+    return None
+
+
 def _partition_prune(
-    snapshot: DeltaSnapshot, dnf: NormalizedFilters
+    snapshot: DeltaSnapshot,
+    dnf: NormalizedFilters,
+    tz: Optional[_dt.tzinfo],
 ) -> list:
     """Keep files whose partitionValues might satisfy the DNF. Filters on
     non-partition columns are unknown at this level → treated as TRUE.
     (The full predicate is re-applied to rows afterwards, so this only has
     to be sound, not complete.) With column mapping active,
-    partitionValues are keyed by PHYSICAL names (protocol rule)."""
+    partitionValues are keyed by PHYSICAL names (protocol rule). ``tz``
+    is :func:`partition_zone`'s answer."""
     if not dnf or not snapshot.partition_columns:
         return snapshot.files
     part_cols = set(snapshot.partition_columns)
 
-    def prepare(f: Filter) -> tuple:
+    def prepare(f: Filter) -> Optional[tuple]:
         # resolved once per call, not per file; an in-list becomes a set
         field = snapshot.partition_field(f.column)
+        if isinstance(field.dataType, T.TimestampType):
+            f = _as_instants(f, tz)
+            if f is None:
+                return None  # no sound comparison: the filter keeps all
         return snapshot.physical_name(field), field.dataType, _as_set(f)
 
     prepared = [
-        [prepare(f) for f in conj if f.column in part_cols] for conj in dnf
+        [p for p in (prepare(f) for f in conj if f.column in part_cols) if p]
+        for conj in dnf
     ]
 
     def conj_matches(conj: list, values: dict) -> bool:
         return all(
-            _eval_filter(cast_partition_value(values.get(key), dtype), f)
+            _eval_filter(cast_partition_value(values.get(key), dtype, tz), f)
             for key, dtype, f in conj
         )
 
@@ -208,6 +223,44 @@ def _partition_prune(
         for add in snapshot.files
         if any(conj_matches(conj, add.partition_values) for conj in prepared)
     ]
+
+
+def _instant(value: Any, tz: Optional[_dt.tzinfo]) -> Optional[_dt.datetime]:
+    """A ``timestamp`` filter literal as the instant Spark reads it as: a
+    naive ``datetime`` in the process's local time (py4j converts it
+    with ``time.mktime``), a string or a ``date`` in the session time
+    zone ``tz``. None when it is none of these."""
+    if isinstance(value, _dt.datetime):
+        return value if value.tzinfo else value.astimezone()
+    if isinstance(value, _dt.date):
+        return _dt.datetime.combine(value, _dt.time(), tz)
+    if isinstance(value, str):
+        try:
+            return cast_partition_value(value, T.TimestampType(), tz)
+        except ValueError:
+            return None
+    return None
+
+
+def _as_instants(f: Filter, tz: Optional[_dt.tzinfo]) -> Optional[Filter]:
+    """``f`` on a ``timestamp`` partition column with its literals made
+    aware (:func:`_instant`), so they compare with the partition values
+    as instants: a naive literal would compare unequal to every aware
+    value, or raise. None when a literal has no instant or the operator
+    does not compare instants (``contains``)."""
+    if f.operator in ("in", "not in"):
+        if not isinstance(f.value, (list, tuple, set, frozenset)):
+            return None
+        values = [None if v is None else _instant(v, tz) for v in f.value]
+        if any(i is None and v is not None for i, v in zip(values, f.value)):
+            return None
+        return f._replace(value=values)
+    if f.operator not in ("=", "!=", "<", "<=", ">", ">="):
+        return None
+    if f.value is None:
+        return f
+    value = _instant(f.value, tz)
+    return None if value is None else f._replace(value=value)
 
 
 def _as_set(f: Filter) -> Filter:
@@ -348,7 +401,6 @@ class DeltalakeTable:
         docs_filters: Sequence[Filter] = (),
         docs_columns: Optional[Sequence[str]] = None,
         table_metadata: Optional[TableMetadata] = None,
-        use_native: Optional[bool] = None,
         boto3_session: Optional[Any] = None,
         endpoint_url: Optional[str] = None,
         storage_options: Optional[dict[str, str]] = None,
@@ -360,7 +412,6 @@ class DeltalakeTable:
         self.extra_cols = list(extra_cols)
         self.docs_filters = list(docs_filters)
         self.docs_columns = list(docs_columns) if docs_columns else None
-        self.use_native = use_native
         # reference deltalake_table.py threads boto3_session/endpoint_url
         # into delta-rs storage_options (util.py:64-100); Spark-side these
         # become per-bucket fs.s3a.* confs (tables/storage.py).
@@ -373,24 +424,6 @@ class DeltalakeTable:
             table_type=TableType.DELTA.value,
             description=description,
         )
-
-    # -- native availability ------------------------------------------------
-
-    def _native_available(self, spark: SparkSession) -> bool:
-        if self.use_native is not None:
-            return self.use_native
-        sc = spark.sparkContext
-        found = _NATIVE_DELTA.get(sc)
-        if found is None:
-            try:
-                sc._jvm.java.lang.Class.forName(  # type: ignore[union-attr]
-                    "org.apache.spark.sql.delta.DeltaLog"
-                )
-                found = True
-            except Exception:
-                found = False
-            _NATIVE_DELTA[sc] = found
-        return found
 
     # -- read ----------------------------------------------------------------
 
@@ -443,37 +476,17 @@ class DeltalakeTable:
         else:
             dnf = normalize_filters(filters)
 
-        if self._native_available(session):
-            df, snapshot = self._read_native(session, version), None
-        else:
-            snapshot = DeltaLog(self.uri).snapshot(
-                version,
-                cache_ttl=(
-                    cache_options.ttl_seconds() if cache_options else None
-                ),
-                file_cache_path=(
-                    cache_options.file_cache_path if cache_options else None
-                ),
-            )
-            df = self._read_from_log(session, snapshot, dnf)
-            if df is None:  # no files after pruning → exact-schema empty
-                return self._finish(
-                    empty_normalized_df(session, self._declared_schema(snapshot)),
-                    sql_filter,
-                    dnf,
-                    columns,
-                    session,
-                    snapshot,
-                )
-        return self._finish(df, sql_filter, dnf, columns, session, snapshot)
-
-    def _read_native(
-        self, spark: SparkSession, version: Optional[int]
-    ) -> DataFrame:
-        reader = spark.read.format("delta")
-        if version is not None:
-            reader = reader.option("versionAsOf", str(version))
-        return reader.load(self.uri)
+        snapshot = DeltaLog(self.uri).snapshot(
+            version,
+            cache_ttl=cache_options.ttl_seconds() if cache_options else None,
+            file_cache_path=(
+                cache_options.file_cache_path if cache_options else None
+            ),
+        )
+        df = self._read_from_log(session, snapshot, dnf)
+        if df is None:  # no files after pruning → exact-schema empty
+            df = empty_normalized_df(session, self._declared_schema(snapshot))
+        return self._finish(df, sql_filter, dnf, columns, snapshot)
 
     def _read_from_log(
         self,
@@ -488,7 +501,8 @@ class DeltalakeTable:
         matched keys, the copy-on-write rewrite unit. ``keep_pos=True``
         additionally keeps ``__delta_pos`` (each LIVE row's physical
         parquet row index) — delete_delta's deletion-vector coordinate."""
-        files = _partition_prune(snapshot, dnf)
+        tz = partition_zone(spark, snapshot)
+        files = _partition_prune(snapshot, dnf, tz)
         # Second pruning axis: each surviving file's add.stats envelope
         # (numRecords/minValues/maxValues/nullCount) vs the same DNF.
         # Partition pruning cuts along the layout; stats pruning cuts
@@ -575,6 +589,7 @@ class DeltalakeTable:
                                 snapshot.physical_name(f)
                             ),
                             f.dataType,
+                            tz,
                         )
                         for f in part_fields
                     ]
@@ -686,8 +701,7 @@ class DeltalakeTable:
         sql_filter: Optional[str],
         dnf: NormalizedFilters,
         columns: Optional[Sequence[str]],
-        spark: SparkSession,
-        snapshot: Optional[DeltaSnapshot],
+        snapshot: DeltaSnapshot,
     ) -> DataFrame:
         schema = self._declared_schema(snapshot)
         extra_names = [name for name, _ in self.extra_cols]

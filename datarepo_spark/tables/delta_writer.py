@@ -1,9 +1,8 @@
 """Delta Lake write path: append/overwrite a DataFrame as a Delta commit.
 
 The reference library is read-only (SURVEY.md §2A: "no write paths") — but
-an engine that reads Delta should also land data transactionally. With
-delta-spark jars present, ``df.write.format("delta")`` is the native path;
-this module provides the jar-less fallback that mirrors
+an engine that reads Delta should also land data transactionally. This
+module is the jar-less write path that mirrors
 :mod:`datarepo_spark.tables.delta_log`: write partitioned parquet with
 Spark's distributed writer, then append one atomic JSON commit describing
 the files (public Delta protocol actions).
@@ -1338,9 +1337,11 @@ def compact(
                 f"(got {sorted(non_part)}): file-level scoping on data "
                 f"columns would need a scan, which defeats the point"
             )
-        from .delta_table import _partition_prune
+        from .delta_table import _partition_prune, partition_zone
 
-        candidates = _partition_prune(snapshot, dnf)
+        candidates = _partition_prune(
+            snapshot, dnf, partition_zone(spark, snapshot)
+        )
 
     groups: dict[tuple, list] = {}
     for f in candidates:

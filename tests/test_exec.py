@@ -1,7 +1,8 @@
 """The single points of the execution layer: one query-registration
-point (datarepo_spark/queries/__init__.py), one plan byte-size probe
-(core.exec.plan_bytes), the Hadoop-FileSystem stream-trigger probe,
-and the one place driver-side rows become frames (core.exec.local_frame)."""
+point (datarepo_spark/queries/__init__.py), the Hadoop-FileSystem
+stream-trigger probe, the one place driver-side rows become frames
+(core.exec.local_frame) and the Delta partition values they carry, and
+the one environment variable the package reads."""
 
 import datetime as dt
 import decimal
@@ -12,6 +13,7 @@ import re
 import subprocess
 import sys
 import time
+import zoneinfo
 from contextlib import contextmanager
 from types import SimpleNamespace
 
@@ -19,9 +21,10 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from datarepo_spark.core.exec import local_frame, plan_bytes
+from datarepo_spark.core.exec import local_frame
 from datarepo_spark.core.filters import Filter
 from datarepo_spark.tables import delta_table
+from datarepo_spark.tables.delta_log import cast_partition_value, session_zone
 from datarepo_spark.tables.delta_table import DeltalakeTable
 from datarepo_spark.tables.delta_writer import delete_delta, write_delta
 from datarepo_spark.tables.normalize import empty_normalized_df
@@ -70,25 +73,6 @@ def test_registry_import_registers_every_query_in_module_order():
     names, mods = json.loads(out.strip().splitlines()[-1])
     assert set(names) == scanned
     assert mods == QUERY_MODULES
-
-
-def test_plan_bytes_is_the_scanned_file_size(spark, sf_dir):
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    on_disk = sum(
-        os.path.getsize(uri[len("file:"):] if uri.startswith("file:") else uri)
-        for uri in docs.inputFiles()
-    )
-    assert on_disk > 0
-    assert plan_bytes(docs.select("doc_id", "text")) == on_disk
-
-
-def test_plan_bytes_is_zero_without_file_input(spark, sf_dir):
-    rdd_backed = spark.createDataFrame(
-        spark.sparkContext.parallelize([(1, "a")]), ["doc_id", "text"]
-    )
-    assert plan_bytes(rdd_backed) == 0
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    assert plan_bytes(docs.select("doc_id").localCheckpoint()) == 0
 
 
 def test_stream_trigger_probe_reads_uris_like_paths(spark, tmp_path):
@@ -257,6 +241,102 @@ def test_partitioned_delta_read_matches_the_list_path(
     assert sum(r[-1] is None for r in new) == 2
 
 
+# Instants whose partition values are written in the session time zone
+# (UTC here): the first is 2020-10-31 17:30 in Los Angeles, the next two
+# are both 01:30 there (the fall-back hour), the last is after the
+# spring-forward gap.
+STAMPS = [
+    "2020-11-01 00:30:00",
+    "2020-11-01 08:30:00",
+    "2020-11-01 09:30:00",
+    "2020-03-08 10:30:00.25",
+]
+
+
+def utc(*args):
+    return dt.datetime(*args, tzinfo=dt.timezone.utc)
+
+
+@pytest.fixture(scope="module")
+def ts_partitions(spark, tmp_path_factory):
+    """A Delta table partitioned by ``timestamp`` column ``ts``; data
+    column ``t`` holds the same instant in each row."""
+    uri = str(tmp_path_factory.mktemp("ts_parts") / "t")
+    df = local_frame(
+        spark, [(s, i) for i, s in enumerate(STAMPS)], "s string, v int"
+    ).selectExpr("CAST(s AS TIMESTAMP) AS ts", "CAST(s AS TIMESTAMP) AS t", "v")
+    write_delta(df, uri, partition_by=["ts"])
+    return uri
+
+
+@pytest.mark.parametrize("tz", TZS)
+def test_timestamp_partition_reads_the_instant_written(
+    spark, ts_partitions, tz
+):
+    """A ``timestamp`` partition column reads back the instant written,
+    whatever the process's time zone, and its files prune by instant:
+    an aware, a naive (process-local, as Spark reads it) and a string
+    (session time zone) literal each keep exactly the matching files."""
+    table = DeltalakeTable("t", ts_partitions)
+    with process_tz(tz):
+        df = table(spark=spark)
+        micros = df.selectExpr("unix_micros(ts)", "unix_micros(t)").collect()
+        assert len(micros) == len(STAMPS)
+        assert all(a == b for a, b in micros)
+        assert all(r.ts == r.t for r in df.collect())
+        local = utc(2020, 11, 1, 0, 30).astimezone().replace(tzinfo=None)
+        cases = [
+            (Filter("ts", "=", utc(2020, 11, 1, 0, 30)), [0]),
+            (Filter("ts", "=", local), [0]),
+            (Filter("ts", "=", "2020-11-01 09:30:00"), [2]),
+            (Filter("ts", ">=", utc(2020, 11, 1, 8)), [1, 2]),
+            (Filter("ts", "<", dt.date(2020, 11, 1)), [3]),
+            (
+                Filter(
+                    "ts", "in",
+                    [utc(2020, 11, 1, 8, 30), utc(2020, 3, 8, 10, 30, 0, 250000)],
+                ),
+                [1, 3],
+            ),
+            (Filter("ts", "not in", [local]), [1, 2, 3]),
+        ]
+        for flt, want in cases:
+            got = table(filters=[flt], spark=spark)
+            assert sorted(r.v for r in got.collect()) == want, flt
+            assert len(got.inputFiles()) == len(want), flt
+
+
+def test_partition_value_zones():
+    """A naive ``timestamp`` partition value is wall time in the session
+    time zone; one with ``Z`` or an offset keeps its zone; a
+    ``timestamp_ntz`` value stays naive."""
+    la = zoneinfo.ZoneInfo("America/Los_Angeles")
+    ts, ntz = T.TimestampType(), T.TimestampNTZType()
+    assert cast_partition_value("2020-11-01 00:30:00", ts, la) == utc(
+        2020, 11, 1, 7, 30
+    )
+    assert cast_partition_value("2020-11-01T00:30:00Z", ts, la) == utc(
+        2020, 11, 1, 0, 30
+    )
+    assert cast_partition_value(
+        "2020-11-01 00:30:00.5+05:30", ts, la
+    ) == utc(2020, 10, 31, 19, 0, 0, 500000)
+    assert cast_partition_value("2020-11-01 00:30:00", ntz, la) == (
+        dt.datetime(2020, 11, 1, 0, 30)
+    )
+
+
+@pytest.mark.parametrize(
+    "name, minutes",
+    [("UTC", 0), ("America/Los_Angeles", -480), ("Z", 0), ("+05:30", 330),
+     ("GMT-5", -300), ("UTC+08:00", 480)],
+)
+def test_session_zone_reads_region_ids_and_offsets(name, minutes):
+    session = SimpleNamespace(conf=SimpleNamespace(get=lambda key: name))
+    offset = session_zone(session).utcoffset(dt.datetime(2020, 1, 1))
+    assert offset == dt.timedelta(minutes=minutes)
+
+
 def test_delta_side_tables_plan_as_local_relations(
     spark, typed_partitions, tmp_path
 ):
@@ -296,33 +376,30 @@ def test_driver_rows_become_frames_only_in_exec():
     assert offenders == []
 
 
-class ProbeContext:
-    """A SparkContext stand-in whose JVM counts ``Class.forName`` calls
-    and finds no class."""
-
-    def __init__(self):
-        self.calls = []
-        lang = SimpleNamespace(Class=SimpleNamespace(forName=self.for_name))
-        self._jvm = SimpleNamespace(java=SimpleNamespace(lang=lang))
-
-    def for_name(self, cls):
-        self.calls.append(cls)
-        raise RuntimeError("java.lang.ClassNotFoundException")
+# a read of a named environment variable; any other mention of
+# ``environ``/``getenv`` is reported by line
+ENV_ACCESS = re.compile(r"\b(?:environ|getenv)\b")
+ENV_READ = re.compile(
+    r"""\b(?:environ\.get|getenv)\(\s*["']([^"']+)["']"""
+    r"""|\benviron\[\s*["']([^"']+)["']"""
+)
 
 
-def test_native_delta_probe_runs_once_per_context():
-    """The delta-spark classpath probe is answered once per live
-    SparkContext; a new context probes again and ``use_native=``
-    skips the probe."""
-    table = DeltalakeTable("t", "/unused")
-    sc = ProbeContext()
-    assert table._native_available(SimpleNamespace(sparkContext=sc)) is False
-    assert table._native_available(SimpleNamespace(sparkContext=sc)) is False
-    assert len(sc.calls) == 1
-    sc2 = ProbeContext()
-    assert table._native_available(SimpleNamespace(sparkContext=sc2)) is False
-    assert len(sc2.calls) == 1
-    sc3 = ProbeContext()
-    forced = DeltalakeTable("t", "/unused", use_native=True)
-    assert forced._native_available(SimpleNamespace(sparkContext=sc3))
-    assert sc3.calls == []
+def test_the_package_reads_one_environment_variable():
+    """Behaviour is chosen by arguments and Spark confs. The package
+    reads one environment variable, ``SPARK_GRAFT_CPUS`` (the local
+    master's core count)."""
+    names, unnamed = set(), []
+    for path in glob.glob(
+        os.path.join(ROOT, "datarepo_spark", "**", "*.py"), recursive=True
+    ):
+        with open(path) as fh:
+            for n, line in enumerate(fh, 1):
+                if not ENV_ACCESS.search(line):
+                    continue
+                reads = ENV_READ.findall(line)
+                names |= {a or b for a, b in reads}
+                if not reads:
+                    unnamed.append(f"{os.path.relpath(path, ROOT)}:{n}")
+    assert names == {"SPARK_GRAFT_CPUS"}
+    assert unnamed == []

@@ -1681,72 +1681,3 @@ class TestSpreadInput:
         df = spark.range(100).withColumnRenamed("id", "doc_id")
         df = df.repartition(4, "doc_id")
         assert spread_input(df, "doc_id") is df
-
-
-class TestTfGrainEquivalence:
-    """Pins the r14 size-gated scoring grain of the perplexity family
-    (VERDICT r13 #5): past the corpus size where the vocabulary stops
-    broadcasting, scoring switches from instance grain to
-    (doc, token, tf) grain. The fork must be (a) bit-identical — the
-    decimal tf×logp product equals the instance-grain decimal sum for
-    every document — and (b) plan-visible — the tf aggregate appears
-    only in the tf-grain plan. SPARK_GRAFT_TF_GRAIN_BYTES=0 forces the
-    tf branch at gate scale."""
-
-    def _docs(self, spark, sf_dir):
-        return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-    def _rows(self, df):
-        return sorted(tuple(r) for r in df.collect())
-
-    def test_unigram_bit_identical(self, spark, sf_dir, monkeypatch):
-        from datarepo_spark.functions.text import unigram_perplexity
-
-        docs = self._docs(spark, sf_dir)
-        monkeypatch.delenv("SPARK_GRAFT_TF_GRAIN_BYTES", raising=False)
-        inst = self._rows(unigram_perplexity(docs))
-        monkeypatch.setenv("SPARK_GRAFT_TF_GRAIN_BYTES", "0")
-        tfg = self._rows(unigram_perplexity(docs))
-        assert inst == tfg
-
-    def test_bigram_bit_identical(self, spark, sf_dir, monkeypatch):
-        from datarepo_spark.functions.text import bigram_perplexity
-
-        docs = self._docs(spark, sf_dir)
-        monkeypatch.delenv("SPARK_GRAFT_TF_GRAIN_BYTES", raising=False)
-        inst = self._rows(bigram_perplexity(docs))
-        monkeypatch.setenv("SPARK_GRAFT_TF_GRAIN_BYTES", "0")
-        tfg = self._rows(bigram_perplexity(docs))
-        assert inst == tfg
-
-    def test_plan_forks_on_threshold(self, spark, sf_dir, monkeypatch):
-        from datarepo_spark.functions.text import unigram_perplexity
-
-        docs = self._docs(spark, sf_dir)
-        monkeypatch.delenv("SPARK_GRAFT_TF_GRAIN_BYTES", raising=False)
-        inst_plan = unigram_perplexity(docs)._jdf.queryExecution().toString()
-        monkeypatch.setenv("SPARK_GRAFT_TF_GRAIN_BYTES", "0")
-        tf_plan = unigram_perplexity(docs)._jdf.queryExecution().toString()
-        assert "__tf" not in inst_plan
-        assert "__tf" in tf_plan
-
-    def test_default_threshold_keeps_instance_grain_at_gate_scale(
-        self, spark, sf_dir, monkeypatch
-    ):
-        from datarepo_spark.functions.text import _use_tf_grain
-
-        monkeypatch.delenv("SPARK_GRAFT_TF_GRAIN_BYTES", raising=False)
-        docs = self._docs(spark, sf_dir).select("doc_id", "text")
-        assert _use_tf_grain(docs) is False
-        monkeypatch.setenv("SPARK_GRAFT_TF_GRAIN_BYTES", "1")
-        assert _use_tf_grain(docs) is True
-
-    def test_nb_bit_identical(self, spark, sf_dir, monkeypatch):
-        from datarepo_spark.functions.classify import nb_classify
-
-        docs = self._docs(spark, sf_dir)
-        monkeypatch.delenv("SPARK_GRAFT_TF_GRAIN_BYTES", raising=False)
-        inst = self._rows(nb_classify(docs))
-        monkeypatch.setenv("SPARK_GRAFT_TF_GRAIN_BYTES", "0")
-        tfg = self._rows(nb_classify(docs))
-        assert inst == tfg
