@@ -670,31 +670,20 @@ class DeltaLog:
         )
 
 
-# a fixed-offset session time zone: +8, -05:30, UTC+08:00, GMT-5
-_OFFSET_RE = re.compile(
-    r"(?:UTC|GMT|UT)?([+-])(\d{1,2})(?::?(\d{2}))?(?::?(\d{2}))?"
-)
-
-
 def session_zone(spark) -> _dt.tzinfo:
-    """``spark.sql.session.timeZone`` as a ``tzinfo``: a region ID
-    (``America/Los_Angeles``, ``UTC``) or a fixed offset (``Z``,
-    ``+08:00``, ``GMT-5``)."""
-    name = spark.conf.get("spark.sql.session.timeZone")
-    try:
-        return zoneinfo.ZoneInfo(name)
-    except (zoneinfo.ZoneInfoNotFoundError, ValueError):
-        pass
-    if name == "Z":
-        return _dt.timezone.utc
-    m = _OFFSET_RE.fullmatch(name)
-    if m is None:
-        raise ValueError(f"Unsupported session time zone: {name!r}")
-    sign, hh, mm, ss = m.groups()
-    offset = _dt.timedelta(
-        hours=int(hh), minutes=int(mm or 0), seconds=int(ss or 0)
+    """``spark.sql.session.timeZone`` as a ``tzinfo``, resolved by
+    Spark itself (region IDs, short IDs such as ``PST``, offsets such as
+    ``+8`` or ``GMT-5``): a fixed offset, or the region's ``ZoneInfo``
+    (pandas, a dependency, brings the ``tzdata`` package)."""
+    zone = spark._jvm.org.apache.spark.sql.catalyst.util.DateTimeUtils.getZoneId(
+        spark.conf.get("spark.sql.session.timeZone")
     )
-    return _dt.timezone(-offset if sign == "-" else offset)
+    rules = zone.getRules()
+    if rules.isFixedOffset():
+        epoch = spark._jvm.java.time.Instant.EPOCH
+        seconds = rules.getOffset(epoch).getTotalSeconds()
+        return _dt.timezone(_dt.timedelta(seconds=seconds))
+    return zoneinfo.ZoneInfo(zone.getId())
 
 
 def cast_partition_value(
@@ -702,10 +691,13 @@ def cast_partition_value(
 ) -> Any:
     """Delta stores partition values as strings; cast per declared type
     (protocol's 'Partition Value Serialization' rules). A ``timestamp``
-    value is an instant: Spark writes it as wall time in the session
-    time zone ``tz`` (required for this type), or as ISO 8601 with ``Z``
-    or an offset, which then keeps that zone. ``timestamp_ntz`` stays
-    naive."""
+    value is an instant, returned in UTC: Spark writes it as wall time in
+    the session time zone ``tz`` (required for this type; an ambiguous
+    or skipped wall time takes the offset in force before the change,
+    as Spark does), or as
+    ISO 8601 with ``Z`` or an offset. A UTC value's equality and hash do
+    not depend on ``fold``, as a region zone's do. ``timestamp_ntz``
+    stays naive."""
     import decimal
 
     if raw is None or raw == "__HIVE_DEFAULT_PARTITION__":
@@ -722,7 +714,9 @@ def cast_partition_value(
         return _dt.date.fromisoformat(raw)
     if isinstance(dtype, T.TimestampType):
         value = _dt.datetime.fromisoformat(raw)
-        return value if value.tzinfo else value.replace(tzinfo=tz)
+        if not value.tzinfo:
+            value = value.replace(tzinfo=tz)
+        return value.astimezone(_dt.timezone.utc)
     if isinstance(dtype, T.TimestampNTZType):
         return _dt.datetime.fromisoformat(raw)
     return raw

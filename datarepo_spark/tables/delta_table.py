@@ -225,15 +225,20 @@ def _partition_prune(
     ]
 
 
+_EPOCH = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
+
+
 def _instant(value: Any, tz: Optional[_dt.tzinfo]) -> Optional[_dt.datetime]:
-    """A ``timestamp`` filter literal as the instant Spark reads it as: a
-    naive ``datetime`` in the process's local time (py4j converts it
-    with ``time.mktime``), a string or a ``date`` in the session time
-    zone ``tz``. None when it is none of these."""
+    """A ``timestamp`` filter literal as the UTC instant Spark reads it
+    as: a ``datetime`` as pyspark sends it (a naive one in the process's
+    local time), a string or a ``date`` in the session time zone ``tz``.
+    None when it is none of these."""
     if isinstance(value, _dt.datetime):
-        return value if value.tzinfo else value.astimezone()
+        micros = T.TimestampType().toInternal(value)
+        return _EPOCH + _dt.timedelta(microseconds=micros)
     if isinstance(value, _dt.date):
-        return _dt.datetime.combine(value, _dt.time(), tz)
+        midnight = _dt.datetime.combine(value, _dt.time(), tz)
+        return midnight.astimezone(_dt.timezone.utc)
     if isinstance(value, str):
         try:
             return cast_partition_value(value, T.TimestampType(), tz)
@@ -244,10 +249,10 @@ def _instant(value: Any, tz: Optional[_dt.tzinfo]) -> Optional[_dt.datetime]:
 
 def _as_instants(f: Filter, tz: Optional[_dt.tzinfo]) -> Optional[Filter]:
     """``f`` on a ``timestamp`` partition column with its literals made
-    aware (:func:`_instant`), so they compare with the partition values
-    as instants: a naive literal would compare unequal to every aware
-    value, or raise. None when a literal has no instant or the operator
-    does not compare instants (``contains``)."""
+    UTC instants (:func:`_instant`), as the partition values are: a
+    naive literal would compare unequal to every aware value, or raise.
+    None when a literal has no instant or the operator does not compare
+    instants (``contains``)."""
     if f.operator in ("in", "not in"):
         if not isinstance(f.value, (list, tuple, set, frozenset)):
             return None

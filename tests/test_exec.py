@@ -15,7 +15,6 @@ import sys
 import time
 import zoneinfo
 from contextlib import contextmanager
-from types import SimpleNamespace
 
 import pytest
 from pyspark.sql import functions as F
@@ -326,15 +325,55 @@ def test_partition_value_zones():
     )
 
 
+@contextmanager
+def session_tz(spark, name):
+    """Set ``spark.sql.session.timeZone`` for the block."""
+    key = "spark.sql.session.timeZone"
+    old = spark.conf.get(key)
+    spark.conf.set(key, name)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+@pytest.mark.parametrize("tz", TZS)
+def test_fall_back_hour_partition_keeps_its_file(spark, tmp_path, tz):
+    """Under a Los Angeles session, 08:30Z is written as the partition
+    value ``2020-11-01 01:30:00``, a wall time the fall-back hour makes
+    ambiguous (its offset depends on ``fold``). Aware, naive and string
+    literals for that instant, by ``=`` and ``in``, keep its file."""
+    uri = str(tmp_path / "t")
+    stamps = [utc(2020, 11, 1, 7, 30), utc(2020, 11, 1, 8, 30)]
+    with session_tz(spark, "America/Los_Angeles"), process_tz(tz):
+        df = local_frame(
+            spark,
+            [(s, s, i) for i, s in enumerate(stamps)],
+            "ts timestamp, t timestamp, v int",
+        )
+        write_delta(df, uri, partition_by=["ts"])
+        table = DeltalakeTable("t", uri)
+        assert all(r.ts == r.t for r in table(spark=spark).collect())
+        naive = stamps[1].astimezone().replace(tzinfo=None)
+        for value in [stamps[1], naive, "2020-11-01 01:30:00"]:
+            for flt in [Filter("ts", "=", value), Filter("ts", "in", [value])]:
+                got = table(filters=[flt], spark=spark)
+                assert [r.v for r in got.collect()] == [1], flt
+                assert len(got.inputFiles()) == 1, flt
+
+
 @pytest.mark.parametrize(
     "name, minutes",
-    [("UTC", 0), ("America/Los_Angeles", -480), ("Z", 0), ("+05:30", 330),
+    [("UTC", 0), ("America/Los_Angeles", -480), ("PST", -480),
+     ("IST", 330), ("Z", 0), ("+05:30", 330), ("+8", 480),
      ("GMT-5", -300), ("UTC+08:00", 480)],
 )
-def test_session_zone_reads_region_ids_and_offsets(name, minutes):
-    session = SimpleNamespace(conf=SimpleNamespace(get=lambda key: name))
-    offset = session_zone(session).utcoffset(dt.datetime(2020, 1, 1))
-    assert offset == dt.timedelta(minutes=minutes)
+def test_session_zone_reads_zone_ids_as_spark_does(spark, name, minutes):
+    with session_tz(spark, name):
+        zone = session_zone(spark)
+    assert zone.utcoffset(dt.datetime(2020, 1, 1)) == dt.timedelta(
+        minutes=minutes
+    )
 
 
 def test_delta_side_tables_plan_as_local_relations(
