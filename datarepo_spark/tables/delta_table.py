@@ -10,8 +10,14 @@ Execution: a pure-Python log replay
 (:mod:`datarepo_spark.tables.delta_log`) resolves the active file set on
 the driver — exactly what a Delta Snapshot is — after pruning files whose
 ``partitionValues`` or ``stats`` can't satisfy the filters. Data is then
-read with Spark's native distributed parquet reader; partition columns
-are restored with a broadcast join on the (globally unique) relative
+read with Spark's native distributed parquet reader. When every kept
+file lies in Hive-style directories that spell its ``partitionValues``
+(``<column>=<value>/…``, see :func:`_hive_layout`), Spark's own
+partition discovery supplies the partition columns, parsed into the
+declared types in the session time zone, and filters on them become
+Spark partition filters. Any other layout (a shallow clone's absolute
+paths, column mapping, directory names that disagree with the log)
+restores them with a broadcast join on the (globally unique) relative
 file path against a driver-local relation (``core.exec.local_frame``: a
 JVM ``LocalRelation``, so the broadcast starts no Python worker). Small
 deletion-vector position sets are anti-joined the same way. Reads,
@@ -24,6 +30,7 @@ Unlike the reference's eager fetchall-then-re-lazy flow (deltalake_table.py
 from __future__ import annotations
 
 import datetime as _dt
+import decimal
 import os
 import re
 from dataclasses import dataclass
@@ -81,6 +88,89 @@ def _scan_key(path: str, nseg: int) -> str:
     the ABSOLUTE paths a shallow clone's log references."""
     segs = unquote(path).split("/")
     return "/".join(segs[-nseg:])
+
+
+_HIVE_ESCAPE = re.compile(r"%([0-9A-Fa-f]{2})")
+
+
+def _hive_unescape(text: str) -> str:
+    """Spark's ``unescapePathName``: each ``%XX`` becomes the one
+    character with that code (no UTF-8 decoding)."""
+    return _HIVE_ESCAPE.sub(lambda m: chr(int(m.group(1), 16)), text)
+
+
+# Partition value forms (the Delta protocol's serializations) that
+# Spark's partition discovery parses to what ``cast_partition_value``
+# reads. Any other form, e.g. another writer's ``inf``, takes the join
+# path; so does every type not listed.
+_DATE = r"[0-9]{4}-[0-9]{2}-[0-9]{2}"
+_WALL = _DATE + r"[ T][0-9]{2}:[0-9]{2}:[0-9]{2}(?:\.[0-9]{1,6})?"
+_SERIALIZED: list[tuple[tuple[type, ...], re.Pattern]] = [
+    ((T.StringType,), re.compile(r".*", re.S)),
+    ((T.ByteType, T.ShortType, T.IntegerType, T.LongType),
+     re.compile(r"-?[0-9]+")),
+    ((T.FloatType, T.DoubleType),
+     re.compile(r"-?(?:NaN|Infinity|[0-9]+(?:\.[0-9]*)?(?:[eE][-+]?[0-9]+)?)")),
+    ((T.BooleanType,), re.compile(r"true|false")),
+    ((T.DateType,), re.compile(_DATE)),
+    ((T.TimestampType,), re.compile(_WALL + "Z?")),
+    ((T.TimestampNTZType,), re.compile(_WALL)),
+]
+# Spark parses these types from the Hive-unescaped directory value, the
+# rest from the raw one
+_UNESCAPED = (T.StringType, T.TimestampType, T.TimestampNTZType)
+
+
+def _spark_parses(value: str, dtype: T.DataType) -> bool:
+    """Does Spark's partition discovery read ``value`` as
+    ``cast_partition_value`` does? A decimal must be written at the
+    column's scale: Spark keeps the digits and imposes the scale, so
+    ``1.5`` in a ``decimal(8,3)`` column would read as ``0.015``."""
+    if isinstance(dtype, T.DecimalType):
+        try:
+            _, digits, exponent = decimal.Decimal(value).as_tuple()
+        except decimal.InvalidOperation:
+            return False
+        return exponent == -dtype.scale and len(digits) <= dtype.precision
+    return any(
+        isinstance(dtype, types) and form.fullmatch(value) is not None
+        for types, form in _SERIALIZED
+    )
+
+
+def _hive_layout(snapshot: DeltaSnapshot, files: Sequence) -> bool:
+    """Does every file's relative path spell its partition values the
+    way Spark's partition discovery reads them? Each of the
+    ``len(partition_columns)`` directories must be
+    ``<column>=<value>`` in column order, ``value`` Hive-escaped and
+    equal to the log's ``partitionValues`` entry (or
+    ``__HIVE_DEFAULT_PARTITION__`` for null), and the entry in a form
+    Spark parses alike (:func:`_spark_parses`). An absolute path or a
+    URI (a shallow clone) has other segments, so it does not conform;
+    nor does a column-mapped table, whose directories carry physical
+    names."""
+    if snapshot.column_mapping_mode != "none":
+        return False
+    fields = [snapshot.partition_field(c) for c in snapshot.partition_columns]
+    for add in files:
+        segs = unquote(add.path).split("/")
+        if len(segs) != len(fields) + 1:
+            return False
+        for field, seg in zip(fields, segs):
+            # Spark's discovery fails on an empty value (``col=``)
+            name, _, raw = seg.partition("=")
+            if name != field.name or not raw:
+                return False
+            value = add.partition_values.get(field.name)
+            if raw == "__HIVE_DEFAULT_PARTITION__":
+                if value is not None:
+                    return False
+                continue
+            if isinstance(field.dataType, _UNESCAPED):
+                raw = _hive_unescape(raw)
+            if value != raw or not _spark_parses(value, field.dataType):
+                return False
+    return True
 
 
 def _dv_filter_map_in_pandas(
@@ -205,6 +295,8 @@ def _partition_prune(
             f = _as_instants(f, tz)
             if f is None:
                 return None  # no sound comparison: the filter keeps all
+        elif _mistyped(f, field.dataType):
+            return None
         return snapshot.physical_name(field), field.dataType, _as_set(f)
 
     prepared = [
@@ -266,6 +358,24 @@ def _as_instants(f: Filter, tz: Optional[_dt.tzinfo]) -> Optional[Filter]:
         return f
     value = _instant(f.value, tz)
     return None if value is None else f._replace(value=value)
+
+
+def _mistyped(f: Filter, dtype: T.DataType) -> bool:
+    """Is a literal of ``f`` a string against a column of another type,
+    or a non-null non-string against a string column? Spark casts one
+    side of such a comparison, while Python finds ``date(2024, 1, 1)``
+    and ``"2024-01-01"`` unequal, so the filter cannot prune; the row
+    filter in ``_finish`` applies Spark's cast."""
+    values = (
+        f.value
+        if f.operator in ("in", "not in")
+        and isinstance(f.value, (list, tuple, set, frozenset))
+        else [f.value]
+    )
+    want_str = isinstance(dtype, T.StringType)
+    return any(
+        v is not None and isinstance(v, str) != want_str for v in values
+    )
 
 
 def _as_set(f: Filter) -> Filter:
@@ -542,7 +652,21 @@ class DeltalakeTable:
         read_schema = (
             snapshot.physical_data_schema if mapping else snapshot.data_schema
         )
-        df = spark.read.schema(read_schema).parquet(*paths)
+        part_fields = [
+            snapshot.partition_field(c) for c in snapshot.partition_columns
+        ]
+        hive = bool(part_fields) and _hive_layout(snapshot, files)
+        if hive:
+            # Spark's partition discovery parses each directory value
+            # into the declared type (session time zone for timestamps)
+            # and turns filters on these columns into partition filters
+            df = (
+                spark.read.schema(T.StructType(read_schema.fields + part_fields))
+                .option("basePath", self.uri)
+                .parquet(*paths)
+            )
+        else:
+            df = spark.read.schema(read_schema).parquet(*paths)
         # Deletion vectors: soft-deleted (file, row_index) pairs must
         # vanish from every read. Capture the parquet row index at scan
         # time and anti-join the broadcast DV position set after the
@@ -550,38 +674,33 @@ class DeltalakeTable:
         has_dv = any(add.deletion_vector for add in files)
         if has_dv or keep_pos:
             df = df.withColumn("__delta_pos", F.col("_metadata.row_index"))
-        if (keep_rel or has_dv or keep_pos) and not snapshot.partition_columns:
-            segs = F.split(F.col("_metadata.file_path"), "/")
-            df = df.withColumn(
-                "__delta_rel",
-                F.url_decode(
-                    F.replace(
-                        F.element_at(segs, -1), F.lit("+"), F.lit("%2B")
-                    )
-                ),
-            )
-        if snapshot.partition_columns:
-            # Restore partition columns from partitionValues via a broadcast
-            # join keyed on the file's RELATIVE path — the only identifier
+        join_parts = bool(part_fields) and not hive
+        nseg = len(part_fields) + 1
+        if keep_rel or has_dv or keep_pos or join_parts:
+            # Each row's file as its RELATIVE path — the only identifier
             # the protocol guarantees unique (basenames can repeat across
             # partition dirs, e.g. compacted tables writing data.parquet
-            # per dir; a basename join would silently duplicate those
-            # files' rows). The relative path always has exactly
-            # n_partition_cols + 1 segments (one dir per partition column),
-            # so it's a fixed-size suffix of _metadata.file_path. Both
-            # sides normalize to the ON-DISK name: the driver percent-
-            # decodes the protocol's URL-encoded add.path; Spark's
+            # per dir). It always has exactly n_partition_cols + 1
+            # segments (one dir per partition column), so it's a
+            # fixed-size suffix of _metadata.file_path, normalized to the
+            # ON-DISK name as _scan_key does on the driver: Spark's
             # file_path is a URI (space→%20, %→%25), decoded with
             # url_decode after guarding literal '+' (URI paths keep '+'
             # verbatim; url_decode would turn it into a space).
-            part_fields = [
-                snapshot.partition_field(c) for c in snapshot.partition_columns
-            ]
+            segs = F.split(F.col("_metadata.file_path"), "/")
+            rel_uri = F.concat_ws("/", F.slice(segs, -nseg, nseg))
+            df = df.withColumn(
+                "__delta_rel",
+                F.url_decode(F.replace(rel_uri, F.lit("+"), F.lit("%2B"))),
+            )
+        if join_parts:
+            # Directories that do not spell the log's partitionValues:
+            # restore the partition columns from partitionValues with a
+            # broadcast join on __delta_rel.
             lookup_schema = T.StructType(
                 [T.StructField("__delta_rel", T.StringType(), False)]
                 + part_fields
             )
-            nseg = len(snapshot.partition_columns) + 1
             rows = [
                 tuple(
                     [_scan_key(add.path, nseg)]
@@ -602,17 +721,7 @@ class DeltalakeTable:
                 for add in files
             ]
             lookup = local_frame(spark, rows, lookup_schema)
-            segs = F.split(F.col("_metadata.file_path"), "/")
-            rel_uri = F.concat_ws("/", F.slice(segs, -nseg, nseg))
-            df = (
-                df.withColumn(
-                    "__delta_rel",
-                    F.url_decode(
-                        F.replace(rel_uri, F.lit("+"), F.lit("%2B"))
-                    ),
-                )
-                .join(F.broadcast(lookup), "__delta_rel", "left")
-            )
+            df = df.join(F.broadcast(lookup), "__delta_rel", "left")
         if has_dv:
             total_card = 0
             card_known = True
@@ -631,9 +740,8 @@ class DeltalakeTable:
                 # JVM-side (no Arrow transit of the data columns)
                 from .delta_dv import read_deletion_vector
 
-                dv_nseg = len(snapshot.partition_columns) + 1
                 dv_rows = [
-                    (_scan_key(add.path, dv_nseg), int(pos))
+                    (_scan_key(add.path, nseg), int(pos))
                     for add in files
                     if add.deletion_vector
                     for pos in read_deletion_vector(
@@ -680,8 +788,7 @@ class DeltalakeTable:
                     # or names are still physical (mapping).
                     df = df.filter(predicate)
                 df = _dv_filter_map_in_pandas(
-                    spark, df, self.uri, files,
-                    len(snapshot.partition_columns) + 1,
+                    spark, df, self.uri, files, nseg
                 )
             if not keep_pos:
                 df = df.drop("__delta_pos")

@@ -1626,16 +1626,19 @@ def merge_delta(
         ).drop("__delta_rel")
         # rows whose key is NOT in the source pass through unchanged
         pieces.append(aff_rows.join(src_keys, on, "left_anti"))
-        if when_matched == "update":
-            tgt_keys = target.select(*on).distinct()
+    upsert = when_matched == "update" and when_not_matched == "insert"
+    if upsert or (target is None and when_not_matched == "insert"):
+        # An upsert writes its matched source rows (semi join with the
+        # target's keys) and its unmatched ones (anti join, NULL keys
+        # included): together, the whole source.
+        pieces.append(source)
+    elif target is not None:
+        tgt_keys = target.select(*on).distinct()
+        if when_matched == "update" and affected:
             pieces.append(source.join(tgt_keys, on, "left_semi"))
-        # 'delete': matched rows simply don't reappear
-    if when_not_matched == "insert":
-        if target is not None:
-            tgt_keys = target.select(*on).distinct()
+        if when_not_matched == "insert":
             pieces.append(source.join(tgt_keys, on, "left_anti"))
-        else:
-            pieces.append(source)
+        # 'delete': matched rows simply don't reappear
 
     if not pieces and not affected:
         return {

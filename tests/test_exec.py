@@ -23,6 +23,7 @@ from pyspark.sql import types as T
 from datarepo_spark.core.exec import local_frame
 from datarepo_spark.core.filters import Filter
 from datarepo_spark.tables import delta_table
+from datarepo_spark.tables.clone import clone_delta
 from datarepo_spark.tables.delta_log import cast_partition_value, session_zone
 from datarepo_spark.tables.delta_table import DeltalakeTable
 from datarepo_spark.tables.delta_writer import delete_delta, write_delta
@@ -107,6 +108,18 @@ def process_tz(name):
         else:
             os.environ["TZ"] = old
         time.tzset()
+
+
+@contextmanager
+def session_tz(spark, name):
+    """Set ``spark.sql.session.timeZone`` for the block."""
+    key = "spark.sql.session.timeZone"
+    old = spark.conf.get(key)
+    spark.conf.set(key, name)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
 
 
 def list_path(spark, rows, schema):
@@ -228,16 +241,22 @@ def typed_partitions(spark, tmp_path_factory):
 def test_partitioned_delta_read_matches_the_list_path(
     spark, typed_partitions, tz, monkeypatch
 ):
-    """The partition lookup built by local_frame restores the same
-    partition values the list-built lookup restored."""
+    """Spark's partition discovery (the Hive-style path), the partition
+    lookup built by local_frame and the list-built lookup restore the
+    same partition values, in a UTC and a Los Angeles session."""
     table = DeltalakeTable("t", typed_partitions)
-    with process_tz(tz):
-        new = rows_of(table(spark=spark))
-        monkeypatch.setattr(delta_table, "local_frame", list_path)
-        old = rows_of(table(spark=spark))
-    assert len(new) == 4
-    assert new == old
-    assert sum(r[-1] is None for r in new) == 2
+    for zone in TZS:
+        with (
+            process_tz(tz), session_tz(spark, zone), monkeypatch.context() as m
+        ):
+            hive = rows_of(table(spark=spark))
+            m.setattr(delta_table, "_hive_layout", lambda *a: False)
+            joined = rows_of(table(spark=spark))
+            m.setattr(delta_table, "local_frame", list_path)
+            listed = rows_of(table(spark=spark))
+        assert len(hive) == 4
+        assert hive == joined == listed
+        assert sum(r[-1] is None for r in hive) == 2
 
 
 # Instants whose partition values are written in the session time zone
@@ -325,18 +344,6 @@ def test_partition_value_zones():
     )
 
 
-@contextmanager
-def session_tz(spark, name):
-    """Set ``spark.sql.session.timeZone`` for the block."""
-    key = "spark.sql.session.timeZone"
-    old = spark.conf.get(key)
-    spark.conf.set(key, name)
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
-
-
 @pytest.mark.parametrize("tz", TZS)
 def test_fall_back_hour_partition_keeps_its_file(spark, tmp_path, tz):
     """Under a Los Angeles session, 08:30Z is written as the partition
@@ -379,10 +386,18 @@ def test_session_zone_reads_zone_ids_as_spark_does(spark, name, minutes):
 def test_delta_side_tables_plan_as_local_relations(
     spark, typed_partitions, tmp_path
 ):
-    """Plan pins (no job runs): the partition lookup, a small DV
+    """Plan pins (no job runs): a Hive-style partitioned read takes its
+    partition columns from Spark's partition discovery, with no
+    broadcast and no driver-side relation; the partition lookup of
+    another layout (a shallow clone's absolute paths), a small DV
     position set and the empty result of a pruned-away read are JVM
     local relations, not Python RDDs."""
     part = executed_plan(DeltalakeTable("t", typed_partitions)(spark=spark))
+    for node in ("BroadcastExchange", "LocalTableScan", "ExistingRDD"):
+        assert node not in part
+    clone = str(tmp_path / "clone")
+    clone_delta(typed_partitions, clone)
+    cloned = executed_plan(DeltalakeTable("t", clone)(spark=spark))
     uri = str(tmp_path / "dv")
     write_delta(spark.range(20).withColumn("v", F.col("id") * 2), uri)
     delete_delta(spark, uri, [Filter("id", "=", 3)])
@@ -393,7 +408,7 @@ def test_delta_side_tables_plan_as_local_relations(
     empty = empty_normalized_df(
         spark, T.StructType([T.StructField("id", T.LongType())])
     )
-    for plan in (part, executed_plan(dv), executed_plan(empty)):
+    for plan in (cloned, executed_plan(dv), executed_plan(empty)):
         assert "LocalTableScan" in plan
         assert "ExistingRDD" not in plan
 

@@ -5,7 +5,9 @@
 stats pruning as one ``in`` filter per key column. Above the bound it
 scans the whole table. Both paths must leave the same table and rewrite
 the same files; the pruned one must open only the files that can hold a
-key and run no many-task file-listing job.
+key and run no many-task file-listing job. The cases on partitioned
+tables run twice: with the partition columns from Spark's partition
+discovery and from the join on file paths.
 """
 
 import datetime as dt
@@ -24,7 +26,7 @@ from pyspark.sql import functions as F
 
 from datarepo_spark.core.exec import local_frame
 from datarepo_spark.core.filters import Filter
-from datarepo_spark.tables import delta_writer
+from datarepo_spark.tables import delta_table, delta_writer
 from datarepo_spark.tables.delta_log import invalidate_snapshot_cache
 from datarepo_spark.tables.delta_table import DeltalakeTable
 from datarepo_spark.tables.delta_writer import (
@@ -111,6 +113,17 @@ def by_timestamp(spark, uri):
         spark, [(t, i) for i, t in enumerate(ts)], "t string, v int"
     ).selectExpr("CAST(t AS TIMESTAMP) AS t", "v")
     write_delta(df, uri, partition_by=["t"])
+
+
+STRING_PARTS = ["x/y=z%+:é#", "b c", "plain", None]
+
+
+def string_partitions(spark, uri):
+    # Partitioned by a string whose directories are Hive-escaped ("/",
+    # "=", "%", ":", "#"), hold a space or are the default directory.
+    rows = [(STRING_PARTS[k % 4], k, f"old-{k}") for k in range(12)]
+    df = local_frame(spark, rows, "s string, k long, v string")
+    write_delta(df, uri, partition_by=["s"])
 
 
 def timestamp_source(spark, uri):
@@ -260,13 +273,36 @@ CASES = {
     "timestamp_key": (
         by_timestamp, None, timestamp_source, None, {"on": ["t"]},
     ),
+    "string_partition": (
+        string_partitions, None,
+        [("x/y=z%+:é#", 4, "n4"), ("b c", 5, "n5"), (None, 3, "n3"),
+         ("new dir=", 99, "n99")],
+        "s string, k long, v string", {"on": ["s", "k"]},
+    ),
 }
+# the cases whose table is partitioned, so its reads can take either
+# path (delta_table._hive_layout)
+PARTITIONED = ["partition_key", "timestamp_key", "string_partition"]
 
 
 @pytest.mark.parametrize("case", list(CASES))
 def test_pruned_merge_equals_the_whole_table_merge(
     spark, bases, tmp_path, monkeypatch, case
 ):
+    check_pruned_merge(spark, bases, tmp_path, monkeypatch, case)
+
+
+@pytest.mark.parametrize("case", PARTITIONED)
+def test_pruned_merge_equals_the_whole_table_merge_on_the_join_path(
+    spark, bases, tmp_path, monkeypatch, case
+):
+    """The partitioned cases with every read restoring the partition
+    columns by the join on file paths."""
+    monkeypatch.setattr(delta_table, "_hive_layout", lambda *a: False)
+    check_pruned_merge(spark, bases, tmp_path, monkeypatch, case)
+
+
+def check_pruned_merge(spark, bases, tmp_path, monkeypatch, case):
     base, prepare, rows, ddl, kw = CASES[case]
     tz = "America/Los_Angeles" if case == "timestamp_key" else "UTC"
     with process_tz(tz):
