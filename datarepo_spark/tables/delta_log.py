@@ -23,7 +23,9 @@ Refused loudly: any reader feature outside the supported allowlist.
 from __future__ import annotations
 
 import datetime as _dt
+import decimal
 import json
+import numbers
 import os
 import re
 import zoneinfo
@@ -686,6 +688,89 @@ def session_zone(spark) -> _dt.tzinfo:
     return zoneinfo.ZoneInfo(zone.getId())
 
 
+# The protocol's date and timestamp partition value forms
+DATE_FORM = r"[0-9]{4}-[0-9]{2}-[0-9]{2}"
+WALL_FORM = DATE_FORM + r"[ T][0-9]{2}:[0-9]{2}:[0-9]{2}(?:\.[0-9]{1,6})?"
+
+# typed_literal's answer for a literal no prune may compare
+UNPRUNABLE: Any = type("Unprunable", (), {"__repr__": lambda _: "UNPRUNABLE"})()
+# Spark trims these from a string it casts (UTF8String.trimAll), reads a
+# date from its three fields and ignores what follows a space or a "T"
+_TRIM = "".join(map(chr, range(33)))
+_DATE_TEXT = re.compile(r"([0-9]{4})-([0-9]{1,2})-([0-9]{1,2})(?:[ T].*)?", re.S)
+_TIMESTAMP_TEXT = re.compile(
+    rf"{DATE_FORM}|{WALL_FORM}(?:Z|[+-][0-9]{{2}}:[0-9]{{2}})?"
+)
+_UTC_EPOCH = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
+
+
+def typed_literal(value: Any, dtype: T.DataType, zone) -> Any:
+    """The value of a ``dtype`` column's Python type (as partition values
+    and stats read) that Spark's casts for ``col <op> lit`` (ANSI)
+    compare the column with, or UNPRUNABLE where none is exact: Spark
+    casts the column side, rejects the literal, or it would narrow
+    (``3.5`` on an int column). A naive ``datetime`` is a wall time for
+    ``timestamp_ntz``, pyspark's process-local instant for ``timestamp``.
+    ``zone()`` (the session time zone) is called only for a wall-time
+    string or a ``date`` against a ``timestamp``."""
+    if value is None or isinstance(value, str) and isinstance(dtype, T.StringType):
+        return value
+    if isinstance(value, str):
+        # Spark casts it to a date or timestamp column's type; the forms
+        # read here are some of those it reads, and the others prune nothing
+        text, value = value.strip(_TRIM), UNPRUNABLE
+        fields = _DATE_TEXT.fullmatch(text)
+        timestamp = isinstance(dtype, (T.TimestampType, T.TimestampNTZType))
+        try:
+            if isinstance(dtype, T.DateType) and fields:
+                value = _dt.date(*map(int, fields.groups()))
+            elif timestamp and _TIMESTAMP_TEXT.fullmatch(text):
+                value = _dt.datetime.fromisoformat(text)
+                if value.tzinfo is None and isinstance(dtype, T.TimestampType):
+                    value = value.replace(tzinfo=zone())  # a wall time
+        except ValueError:  # no such day or time
+            pass
+    if isinstance(value, bool) or isinstance(dtype, T.BooleanType):
+        # Spark compares a boolean with no other type
+        same = type(value) is bool and isinstance(dtype, T.BooleanType)
+        return value if same else UNPRUNABLE
+    if type(value) is _dt.date:
+        if isinstance(dtype, T.DateType):
+            return value
+        # a date meets a timestamp as its midnight
+        tz = zone() if isinstance(dtype, T.TimestampType) else None
+        value = _dt.datetime.combine(value, _dt.time(), tz)
+    if isinstance(value, _dt.datetime):
+        if isinstance(dtype, T.TimestampType):
+            micros = T.TimestampType().toInternal(value)
+            return _UTC_EPOCH + _dt.timedelta(microseconds=micros)
+        naive = value.tzinfo is None and isinstance(dtype, T.TimestampNTZType)
+        return value if naive else UNPRUNABLE
+    if isinstance(value, numbers.Integral):
+        value = int(value)
+    if not isinstance(dtype, T.NumericType) or not isinstance(
+        value, (int, float, decimal.Decimal)
+    ):
+        return UNPRUNABLE
+    if isinstance(dtype, (T.FloatType, T.DoubleType)):
+        # compared as doubles, a decimal by Spark's rounding, not Python's
+        is_decimal = isinstance(value, decimal.Decimal)
+        return UNPRUNABLE if is_decimal else float(value)
+    exact = decimal.Decimal(repr(float(value)) if isinstance(value, float) else value)
+    scale = getattr(dtype, "scale", 0)
+    if not exact.is_finite():
+        return UNPRUNABLE
+    if isinstance(value, float):
+        # compared as doubles: only the column value that reads as the
+        # literal equals it, when it has under 15 digits at the scale
+        exact = exact.normalize()
+        if exact.as_tuple().exponent < -scale or exact.adjusted() + scale > 13:
+            return UNPRUNABLE
+    elif isinstance(dtype, T.IntegralType) and exact != exact.to_integral():
+        return UNPRUNABLE  # compared exactly, as decimals
+    return exact if isinstance(dtype, T.DecimalType) else int(exact)
+
+
 def cast_partition_value(
     raw: Optional[str], dtype: T.DataType, tz: Optional[_dt.tzinfo]
 ) -> Any:
@@ -698,8 +783,6 @@ def cast_partition_value(
     ISO 8601 with ``Z`` or an offset. A UTC value's equality and hash do
     not depend on ``fold``, as a region zone's do. ``timestamp_ntz``
     stays naive."""
-    import decimal
-
     if raw is None or raw == "__HIVE_DEFAULT_PARTITION__":
         return None
     if isinstance(dtype, (T.IntegerType, T.LongType, T.ShortType, T.ByteType)):

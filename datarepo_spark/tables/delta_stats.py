@@ -20,11 +20,12 @@ equivalent of delta-spark collecting stats from its writer tasks. At
 scale this is O(files) footer reads on the driver per commit, the same
 asymptotics as the move/commit loop that already exists.
 
-Read side (:func:`stats_prune`): evaluate the table's DNF filters
-against each file's [min, max] envelope and nullCount. Pruning must be
-SOUND (never drop a file that could match) and need not be complete —
-rows are re-filtered after the scan, so any "don't know" degrades to
-"keep the file".
+Read side (:func:`stats_prune`): evaluate the table's DNF, typed once
+as Spark casts it (``delta_table.typed_dnf``), against each file's [min,
+max] envelope and nullCount, parsed to the same types (:func:`_coerce`).
+Pruning must be SOUND (never drop a file that could match) and need not
+be complete — rows are re-filtered after the scan, so any "don't know"
+keeps the file.
 
 Soundness rules encoded here:
 - strings are only compared when both sides are ASCII (parquet orders
@@ -34,16 +35,11 @@ Soundness rules encoded here:
   truncated max would be an UNSOUND upper bound (delta-spark pads the
   last character up for the same reason; omitting is equally sound and
   simpler);
-- NaN poisons float envelopes (parquet row-group stats ignore NaN, so a
-  file containing NaN has a min/max that doesn't cover it); float
-  columns therefore only prune when the footer guarantees NaN-free
-  pages is unknowable → we keep comparisons but treat ``=``/``in`` on
-  float NaN values as non-prunable;
+- a non-finite float bound is dropped (JSON has no NaN; a file holding
+  NaN gets NaN as its footer max), and a NaN literal prunes nothing;
 - decimal bounds are never read: JSON carries them as numbers, which
   parse as floats, and some writers pass them through a double — so a
-  bound may sit on either side of the true one. A decimal filter
-  literal is never compared with a float (Spark compares them as
-  doubles, Python exactly);
+  bound may sit on either side of the true one;
 - a timestamp bound on a whole millisecond may be a truncated one
   (delta-spark writes timestamp stats to the millisecond): it is
   widened outward by 999 µs before any comparison;
@@ -54,7 +50,6 @@ from __future__ import annotations
 
 import bisect
 import datetime as _dt
-import decimal
 import json
 import math
 from typing import Any, NamedTuple, Optional, Sequence
@@ -62,6 +57,7 @@ from typing import Any, NamedTuple, Optional, Sequence
 from pyspark.sql import types as T
 
 from ..core.filters import Filter
+from .delta_log import AddFile
 
 # Delta's spark.databricks.delta.properties.defaults.dataSkippingNumIndexedCols
 _DEFAULT_INDEXED_COLS = 32
@@ -208,25 +204,19 @@ def collect_file_stats(
 
 
 def _coerce(value: Any, dtype: T.DataType) -> Any:
-    """Bring a JSON-decoded stats bound back to a comparable Python value
-    for ``dtype``. Returns None when no sound comparison exists."""
+    """Parse a JSON-decoded stats bound into the Python value of
+    ``dtype`` that ``typed_literal`` types a literal as. Returns None
+    when no sound comparison exists."""
     if value is None or isinstance(dtype, T.DecimalType):
         return None
-    if isinstance(dtype, T.DateType):
-        if isinstance(value, str):
-            try:
-                return _dt.date.fromisoformat(value[:10])
-            except ValueError:
-                return None
-        return value if isinstance(value, _dt.date) else None
-    if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
-        if isinstance(value, str):
-            try:
-                return _dt.datetime.fromisoformat(value)
-            except ValueError:
-                return None
-        return value if isinstance(value, _dt.datetime) else None
-    return value
+    if not isinstance(dtype, (T.DateType, T.TimestampType, T.TimestampNTZType)):
+        return value
+    try:
+        if isinstance(dtype, T.DateType):
+            return _dt.date.fromisoformat(value[:10])
+        return _dt.datetime.fromisoformat(value)
+    except (TypeError, ValueError):  # not an ISO string
+        return None
 
 
 def _comparable(a: Any, b: Any) -> bool:
@@ -241,10 +231,6 @@ def _comparable(a: Any, b: Any) -> bool:
         # parquet string stats are byte-ordered; Python is code-point
         # ordered. They agree on ASCII — prune only there.
         return a.isascii() and b.isascii()
-    if isinstance(a, decimal.Decimal) and isinstance(b, float) or (
-        isinstance(a, float) and isinstance(b, decimal.Decimal)
-    ):
-        return False  # Spark compares them as doubles, Python exactly
     if isinstance(b, float) and math.isnan(b):
         return False  # NaN never bounded by row-group stats
     return True
@@ -270,27 +256,6 @@ def _filter_possible(
     """Could any row of a file with envelope [mn, mx] / nulls match
     ``f``? Must err toward True."""
     op, value = f.operator, f.value
-    # filter literals for temporal columns arrive as date/datetime OR
-    # ISO strings; bring them to the stats' coerced representation
-    if isinstance(dtype, (T.DateType, T.TimestampType, T.TimestampNTZType)):
-        if isinstance(value, (list, tuple, set)):
-            coerced = []
-            for v in value:
-                if v is None:
-                    coerced.append(None)
-                    continue
-                cv = _coerce(v, dtype)
-                if cv is None:
-                    if op == "in":
-                        return True  # unparseable member might match
-                    continue  # "not in": a smaller list only weakens pruning
-                coerced.append(cv)
-            value = coerced
-        elif value is not None:
-            value = _coerce(value, dtype)
-            if value is None:
-                return True
-
     all_null = _all_null(nulls, num_records)
     if op == "=" and value is None:
         # isNull semantics (matches delta_table._eval_filter)
@@ -358,7 +323,7 @@ class _InList(NamedTuple):
     has_none: bool
     always: bool  # a NaN or non-ASCII member: no bound excludes it
     kind: Optional[str]  # ordering family of the rest; None = mixed
-    values: list  # the rest (temporal ones coerced), sorted by kind
+    values: list  # the rest, sorted by kind
 
 
 def _kind(v: Any) -> Optional[str]:
@@ -379,25 +344,17 @@ def _kind(v: Any) -> Optional[str]:
 
 def _prepare(f: Filter, dtype: Optional[T.DataType]):
     """``f`` itself, or an :class:`_InList` for an ``in`` list on a
-    column the stats index (not for a temporal list with a member that
-    does not parse: the linear test keeps every file for it)."""
+    column the stats index."""
     if dtype is None or f.operator != "in" or not isinstance(
         f.value, (list, tuple, set)
     ):
         return f
-    temporal = isinstance(
-        dtype, (T.DateType, T.TimestampType, T.TimestampNTZType)
-    )
     has_none = always = False
     rest = []
     for v in f.value:
         if v is None:
             has_none = True
             continue
-        if temporal:
-            v = _coerce(v, dtype)
-            if v is None:
-                return f
         if (isinstance(v, float) and v != v) or (
             isinstance(v, str) and not v.isascii()
         ):
@@ -487,19 +444,15 @@ def file_may_match(
 ) -> bool:
     """Sound per-file test: can a file with these stats satisfy every
     filter of one DNF conjunction? No stats → always True."""
-    dtypes = {fld.name: fld.dataType for fld in data_schema.fields}
-    return _may_match(
-        _parse_stats(stats_json),
-        [_prepare(f, dtypes.get(f.column)) for f in conj],
-        dtypes,
-    )
+    probe = AddFile("", {}, stats=stats_json)
+    return bool(stats_prune([probe], [conj], data_schema))
 
 
 def stats_prune(files: list, dnf, data_schema: T.StructType) -> list:
-    """Drop files no DNF conjunction can match. ``files`` are AddFile
-    records whose ``stats`` attribute carries the add action's JSON
-    string (None → kept). Sound by construction: every "don't know"
-    path in :func:`file_may_match` keeps the file, and the full
+    """Drop files no conjunction of ``dnf`` (``delta_table.typed_dnf``)
+    can match. ``files`` are AddFile records whose ``stats`` attribute
+    carries the add action's JSON string (None → kept). Sound by
+    construction: every "don't know" path keeps the file, and the full
     predicate is re-applied to rows after the scan. ``in`` lists are
     prepared once here, so a file costs O(log K) per K-member list."""
     if not dnf:

@@ -9,7 +9,8 @@ and ``version=`` time travel.
 Execution: a pure-Python log replay
 (:mod:`datarepo_spark.tables.delta_log`) resolves the active file set on
 the driver — exactly what a Delta Snapshot is — after pruning files whose
-``partitionValues`` or ``stats`` can't satisfy the filters. Data is then
+``partitionValues`` or ``stats`` can't satisfy the filters, their
+literals typed once as Spark casts them (:func:`typed_dnf`). Data is then
 read with Spark's native distributed parquet reader. When every kept
 file lies in Hive-style directories that spell its ``partitionValues``
 (``<column>=<value>/…``, see :func:`_hive_layout`), Spark's own
@@ -31,6 +32,8 @@ from __future__ import annotations
 
 import datetime as _dt
 import decimal
+import functools
+import operator
 import os
 import re
 from dataclasses import dataclass
@@ -52,10 +55,14 @@ from ..core.filters import (
     validate_filters,
 )
 from .delta_log import (
+    DATE_FORM,
+    UNPRUNABLE,
+    WALL_FORM,
     DeltaLog,
     DeltaSnapshot,
     cast_partition_value,
     session_zone,
+    typed_literal,
 )
 from .delta_stats import stats_prune
 from .metadata import (
@@ -103,8 +110,6 @@ def _hive_unescape(text: str) -> str:
 # Spark's partition discovery parses to what ``cast_partition_value``
 # reads. Any other form, e.g. another writer's ``inf``, takes the join
 # path; so does every type not listed.
-_DATE = r"[0-9]{4}-[0-9]{2}-[0-9]{2}"
-_WALL = _DATE + r"[ T][0-9]{2}:[0-9]{2}:[0-9]{2}(?:\.[0-9]{1,6})?"
 _SERIALIZED: list[tuple[tuple[type, ...], re.Pattern]] = [
     ((T.StringType,), re.compile(r".*", re.S)),
     ((T.ByteType, T.ShortType, T.IntegerType, T.LongType),
@@ -112,9 +117,9 @@ _SERIALIZED: list[tuple[tuple[type, ...], re.Pattern]] = [
     ((T.FloatType, T.DoubleType),
      re.compile(r"-?(?:NaN|Infinity|[0-9]+(?:\.[0-9]*)?(?:[eE][-+]?[0-9]+)?)")),
     ((T.BooleanType,), re.compile(r"true|false")),
-    ((T.DateType,), re.compile(_DATE)),
-    ((T.TimestampType,), re.compile(_WALL + "Z?")),
-    ((T.TimestampNTZType,), re.compile(_WALL)),
+    ((T.DateType,), re.compile(DATE_FORM)),
+    ((T.TimestampType,), re.compile(WALL_FORM + "Z?")),
+    ((T.TimestampNTZType,), re.compile(WALL_FORM)),
 ]
 # Spark parses these types from the Hive-unescaped directory value, the
 # rest from the raw one
@@ -273,40 +278,64 @@ def partition_zone(
     return None
 
 
+def typed_dnf(
+    spark: SparkSession, snapshot: DeltaSnapshot, dnf: NormalizedFilters
+) -> NormalizedFilters:
+    """``dnf`` with its literals typed once (:func:`typed_literal`) for
+    every prune of ``snapshot``. A filter no prune can read (UNPRUNABLE,
+    an unknown column or operator, ``contains`` on a non-string column)
+    leaves its conjunction, which only weakens it."""
+    types = {f.name: f.dataType for f in snapshot.schema.fields}
+    zone = functools.cache(lambda: session_zone(spark))
+
+    def typed(f: Filter) -> Optional[Filter]:
+        dtype = types.get(f.column)
+        listed = f.operator in ("in", "not in")
+        if dtype is None or f.operator not in _MATCHES or (
+            f.operator == "contains" and not isinstance(dtype, T.StringType)
+        ) or listed != isinstance(f.value, (list, tuple, set, frozenset)):
+            return None
+        values = f.value if listed else [f.value]
+        values = [typed_literal(v, dtype, zone) for v in values]
+        if UNPRUNABLE in values:
+            return None
+        return f._replace(value=values if listed else values[0])
+
+    return [[t for t in map(typed, conj) if t is not None] for conj in dnf or ()]
+
+
 def _partition_prune(
     snapshot: DeltaSnapshot,
-    dnf: NormalizedFilters,
+    typed: NormalizedFilters,
     tz: Optional[_dt.tzinfo],
 ) -> list:
-    """Keep files whose partitionValues might satisfy the DNF. Filters on
-    non-partition columns are unknown at this level → treated as TRUE.
-    (The full predicate is re-applied to rows afterwards, so this only has
-    to be sound, not complete.) With column mapping active,
-    partitionValues are keyed by PHYSICAL names (protocol rule). ``tz``
-    is :func:`partition_zone`'s answer."""
-    if not dnf or not snapshot.partition_columns:
+    """Keep files whose partitionValues might satisfy the DNF, typed by
+    :func:`typed_dnf`. Filters on non-partition columns are unknown at
+    this level → treated as TRUE. (The full predicate is re-applied to
+    rows afterwards, so this only has to be sound, not complete.) With
+    column mapping active, partitionValues are keyed by PHYSICAL names
+    (protocol rule). ``tz`` is :func:`partition_zone`'s answer."""
+    if not typed or not snapshot.partition_columns:
         return snapshot.files
     part_cols = set(snapshot.partition_columns)
 
-    def prepare(f: Filter) -> Optional[tuple]:
+    def prepare(f: Filter) -> tuple:
         # resolved once per call, not per file; an in-list becomes a set
         field = snapshot.partition_field(f.column)
-        if isinstance(field.dataType, T.TimestampType):
-            f = _as_instants(f, tz)
-            if f is None:
-                return None  # no sound comparison: the filter keeps all
-        elif _mistyped(f, field.dataType):
-            return None
-        return snapshot.physical_name(field), field.dataType, _as_set(f)
+        v = f.value
+        v = [*map(_spark_order, v)] if isinstance(v, list) else _spark_order(v)
+        f = _as_set(f._replace(value=v))
+        return snapshot.physical_name(field), field.dataType, f
 
     prepared = [
-        [p for p in (prepare(f) for f in conj if f.column in part_cols) if p]
-        for conj in dnf
+        [prepare(f) for f in conj if f.column in part_cols] for conj in typed
     ]
 
     def conj_matches(conj: list, values: dict) -> bool:
         return all(
-            _eval_filter(cast_partition_value(values.get(key), dtype, tz), f)
+            _eval_filter(
+                _spark_order(cast_partition_value(values.get(key), dtype, tz)), f
+            )
             for key, dtype, f in conj
         )
 
@@ -317,65 +346,12 @@ def _partition_prune(
     ]
 
 
-_EPOCH = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
-
-
-def _instant(value: Any, tz: Optional[_dt.tzinfo]) -> Optional[_dt.datetime]:
-    """A ``timestamp`` filter literal as the UTC instant Spark reads it
-    as: a ``datetime`` as pyspark sends it (a naive one in the process's
-    local time), a string or a ``date`` in the session time zone ``tz``.
-    None when it is none of these."""
-    if isinstance(value, _dt.datetime):
-        micros = T.TimestampType().toInternal(value)
-        return _EPOCH + _dt.timedelta(microseconds=micros)
-    if isinstance(value, _dt.date):
-        midnight = _dt.datetime.combine(value, _dt.time(), tz)
-        return midnight.astimezone(_dt.timezone.utc)
-    if isinstance(value, str):
-        try:
-            return cast_partition_value(value, T.TimestampType(), tz)
-        except ValueError:
-            return None
-    return None
-
-
-def _as_instants(f: Filter, tz: Optional[_dt.tzinfo]) -> Optional[Filter]:
-    """``f`` on a ``timestamp`` partition column with its literals made
-    UTC instants (:func:`_instant`), as the partition values are: a
-    naive literal would compare unequal to every aware value, or raise.
-    None when a literal has no instant or the operator does not compare
-    instants (``contains``)."""
-    if f.operator in ("in", "not in"):
-        if not isinstance(f.value, (list, tuple, set, frozenset)):
-            return None
-        values = [None if v is None else _instant(v, tz) for v in f.value]
-        if any(i is None and v is not None for i, v in zip(values, f.value)):
-            return None
-        return f._replace(value=values)
-    if f.operator not in ("=", "!=", "<", "<=", ">", ">="):
-        return None
-    if f.value is None:
-        return f
-    value = _instant(f.value, tz)
-    return None if value is None else f._replace(value=value)
-
-
-def _mistyped(f: Filter, dtype: T.DataType) -> bool:
-    """Is a literal of ``f`` a string against a column of another type,
-    or a non-null non-string against a string column? Spark casts one
-    side of such a comparison, while Python finds ``date(2024, 1, 1)``
-    and ``"2024-01-01"`` unequal, so the filter cannot prune; the row
-    filter in ``_finish`` applies Spark's cast."""
-    values = (
-        f.value
-        if f.operator in ("in", "not in")
-        and isinstance(f.value, (list, tuple, set, frozenset))
-        else [f.value]
-    )
-    want_str = isinstance(dtype, T.StringType)
-    return any(
-        v is not None and isinstance(v, str) != want_str for v in values
-    )
+def _spark_order(value: Any) -> Any:
+    """A double as Spark compares it: NaN equals NaN and sorts above
+    +inf (-0.0 equals 0.0, as in Python); any other value as it is."""
+    if isinstance(value, float):
+        return (1, 0.0) if value != value else (0, value)
+    return value
 
 
 def _as_set(f: Filter) -> Filter:
@@ -474,34 +450,21 @@ def _remap_to_logical(
     return df.select(*out)
 
 
+# The operators the prunes read, on a value and a like-typed literal
+_MATCHES = {
+    "=": operator.eq, "!=": operator.ne, "<": operator.lt, "<=": operator.le,
+    ">": operator.gt, ">=": operator.ge, "contains": operator.contains,
+    "in": lambda actual, values: actual in values,
+    "not in": lambda actual, values: actual not in values,
+}
+
+
 def _eval_filter(actual: Any, f: Filter) -> bool:
-    op, value = f.operator, f.value
-    if actual is None:
-        return op in ("=", "in") and (
-            value is None or (op == "in" and None in value)
+    if actual is None or f.value is None:  # ``= None`` keeps null partitions
+        return actual is None and f.operator in ("=", "in") and (
+            f.value is None or (f.operator == "in" and None in f.value)
         )
-    try:
-        if op == "=":
-            return actual == value
-        if op == "!=":
-            return actual != value
-        if op == "<":
-            return actual < value
-        if op == "<=":
-            return actual <= value
-        if op == ">":
-            return actual > value
-        if op == ">=":
-            return actual >= value
-        if op == "in":
-            return actual in value
-        if op == "not in":
-            return actual not in value
-        if op == "contains":
-            return str(value) in str(actual)
-    except TypeError:
-        return True  # incomparable → cannot prune soundly
-    return True  # includes* on a partition column: not prunable
+    return _MATCHES[f.operator](actual, f.value)
 
 
 class DeltalakeTable:
@@ -598,7 +561,8 @@ class DeltalakeTable:
                 cache_options.file_cache_path if cache_options else None
             ),
         )
-        df = self._read_from_log(session, snapshot, dnf)
+        typed = typed_dnf(session, snapshot, dnf)
+        df = self._read_from_log(session, snapshot, typed, dnf=dnf)
         if df is None:  # no files after pruning → exact-schema empty
             df = empty_normalized_df(session, self._declared_schema(snapshot))
         return self._finish(df, sql_filter, dnf, columns, snapshot)
@@ -607,51 +571,46 @@ class DeltalakeTable:
         self,
         spark: SparkSession,
         snapshot: DeltaSnapshot,
-        dnf: NormalizedFilters,
+        typed: NormalizedFilters,
         keep_rel: bool = False,
         keep_pos: bool = False,
+        dnf: NormalizedFilters = None,
     ) -> Optional[DataFrame]:
-        """``keep_rel=True`` keeps the ``__delta_rel`` column (each row's
-        add.path) — merge_delta uses it to find which files contain
-        matched keys, the copy-on-write rewrite unit. ``keep_pos=True``
-        additionally keeps ``__delta_pos`` (each LIVE row's physical
-        parquet row index) — delete_delta's deletion-vector coordinate."""
+        """The live rows of the files ``typed`` (:func:`typed_dnf`) may
+        match; ``dnf`` is the row filter. ``keep_rel=True`` keeps the
+        ``__delta_rel`` column (each row's add.path) — merge_delta uses it
+        to find which files contain matched keys, the copy-on-write
+        rewrite unit. ``keep_pos=True`` also keeps ``__delta_pos`` (each
+        LIVE row's parquet row index) — delete_delta's DV coordinate."""
         tz = partition_zone(spark, snapshot)
-        files = _partition_prune(snapshot, dnf, tz)
-        # Second pruning axis: each surviving file's add.stats envelope
-        # (numRecords/minValues/maxValues/nullCount) vs the same DNF.
-        # Partition pruning cuts along the layout; stats pruning cuts
-        # WITHIN a partition — on a range-clustered 100 TB table this is
-        # what turns "scan the partition" into "open the few files whose
-        # min/max overlap the predicate". Sound-only: rows are
-        # re-filtered after the scan (_finish), so unknowns keep files.
-        # Column mapping: stats keys are physical names — translate the
-        # DNF before consulting envelopes.
-        mapping = snapshot.column_mapping_mode != "none"
-        if mapping:
-            phys = snapshot.physical_name_map
-            stats_dnf = [
-                [Filter(phys.get(f.column, f.column), f.operator, f.value)
-                 for f in conj]
-                for conj in dnf
-            ] if dnf else dnf
-            files = stats_prune(files, stats_dnf, snapshot.physical_data_schema)
-        else:
-            files = stats_prune(files, dnf, snapshot.data_schema)
-        if not files:
-            return None
-        paths = [
-            os.path.join(self.uri, unquote(add.path)) for add in files
-        ]
+        files = _partition_prune(snapshot, typed, tz)
         # With column mapping the parquet files carry PHYSICAL column
         # names (col-<uuid>): scan under the physical schema; logical
         # names are rebuilt at every nesting level at the END of this
         # method (after the _metadata-based partition restore, which a
         # projection would sever). Without this the logical-schema scan
         # would resolve no columns and return all-null rows.
+        mapping = snapshot.column_mapping_mode != "none"
         read_schema = (
             snapshot.physical_data_schema if mapping else snapshot.data_schema
         )
+        # Second pruning axis: each surviving file's add.stats envelope
+        # (numRecords/minValues/maxValues/nullCount) vs the same DNF.
+        # Partition pruning cuts along the layout; stats pruning cuts
+        # WITHIN a partition — on a range-clustered 100 TB table this is
+        # what turns "scan the partition" into "open the few files whose
+        # min/max overlap the predicate". Stats keys are physical names.
+        phys = snapshot.physical_name_map
+        files = stats_prune(
+            files,
+            [[f._replace(column=phys[f.column]) for f in conj] for conj in typed or ()],
+            read_schema,
+        )
+        if not files:
+            return None
+        paths = [
+            os.path.join(self.uri, unquote(add.path)) for add in files
+        ]
         part_fields = [
             snapshot.partition_field(c) for c in snapshot.partition_columns
         ]

@@ -1337,11 +1337,11 @@ def compact(
                 f"(got {sorted(non_part)}): file-level scoping on data "
                 f"columns would need a scan, which defeats the point"
             )
-        from .delta_table import _partition_prune, partition_zone
+        from .delta_table import _partition_prune, partition_zone, typed_dnf
 
-        candidates = _partition_prune(
-            snapshot, dnf, partition_zone(spark, snapshot)
-        )
+        typed = typed_dnf(spark, snapshot, dnf)
+        tz = partition_zone(spark, snapshot)
+        candidates = _partition_prune(snapshot, typed, tz)
 
     groups: dict[tuple, list] = {}
     for f in candidates:
@@ -1718,39 +1718,37 @@ def merge_delta(
 
 def _merge_key_dnf(snapshot, source: DataFrame, on: list, keys: list):
     """``[[Filter(k, "in", keys of k) for k in on]]`` from the collected
-    key rows (``on``'s values first), or None when no key column can
-    prune. NULL keys are left out (they never match). A key column is
-    left out when the pruning test could disagree with the join's
-    equality: source and table types differ (unless both are
-    integral), the type is ``timestamp`` (a collected value is a
-    process-local naive datetime: not comparable with the UTC stats,
-    and not the same instant again around a DST change), ``float``
-    (partition values parse as doubles) or a type no pruning reads, or
-    a NaN key (the join matches NaN to NaN, Python does not). Decimal
-    keys prune by partition values only: stats pruning reads no
-    decimal bound (see delta_stats)."""
+    key rows (``on``'s values first), typed as the join compares them
+    (``typed_literal``), or None when no key column can prune. NULL
+    keys are left out (they never match). So is a key column with a key
+    of no typed value, or where the test could disagree with the join:
+    the table or source type is ``timestamp`` (a collected value is a
+    process-local naive datetime, not the same instant again around a
+    DST change), ``float`` (partition values parse as doubles) or not
+    atomic, or a key is NaN (the join matches NaN to NaN; no stats bound
+    holds NaN). Decimal keys prune by partition values only: stats
+    pruning reads no decimal bound (see delta_stats)."""
     from pyspark.sql import types as T
 
     from ..core.filters import Filter
+    from .delta_log import UNPRUNABLE, typed_literal
 
-    prunable = (
-        T.IntegralType, T.DoubleType, T.DecimalType, T.StringType,
-        T.BooleanType, T.DateType, T.TimestampNTZType,
-    )
     table_types = {f.name: f.dataType for f in snapshot.schema.fields}
     source_types = {f.name: f.dataType for f in source.schema.fields}
     conj = []
     for i, k in enumerate(on):
-        tt, st = table_types[k], source_types[k]
-        if not isinstance(tt, prunable) or not (
-            tt == st
-            or isinstance(tt, T.IntegralType) and isinstance(st, T.IntegralType)
-        ):
+        dtype = table_types[k]
+        if not isinstance(dtype, T.AtomicType) or isinstance(
+            dtype, (T.TimestampType, T.FloatType)
+        ) or isinstance(source_types[k], T.TimestampType):
             continue
         values = {row[i] for row in keys if row[i] is not None}
         if any(v != v for v in values):
             continue
-        conj.append(Filter(k, "in", list(values)))
+        # no key meets a timestamp column, so none needs the session zone
+        typed = [typed_literal(v, dtype, None) for v in values]
+        if UNPRUNABLE not in typed:
+            conj.append(Filter(k, "in", typed))
     return [conj] if conj else None
 
 
@@ -2108,7 +2106,7 @@ def delete_delta(
 
     from ..core.compile import filters_to_column
     from ..core.filters import normalize_filters, validate_filters
-    from .delta_table import DeltalakeTable
+    from .delta_table import DeltalakeTable, typed_dnf
 
     if (txn_app_id is None) != (txn_version is None):
         raise ValueError("txn_app_id and txn_version must be set together")
@@ -2138,8 +2136,9 @@ def delete_delta(
     validate_filters(dnf, {f.name for f in snapshot.schema.fields})
 
     table = DeltalakeTable(os.path.basename(uri), uri)
+    typed = typed_dnf(spark, snapshot, dnf)
     df = table._read_from_log(
-        spark, snapshot, dnf, keep_rel=True, keep_pos=True
+        spark, snapshot, typed, keep_rel=True, keep_pos=True
     )
     result_unchanged = {
         "version": snapshot.version,
@@ -2203,7 +2202,7 @@ def delete_delta(
             read_version=snapshot.version,
             operation="DELETE",
             operation_params={"predicate": [str(f) for c in dnf for f in c]},
-            read_predicate=dnf,
+            read_predicate=typed,
             data_schema=snapshot.data_schema,
         )
     except _TxnAlreadyLanded as landed:
@@ -2268,7 +2267,7 @@ def update_delta(
 
     from ..core.compile import filters_to_column
     from ..core.filters import normalize_filters, validate_filters
-    from .delta_table import DeltalakeTable
+    from .delta_table import DeltalakeTable, typed_dnf
 
     if (txn_app_id is None) != (txn_version is None):
         raise ValueError("txn_app_id and txn_version must be set together")
@@ -2312,8 +2311,9 @@ def update_delta(
     validate_filters(dnf, {f.name for f in snapshot.schema.fields})
 
     table = DeltalakeTable(os.path.basename(uri), uri)
+    typed = typed_dnf(spark, snapshot, dnf)
     df = table._read_from_log(
-        spark, snapshot, dnf, keep_rel=True, keep_pos=True
+        spark, snapshot, typed, keep_rel=True, keep_pos=True
     )
     result_unchanged = {
         "version": snapshot.version,
@@ -2394,7 +2394,7 @@ def update_delta(
                 "predicate": [str(f) for c in dnf for f in c],
                 "columns": sorted(assignments),
             },
-            read_predicate=dnf,
+            read_predicate=typed,
             data_schema=snapshot.data_schema,
         )
     except _TxnAlreadyLanded as landed:
@@ -2688,7 +2688,7 @@ def _check_commit_conflicts(
       transaction's READ SET (delta-spark's
       ConcurrentAppendException): when ``read_whole_table`` (MERGE —
       the join reads every key), any such add conflicts; when
-      ``read_predicate`` (DELETE/UPDATE's DNF), an add conflicts
+      ``read_predicate`` (DELETE/UPDATE's typed DNF), an add conflicts
       unless its stats envelope PROVES no row can match (a file
       without stats conservatively conflicts; partition-value
       elision is not attempted — sound, possibly over-strict).
@@ -3213,7 +3213,7 @@ def overwrite_where(
 
     from ..core.compile import filters_to_column
     from ..core.filters import normalize_filters, validate_filters
-    from .delta_table import DeltalakeTable
+    from .delta_table import DeltalakeTable, typed_dnf
 
     if (txn_app_id is None) != (txn_version is None):
         raise ValueError("txn_app_id and txn_version must be set together")
@@ -3270,8 +3270,9 @@ def overwrite_where(
         )
 
     table = DeltalakeTable(os.path.basename(uri), uri)
+    typed = typed_dnf(spark, snapshot, dnf)
     existing = table._read_from_log(
-        spark, snapshot, dnf, keep_rel=True, keep_pos=True
+        spark, snapshot, typed, keep_rel=True, keep_pos=True
     )
     dv_actions: list[dict] = []
     counters = {"rows_deleted": 0, "files_rewritten": 0, "files_removed": 0}
@@ -3318,7 +3319,7 @@ def overwrite_where(
                 "mode": "Overwrite",
                 "predicate": [str(f) for c in dnf for f in c],
             },
-            read_predicate=dnf,
+            read_predicate=typed,
             data_schema=snapshot.data_schema,
         )
     except _TxnAlreadyLanded as landed:

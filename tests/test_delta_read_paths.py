@@ -25,7 +25,7 @@ from datarepo_spark.core.filters import Filter
 from datarepo_spark.tables import delta_table
 from datarepo_spark.tables.delta_log import DeltaLog
 from datarepo_spark.tables.delta_table import DeltalakeTable
-from datarepo_spark.tables.delta_writer import delete_delta, write_delta
+from datarepo_spark.tables.delta_writer import compact, delete_delta, write_delta
 
 
 def rows_of(df):
@@ -241,6 +241,10 @@ LITERAL_CASES = {
     "date": ("d", "2024-01-01", "2024-01-02"),
     "int": ("r", "3", "4"),
     "string_column_int_literal": ("n", 7, 8),
+    "date_column_datetime_literal": (
+        "d", dt.datetime(2024, 1, 1), dt.datetime(2024, 1, 2)
+    ),
+    "decimal_column_float_literal": ("m", 0.1, 0.2),
 }
 
 
@@ -252,10 +256,12 @@ def test_a_literal_of_another_type_prunes_no_file_spark_keeps(
     prune must not drop it, for reads and for ``delete_delta``."""
     col, hit, other = LITERAL_CASES[case]
     uri = str(tmp_path / "t")
+    cents = [decimal.Decimal("0.10"), decimal.Decimal("0.20")]
     df = local_frame(
         spark,
-        [(dt.date(2024, 1, 1), 3, "7", 0), (dt.date(2024, 1, 2), 4, "8", 1)],
-        "d date, r int, n string, v int",
+        [(dt.date(2024, 1, 1), 3, "7", cents[0], 0),
+         (dt.date(2024, 1, 2), 4, "8", cents[1], 1)],
+        "d date, r int, n string, m decimal(4,2), v int",
     )
     write_delta(df, uri, partition_by=[col])
     table = DeltalakeTable("t", uri)
@@ -265,3 +271,43 @@ def test_a_literal_of_another_type_prunes_no_file_spark_keeps(
         assert sorted(got) == want, flt
     delete_delta(spark, uri, [Filter(col, "=", hit)])
     assert [r.v for r in table(spark=spark).collect()] == [1]
+
+
+def test_nan_partitions_compare_as_spark_compares_them(spark, tmp_path):
+    """Spark reads ``x = NaN`` as true for a NaN ``x``, and NaN above
+    +inf; the file prune must keep the NaN partition for ``=``, ``in``
+    and ``>``, and ``delete_delta`` must delete it."""
+    uri = str(tmp_path / "t")
+    rows = [(float("nan"), 0), (1.5, 1), (float("inf"), 2)]
+    write_delta(local_frame(spark, rows, "x double, v int"), uri,
+                partition_by=["x"])
+    table = DeltalakeTable("t", uri)
+    for flt, want in (
+        (Filter("x", "=", float("nan")), [0]),
+        (Filter("x", "in", [float("nan"), 1.5]), [0, 1]),
+        (Filter("x", ">", 2.0), [0, 2]),
+        (Filter("x", "<", float("nan")), [1, 2]),
+    ):
+        got = [r.v for r in table(filters=[flt], spark=spark).collect()]
+        assert sorted(got) == want, flt
+    delete_delta(spark, uri, [Filter("x", "=", float("nan"))])
+    assert sorted(r.v for r in table(spark=spark).collect()) == [1, 2]
+
+
+def test_compact_where_a_date_string_scopes_to_its_partition(spark, tmp_path):
+    """``compact(where=)`` has no row filter after it, so a file the
+    prune keeps is rewritten: a date string must name one partition, as
+    the ``date`` literal does."""
+    uri = str(tmp_path / "t")
+    days = [dt.date(2024, 1, 1) + dt.timedelta(days=i) for i in range(3)]
+    for batch in range(2):
+        rows = [(d, batch) for d in days]
+        write_delta(local_frame(spark, rows, "d date, v int"), uri,
+                    partition_by=["d"])
+    assert len(DeltaLog(uri).snapshot().files) == 6
+    stats = compact(spark, uri, where=[Filter("d", "=", "2024-01-01")])
+    assert stats["files_removed"] == 2
+    files = DeltaLog(uri).snapshot().files
+    assert sorted(f.partition_values["d"] for f in files) == [
+        "2024-01-01", "2024-01-02", "2024-01-02", "2024-01-03", "2024-01-03"
+    ]

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from datarepo_spark.core.filters import Filter, normalize_filters
-from datarepo_spark.tables.delta_log import AddFile, DeltaLog
+from datarepo_spark.tables.delta_log import AddFile, DeltaLog, typed_literal
 from datarepo_spark.tables.delta_stats import (
     collect_file_stats,
     file_may_match,
@@ -194,12 +194,13 @@ class TestPruneEvaluator:
         assert not file_may_match(
             s, _dnf(Filter("day", "<=", before))[0], self.SCHEMA
         )
-        assert not file_may_match(
-            s, _dnf(Filter("day", "<=", "2023-12-01"))[0], self.SCHEMA
-        )
-        assert file_may_match(
-            s, _dnf(Filter("day", "<=", "2024-01-15"))[0], self.SCHEMA
-        )
+        # a string literal reaches the stats typed, as the read path
+        # types it (typed_literal)
+        for text, kept in (("2023-12-01", False), ("2024-01-15", True)):
+            day = typed_literal(text, T.DateType(), None)
+            assert file_may_match(
+                s, _dnf(Filter("day", "<=", day))[0], self.SCHEMA
+            ) is kept
 
     def test_nan_probe_never_prunes(self):
         s = self.mk(minValues={"x": 0.0}, maxValues={"x": 1.0},

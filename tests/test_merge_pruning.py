@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from datarepo_spark.core.exec import local_frame
 from datarepo_spark.core.filters import Filter
 from datarepo_spark.tables import delta_table, delta_writer
-from datarepo_spark.tables.delta_log import invalidate_snapshot_cache
+from datarepo_spark.tables.delta_log import DeltaLog, invalidate_snapshot_cache
 from datarepo_spark.tables.delta_table import DeltalakeTable
 from datarepo_spark.tables.delta_writer import (
     delete_delta,
@@ -113,6 +113,13 @@ def by_timestamp(spark, uri):
         spark, [(t, i) for i, t in enumerate(ts)], "t string, v int"
     ).selectExpr("CAST(t AS TIMESTAMP) AS t", "v")
     write_delta(df, uri, partition_by=["t"])
+
+
+def int_partitions(spark, uri):
+    # p in {0, 1, 2}, an int: a double source key is compared with it as
+    # a double
+    df = spark.range(30).selectExpr("CAST(id % 3 AS INT) AS p", "id AS v")
+    write_delta(df, uri, partition_by=["p"])
 
 
 STRING_PARTS = ["x/y=z%+:é#", "b c", "plain", None]
@@ -273,6 +280,14 @@ CASES = {
     "timestamp_key": (
         by_timestamp, None, timestamp_source, None, {"on": ["t"]},
     ),
+    "int_keys_long_column": (
+        "ints", None, [(5, "n5"), (7, "n7"), (90, "n90")], "k int, v string",
+        {},
+    ),
+    "double_keys_int_partition": (
+        int_partitions, None, [(1.0, -1), (7.0, -7)], "p double, v long",
+        {"on": ["p"], "when_matched": "delete", "when_not_matched": None},
+    ),
     "string_partition": (
         string_partitions, None,
         [("x/y=z%+:é#", 4, "n4"), ("b c", 5, "n5"), (None, 3, "n3"),
@@ -282,7 +297,10 @@ CASES = {
 }
 # the cases whose table is partitioned, so its reads can take either
 # path (delta_table._hive_layout)
-PARTITIONED = ["partition_key", "timestamp_key", "string_partition"]
+PARTITIONED = [
+    "partition_key", "timestamp_key", "double_keys_int_partition",
+    "string_partition",
+]
 
 
 @pytest.mark.parametrize("case", list(CASES))
@@ -405,6 +423,27 @@ def test_merge_scans_only_the_key_files_and_lists_nothing(
     )
     assert len(scans) == 1 and len(scans[0].inputFiles()) <= 2
     assert tasks and max(tasks) <= 32, tasks
+
+
+def test_keys_of_another_type_prune_the_target_scan(spark, tmp_path, monkeypatch):
+    """``double`` source keys meet an ``int`` partition column as the
+    join compares them: the merge opens only the key's partition."""
+    uri = str(tmp_path / "t")
+    int_partitions(spark, uri)
+    files = DeltaLog(uri).snapshot().files
+    want = [f for f in files if f.partition_values["p"] == "1"]
+    scans = []
+    real = DeltalakeTable._read_from_log
+
+    def spy(self, *args, **kwargs):
+        df = real(self, *args, **kwargs)
+        scans.append(df)
+        return df
+
+    monkeypatch.setattr(DeltalakeTable, "_read_from_log", spy)
+    src = local_frame(spark, [(1.0, -1)], "p double, v long")
+    merge_delta(spark, uri, src, on=["p"], when_not_matched=None)
+    assert len(scans[0].inputFiles()) == len(want) < len(files)
 
 
 def test_noop_merge_runs_no_job(spark, clustered):

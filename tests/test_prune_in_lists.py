@@ -3,9 +3,12 @@
 ``stats_prune`` sorts each ``in`` list once and bisects it per file;
 ``_partition_prune`` turns it into a set. Both must answer exactly as
 the per-file linear tests (``_filter_possible``, ``_eval_filter`` on
-the list) do, for every mix of member and envelope types. Bounds stated
-by other writers (decimals as JSON numbers, timestamps truncated to the
-millisecond) must keep every file that can hold a member.
+the list) do, for every mix of member and envelope types. Members reach
+the prunes typed by ``typed_literal`` (a member it cannot type stays as
+drawn, so every family is still checked), and envelopes as the JSON
+stats carry them. Bounds stated by other writers (decimals as JSON
+numbers, timestamps truncated to the millisecond) must keep every file
+that can hold a member.
 """
 
 import datetime as dt
@@ -19,7 +22,12 @@ from hypothesis import strategies as st
 from pyspark.sql import types as T
 
 from datarepo_spark.core.filters import Filter
-from datarepo_spark.tables.delta_log import AddFile
+from datarepo_spark.tables.delta_log import (
+    UNPRUNABLE,
+    AddFile,
+    DeltaSnapshot,
+    typed_literal,
+)
 from datarepo_spark.tables.delta_stats import (
     _InList,
     _coerce,
@@ -28,7 +36,7 @@ from datarepo_spark.tables.delta_stats import (
     _prepare,
     stats_prune,
 )
-from datarepo_spark.tables.delta_table import _as_set, _eval_filter
+from datarepo_spark.tables.delta_table import _as_set, _eval_filter, typed_dnf
 
 NAN = float("nan")
 
@@ -63,6 +71,18 @@ DTYPES = [
 ]
 
 
+def typed_members(members, dtype):
+    """``members`` as the read path types them; one ``typed_literal``
+    finds no value for stays as drawn."""
+    typed = [typed_literal(m, dtype, lambda: dt.timezone.utc) for m in members]
+    return [m if t is UNPRUNABLE else t for m, t in zip(members, typed)]
+
+
+def as_json(bound):
+    """A bound as the JSON stats carry it."""
+    return bound.isoformat() if isinstance(bound, dt.date) else bound
+
+
 @st.composite
 def in_cases(draw):
     """(members, dtype, mn, mx, nulls, num_records): mostly one family
@@ -75,12 +95,13 @@ def in_cases(draw):
     members = draw(
         st.lists(st.one_of(member, member, member, st.none()), max_size=8)
     )
+    dtype = draw(st.sampled_from(DTYPES))
+    members = typed_members(members, dtype)
     as_type = draw(st.sampled_from([list, tuple, set]))
     try:
         members = as_type(members)
     except TypeError:
         members = list(members)
-    dtype = draw(st.sampled_from(DTYPES))
     mn, mx = draw(st.one_of(bound, st.none())), draw(bound)
     try:
         if mn is not None and mn > mx:
@@ -109,11 +130,10 @@ def in_cases(draw):
 def test_prepared_in_list_matches_the_linear_test(case):
     members, dtype, mn, mx, nulls, num_records = case
     f = Filter("c", "in", members)
-    # the envelope reaches both tests coerced, as stats_prune passes it
-    mn, mx = _coerce(mn, dtype), _coerce(mx, dtype)
+    # the envelope reaches both tests parsed, as stats_prune passes it
+    mn, mx = _coerce(as_json(mn), dtype), _coerce(as_json(mx), dtype)
     want = _filter_possible(f, dtype, mn, mx, nulls, num_records)
     prepared = _prepare(f, dtype)
-    # an unparseable temporal member leaves the filter to the linear test
     test = _in_possible if isinstance(prepared, _InList) else _filter_possible
     got = test(prepared, dtype, mn, mx, nulls, num_records)
     assert got == want
@@ -212,11 +232,14 @@ def test_decimal_bounds_written_as_json_numbers_keep_the_file(op, value):
 
 
 def test_a_decimal_literal_is_not_compared_with_a_float_bound():
-    # Spark compares a double column with a decimal literal as doubles
+    # Spark compares a double column with a decimal literal as doubles,
+    # rounding the decimal its own way: the typed DNF keeps no such filter
     add, schema = one_file(T.DoubleType(), 0.1, 0.3)
+    snapshot = DeltaSnapshot(0, schema, [])
     for f in (Filter("c", "=", Decimal("0.1")),
               Filter("c", "in", [Decimal("0.3")])):
-        assert stats_prune([add], [[f]], schema) == [add]
+        typed = typed_dnf(None, snapshot, [[f]])
+        assert stats_prune([add], typed, schema) == [add]
 
 
 NOON = dt.datetime(2024, 1, 1, 12)
