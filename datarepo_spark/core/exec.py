@@ -6,11 +6,14 @@ built as JVM relations."""
 from __future__ import annotations
 
 import decimal
-from typing import Sequence, Union
+from typing import TYPE_CHECKING, Sequence, Union
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 
 def parallelism(df: DataFrame) -> int:
@@ -148,31 +151,35 @@ _EXACT = decimal.Context(prec=decimal.MAX_PREC)
 
 def local_frame(
     spark: SparkSession,
-    rows: Sequence[Sequence],
+    rows: Union[Sequence[Sequence], "pa.Table"],
     schema: Union[T.StructType, str],
 ) -> DataFrame:
-    """A DataFrame over driver-side ``rows`` (positional tuples) with
-    exactly ``schema`` (a ``StructType`` or a DDL string), built without
-    a Python job. ``spark.createDataFrame(<python list>)`` parallelizes a
-    pickled Python RDD, so every job over it (a broadcast of a 3-row
-    lookup included) starts Python workers. Handed a ``pyarrow.Table``,
-    Spark instead builds a ``LocalRelation`` (below
+    """A DataFrame over driver-side ``rows`` (positional tuples, or a
+    ``pyarrow.Table`` such as ``DataFrame.toArrow()`` returns, taken as
+    it is) with exactly ``schema`` (a ``StructType`` or a DDL string),
+    built without a Python job. ``spark.createDataFrame(<python list>)``
+    parallelizes a pickled Python RDD, so every job over it (a broadcast
+    of a 3-row lookup included) starts Python workers. Handed a
+    ``pyarrow.Table``, Spark instead builds a ``LocalRelation`` (below
     ``spark.sql.execution.arrow.localRelationThreshold``) or a JVM-only
     Arrow RDD.
 
-    The Arrow columns hold the values the list path stores: dates and
-    timestamps go in as their Spark type's own ``toInternal`` value
-    (days, epoch microseconds), so a naive ``datetime`` in a
-    ``timestamp`` field still reads as process-local time; decimals are
-    rounded half-up to the field's scale, as the JVM does. ``None`` in a
-    non-nullable field raises ``ValueError``, as ``verifySchema`` does:
-    Spark casts the table to the schema's Arrow form, which refuses it.
-    Values inside nested types go to pyarrow as they are."""
+    From positional tuples, the Arrow columns hold the values the list
+    path stores: dates and timestamps go in as their Spark type's own
+    ``toInternal`` value (days, epoch microseconds), so a naive
+    ``datetime`` in a ``timestamp`` field still reads as process-local
+    time; decimals are rounded half-up to the field's scale, as the JVM
+    does. ``None`` in a non-nullable field raises ``ValueError``, as
+    ``verifySchema`` does: Spark casts the table to the schema's Arrow
+    form, which refuses it. Values inside nested types go to pyarrow as
+    they are."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_type
 
     if isinstance(schema, str):
         schema = T.StructType.fromDDL(schema)
+    if isinstance(rows, pa.Table):
+        return spark.createDataFrame(rows, schema)
     columns = []
     for i, field in enumerate(schema.fields):
         dtype = field.dataType

@@ -28,6 +28,7 @@ import json
 import numbers
 import os
 import re
+import struct
 import zoneinfo
 from dataclasses import dataclass, field
 from typing import Any, Optional
@@ -771,6 +772,12 @@ def typed_literal(value: Any, dtype: T.DataType, zone) -> Any:
     return exact if isinstance(dtype, T.DecimalType) else int(exact)
 
 
+def float32(value: float) -> float:
+    """``value`` rounded to the nearest ``float``, the value Spark reads
+    for a ``float`` column's partition value or stats bound."""
+    return struct.unpack("f", struct.pack("f", value))[0]
+
+
 def cast_partition_value(
     raw: Optional[str], dtype: T.DataType, tz: Optional[_dt.tzinfo]
 ) -> Any:
@@ -787,8 +794,10 @@ def cast_partition_value(
         return None
     if isinstance(dtype, (T.IntegerType, T.LongType, T.ShortType, T.ByteType)):
         return int(raw)
-    if isinstance(dtype, (T.DoubleType, T.FloatType)):
+    if isinstance(dtype, T.DoubleType):
         return float(raw)
+    if isinstance(dtype, T.FloatType):
+        return float32(float(raw))
     if isinstance(dtype, T.DecimalType):
         return decimal.Decimal(raw)
     if isinstance(dtype, T.BooleanType):

@@ -57,7 +57,7 @@ from typing import Any, NamedTuple, Optional, Sequence
 from pyspark.sql import types as T
 
 from ..core.filters import Filter
-from .delta_log import AddFile
+from .delta_log import AddFile, float32
 
 # Delta's spark.databricks.delta.properties.defaults.dataSkippingNumIndexedCols
 _DEFAULT_INDEXED_COLS = 32
@@ -209,6 +209,8 @@ def _coerce(value: Any, dtype: T.DataType) -> Any:
     when no sound comparison exists."""
     if value is None or isinstance(dtype, T.DecimalType):
         return None
+    if isinstance(dtype, T.FloatType) and type(value) in (int, float):
+        return float32(value)  # a writer may state it as the shortest text
     if not isinstance(dtype, (T.DateType, T.TimestampType, T.TimestampNTZType)):
         return value
     try:

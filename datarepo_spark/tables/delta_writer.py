@@ -47,7 +47,7 @@ DEFAULT_MAX_AFFECTED_FILES = 1_000_000
 # over every file cost the same on both paths up to 10k and 0.25 s more
 # pruned at 20k-40k, the cost of collecting the keys (0.15-0.25 s at 10k,
 # 0.25-0.45 s at 20k-40k). 10k is where the spread case stops breaking
-# even. The bound also sizes the update collect's top-k buffer.
+# even.
 MERGE_KEY_PRUNE_MAX = 10_000
 
 
@@ -312,6 +312,26 @@ class _micros_timestamps:
         return False
 
 
+def _strip_meta(dt):
+    """``dt`` without nested field metadata and nullability: a
+    column-mapped table's nested mapping annotations, or a frame whose
+    literal structs are non-nullable, must not read as a type mismatch
+    (parquet stores the values identically either way)."""
+    from pyspark.sql import types as T
+
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _strip_meta(f.dataType), True) for f in dt.fields]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_strip_meta(dt.elementType), dt.containsNull)
+    if isinstance(dt, T.MapType):
+        return T.MapType(
+            _strip_meta(dt.keyType), _strip_meta(dt.valueType), dt.valueContainsNull
+        )
+    return dt
+
+
 def _check_schema(
     df: DataFrame, snapshot, schema_mode: str
 ) -> Optional[dict]:
@@ -329,36 +349,13 @@ def _check_schema(
     declared schema would silently null out (or fail on) the drift."""
     from pyspark.sql import types as T
 
-    def strip_meta(dt: T.DataType) -> T.DataType:
-        # nested StructField equality includes field METADATA and
-        # NULLABILITY — a column-mapped table's nested mapping
-        # annotations, or a frame whose literal structs are
-        # non-nullable, must not read as a type mismatch (parquet
-        # stores the values identically either way)
-        if isinstance(dt, T.StructType):
-            return T.StructType(
-                [
-                    T.StructField(f.name, strip_meta(f.dataType), True)
-                    for f in dt.fields
-                ]
-            )
-        if isinstance(dt, T.ArrayType):
-            return T.ArrayType(strip_meta(dt.elementType), dt.containsNull)
-        if isinstance(dt, T.MapType):
-            return T.MapType(
-                strip_meta(dt.keyType),
-                strip_meta(dt.valueType),
-                dt.valueContainsNull,
-            )
-        return dt
-
     table_fields = {f.name: f for f in snapshot.schema.fields}
     new_fields = []
     for f in df.schema.fields:
         existing = table_fields.get(f.name)
         if existing is None:
             new_fields.append(f)
-        elif strip_meta(existing.dataType) != strip_meta(f.dataType):
+        elif _strip_meta(existing.dataType) != _strip_meta(f.dataType):
             raise ValueError(
                 f"Column {f.name!r} type mismatch: table has "
                 f"{existing.dataType.simpleString()}, dataframe has "
@@ -1480,17 +1477,24 @@ def merge_delta(
 
     Scale shape (the same one delta-spark's MERGE uses):
     1. find the AFFECTED files — those containing at least one matched
-       key. One bounded job collects the source's keys (at most
-       ``MERGE_KEY_PRUNE_MAX`` of them: an update collects the distinct
-       keys with their row counts for the duplicate check, a delete or
-       insert-only merge the source's first rows); the target scan then
-       opens only the files whose partition values or min/max stats can
-       hold one of them. A semi join of that scan against the source
-       keys sends only file paths to the driver. Past the bound, the
-       whole table is scanned;
+       key. One job collects the source's first ``MERGE_KEY_PRUNE_MAX
+       + 1`` key rows as Arrow (a limit, no aggregation). At or under the
+       bound that copy is all of them: the driver checks it for
+       duplicates, the target scan opens only the files whose partition
+       values or min/max stats can hold one of its keys, and it is the
+       key side (a local relation) of the semi join that sends the
+       affected file paths to the driver and of the anti join in step
+       2, so the source is not read again for its keys. Past the bound
+       the whole table is scanned, the key side is the source's
+       distinct keys, and an update checks for duplicates with one more
+       job;
     2. rewrite ONLY those files: unmatched rows pass through, matched
-       rows are replaced/dropped, not-matched source rows append;
+       rows are replaced/dropped, not-matched source rows append, cast
+       to the table's types (a type Spark cannot up-cast raises before
+       any job);
     3. commit remove(affected) + add(new) atomically, dataChange: true.
+       A concurrent append conflicts if its stats can hold a collected
+       key; past the bound, any concurrent append conflicts.
 
     On a key-clustered table (zorder_by / range-written) the affected
     set is a tiny fraction of the table — the rewrite cost tracks the
@@ -1553,31 +1557,37 @@ def merge_delta(
             "files_added": 0,
         }
 
-    if when_matched == "update":
-        # One row per distinct key (NULL keys form groups too) with its
-        # source row count, most repeated first: the first row answers
-        # the duplicate check even when the collect stops at the bound.
-        keys = (
-            source.groupBy(*on)
-            .agg(F.count(F.lit(1)).alias("__merge_key_rows"))
-            .orderBy(F.col("__merge_key_rows").desc())
-            .limit(MERGE_KEY_PRUNE_MAX + 1)
-            .collect()
-        )
-        if keys and keys[0][-1] > 1:
-            raise ValueError(
-                "source has duplicate merge keys — a matched target row "
-                "would receive multiple updates"
-            )
-    else:
-        # No duplicate check: the source's first rows carry the keys,
-        # and past the bound the job stops early instead of aggregating.
-        keys = source.select(*on).limit(MERGE_KEY_PRUNE_MAX + 1).collect()
-    key_dnf = (
-        _merge_key_dnf(snapshot, source, on, keys)
-        if len(keys) <= MERGE_KEY_PRUNE_MAX
-        else None
+    written = (
+        _as_table_types(spark, snapshot, source)
+        if when_matched == "update" or when_not_matched == "insert"
+        else None  # a delete-only merge writes no source row
     )
+
+    # One bounded collect of the source's keys, without aggregating.
+    # Under the bound it answers the duplicate check, types the key
+    # lists that prune the target scan and is the key side of both
+    # joins below.
+    key_frame = source.select(*on)
+    keys = key_frame.limit(MERGE_KEY_PRUNE_MAX + 1).toArrow()
+    bounded = keys.num_rows <= MERGE_KEY_PRUNE_MAX
+    if when_matched == "update" and (
+        _repeats(keys)
+        if bounded
+        else source.groupBy(*on)
+        .agg(F.count(F.lit(1)).alias("__merge_key_rows"))
+        .filter(F.col("__merge_key_rows") > 1)
+        .limit(1)
+        .collect()
+    ):
+        raise ValueError(
+            "source has duplicate merge keys — a matched target row "
+            "would receive multiple updates"
+        )
+    if bounded:
+        key_dnf = _merge_key_dnf(snapshot, key_frame.schema, keys)
+        src_keys = local_frame(spark, keys, key_frame.schema)
+    else:
+        key_dnf, src_keys = None, key_frame.distinct()
 
     from .delta_table import DeltalakeTable
 
@@ -1586,7 +1596,6 @@ def merge_delta(
     # key, so it has no affected row and adds nothing to tgt_keys below.
     target = table._read_from_log(spark, snapshot, key_dnf, keep_rel=True)
 
-    src_keys = source.select(*on).distinct()
     cap = (
         max_affected_files
         if max_affected_files is not None
@@ -1631,13 +1640,13 @@ def merge_delta(
         # An upsert writes its matched source rows (semi join with the
         # target's keys) and its unmatched ones (anti join, NULL keys
         # included): together, the whole source.
-        pieces.append(source)
+        pieces.append(written(source))
     elif target is not None:
         tgt_keys = target.select(*on).distinct()
         if when_matched == "update" and affected:
-            pieces.append(source.join(tgt_keys, on, "left_semi"))
+            pieces.append(written(source.join(tgt_keys, on, "left_semi")))
         if when_not_matched == "insert":
-            pieces.append(source.join(tgt_keys, on, "left_anti"))
+            pieces.append(written(source.join(tgt_keys, on, "left_anti")))
         # 'delete': matched rows simply don't reappear
 
     if not pieces and not affected:
@@ -1695,9 +1704,13 @@ def merge_delta(
             read_version=snapshot.version,
             operation="MERGE",
             operation_params={"predicate": on},
-            # ANY concurrent dataChange append may contain a matched
-            # key (the key pruning saw only this snapshot's files)
-            read_whole_table=True,
+            # a concurrent dataChange append may hold a matched key (the
+            # key pruning saw only this snapshot's files): past the
+            # bound any append conflicts, under it one whose stats can
+            # hold a key
+            read_predicate=key_dnf,
+            read_whole_table=key_dnf is None,
+            data_schema=snapshot.data_schema,
         )
     except _TxnAlreadyLanded as landed:
         _discard_files(
@@ -1716,39 +1729,97 @@ def merge_delta(
     }
 
 
-def _merge_key_dnf(snapshot, source: DataFrame, on: list, keys: list):
+def _as_table_types(spark, snapshot, source: DataFrame):
+    """A function casting a frame of ``source``'s columns to the table's
+    types, as MERGE writes them. Raises ``ValueError`` (before any job)
+    for a column whose type Spark cannot up-cast to the table's
+    (``Cast.canUpCast``): a narrowing cast would change values, and a
+    value of another type written as is leaves a file or a partition
+    value the table's readers cannot read."""
+    from pyspark.sql import functions as F
+
+    jvm = spark._jvm
+    parse = jvm.org.apache.spark.sql.types.DataType.fromJson
+    casts = {}
+    for field in snapshot.schema.fields:
+        have = source.schema[field.name].dataType
+        if _strip_meta(have) == _strip_meta(field.dataType):
+            continue
+        if not jvm.org.apache.spark.sql.catalyst.expressions.Cast.canUpCast(
+            parse(have.json()), parse(field.dataType.json())
+        ):
+            raise ValueError(
+                f"Column {field.name!r} type mismatch: table has "
+                f"{field.dataType.simpleString()}, source has "
+                f"{have.simpleString()} (MERGE writes source rows only "
+                f"in types Spark up-casts to the table's)"
+            )
+        casts[field.name] = F.col(field.name).cast(field.dataType)
+    return (lambda df: df.withColumns(casts)) if casts else (lambda df: df)
+
+
+# a NaN key's group value: NaN groups with NaN, as Spark groups floats
+_NAN = object()
+
+
+def _group_value(value):
+    """``value`` (Arrow's Python form) as a hashable value equal to
+    another exactly where Spark's ``groupBy`` puts them in one group:
+    NaN with NaN, -0.0 with 0.0 (equal in Python already), NULL with
+    NULL, arrays and structs by value."""
+    if isinstance(value, float):
+        return _NAN if value != value else value
+    if isinstance(value, dict):  # a struct
+        value = list(value.values())
+    if isinstance(value, (list, tuple)):  # also a map's (key, value) pairs
+        return tuple(map(_group_value, value))
+    return value
+
+
+def _repeats(keys) -> bool:
+    """Whether two rows of the Arrow table ``keys`` form one group of
+    Spark's ``groupBy`` over all its columns."""
+    seen = set()
+    columns = [[_group_value(v) for v in c.to_pylist()] for c in keys.columns]
+    for row in zip(*columns):
+        if row in seen:
+            return True
+        seen.add(row)
+    return False
+
+
+def _merge_key_dnf(snapshot, key_schema, keys):
     """``[[Filter(k, "in", keys of k) for k in on]]`` from the collected
-    key rows (``on``'s values first), typed as the join compares them
-    (``typed_literal``), or None when no key column can prune. NULL
-    keys are left out (they never match). So is a key column with a key
-    of no typed value, or where the test could disagree with the join:
-    the table or source type is ``timestamp`` (a collected value is a
-    process-local naive datetime, not the same instant again around a
-    DST change), ``float`` (partition values parse as doubles) or not
-    atomic, or a key is NaN (the join matches NaN to NaN; no stats bound
-    holds NaN). Decimal keys prune by partition values only: stats
-    pruning reads no decimal bound (see delta_stats)."""
+    Arrow table ``keys`` (of ``key_schema``, the source's key columns),
+    typed as the join compares them (``typed_literal``), or None when no
+    key column can prune. NULL keys are left out (they never match). So
+    is a key column with a key of no typed value, or where the test
+    could disagree with the join: the table type is not atomic or is
+    ``timestamp`` (the keys are typed without the session zone, which a
+    ``date`` or ``timestamp_ntz`` key needs to meet such a column), or a
+    key is NaN (the join matches NaN to NaN; no stats bound holds NaN).
+    Decimal keys prune by partition values only: stats pruning reads no
+    decimal bound (see delta_stats)."""
     from pyspark.sql import types as T
 
     from ..core.filters import Filter
     from .delta_log import UNPRUNABLE, typed_literal
 
     table_types = {f.name: f.dataType for f in snapshot.schema.fields}
-    source_types = {f.name: f.dataType for f in source.schema.fields}
     conj = []
-    for i, k in enumerate(on):
-        dtype = table_types[k]
+    for field, column in zip(key_schema.fields, keys.columns):
+        dtype = table_types[field.name]
         if not isinstance(dtype, T.AtomicType) or isinstance(
-            dtype, (T.TimestampType, T.FloatType)
-        ) or isinstance(source_types[k], T.TimestampType):
+            dtype, T.TimestampType
+        ):
             continue
-        values = {row[i] for row in keys if row[i] is not None}
+        values = {v for v in column.to_pylist() if v is not None}
         if any(v != v for v in values):
             continue
         # no key meets a timestamp column, so none needs the session zone
         typed = [typed_literal(v, dtype, None) for v in values]
         if UNPRUNABLE not in typed:
-            conj.append(Filter(k, "in", typed))
+            conj.append(Filter(field.name, "in", typed))
     return [conj] if conj else None
 
 

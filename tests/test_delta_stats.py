@@ -209,6 +209,16 @@ class TestPruneEvaluator:
             s, _dnf(Filter("x", "=", float("nan")))[0], self.SCHEMA
         )
 
+    def test_float_bounds_read_as_float32(self):
+        """Another writer states a ``float`` bound as its shortest text
+        (0.1 for 0.1f, which is 0.10000000149...): Spark's ``f > 0.1``
+        holds for that row, so the file is kept."""
+        schema = T.StructType([T.StructField("f", T.FloatType())])
+        s = self.mk(minValues={"f": 0.1}, maxValues={"f": 0.1},
+                    nullCount={"f": 0})
+        assert file_may_match(s, _dnf(Filter("f", ">", 0.1))[0], schema)
+        assert not file_may_match(s, _dnf(Filter("f", "<=", 0.1))[0], schema)
+
     def test_no_stats_kept(self):
         conj = _dnf(Filter("id", "=", 1))[0]
         assert file_may_match(None, conj, self.SCHEMA)

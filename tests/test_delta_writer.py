@@ -1431,7 +1431,7 @@ class TestConcurrentAppendReadSet:
         write_delta(df, uri, checkpoint_interval=None)
         return uri
 
-    def _land_append(self, uri, version, lo, hi, data_change=True):
+    def _land_append(self, uri, version, lo, hi, data_change=True, stats=True):
         import json as _json
 
         from datarepo_spark.tables.delta_log import (
@@ -1445,7 +1445,7 @@ class TestConcurrentAppendReadSet:
                 "maxValues": {"id": hi - 1},
                 "nullCount": {"id": 0},
             }
-        )
+        ) if stats else None
         path = os.path.join(uri, "_delta_log", f"{version:020d}.json")
         with open(path, "w", encoding="utf-8") as fh:
             fh.write(
@@ -1574,6 +1574,52 @@ class TestConcurrentAppendReadSet:
                 delete_delta(spark, uri, [Filter("id", "<", 5)])
         finally:
             W._commit_atomically = real
+
+    @pytest.mark.parametrize(
+        "lo, hi, stats, key_max, conflicts",
+        [
+            (100, 110, True, None, False),
+            (0, 5, True, None, True),
+            (100, 110, False, None, True),
+            (100, 110, True, 0, True),
+        ],
+        ids=["stats_exclude_every_key", "holds_a_key", "no_stats",
+             "past_the_bound"],
+    )
+    def test_end_to_end_racing_append_vs_merge(
+        self, spark, tmp_path, monkeypatch, lo, hi, stats, key_max, conflicts
+    ):
+        """A MERGE's read set is its source keys (a concurrent append
+        conflicts unless its stats exclude every key), or past the key
+        bound the whole table."""
+        from datarepo_spark.core.exec import local_frame
+        from datarepo_spark.tables import delta_writer as W
+        from datarepo_spark.tables.delta_writer import (
+            ConcurrentModificationError,
+            merge_delta,
+        )
+
+        uri = self._table(spark, tmp_path)
+        if key_max is not None:
+            monkeypatch.setattr(W, "MERGE_KEY_PRUNE_MAX", key_max)
+        real = W._commit_atomically
+        raced = {"done": False}
+
+        def racing_commit(log_dir, actions, **kw):
+            if not raced["done"]:
+                raced["done"] = True
+                self._land_append(uri, 1, lo=lo, hi=hi, stats=stats)
+            return real(log_dir, actions, **kw)
+
+        monkeypatch.setattr(W, "_commit_atomically", racing_commit)
+        src = local_frame(
+            spark, [(3, "n3"), (7, "n7"), (50, "n50")], "id long, v string"
+        )
+        if conflicts:
+            with pytest.raises(ConcurrentModificationError, match="read set"):
+                merge_delta(spark, uri, src, on=["id"])
+        else:
+            assert merge_delta(spark, uri, src, on=["id"])["version"] == 2
 
 
 class TestIdentityColumns:

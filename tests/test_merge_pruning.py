@@ -14,11 +14,14 @@ import datetime as dt
 import decimal
 import json
 import os
+import re
 import shutil
 import time
 from contextlib import contextmanager
 from urllib.parse import unquote
 
+import numpy as np
+import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
@@ -105,10 +108,13 @@ def partitioned(spark, uri):
 
 
 def by_timestamp(spark, uri):
-    # Partitioned by a timestamp, with values whose Los Angeles wall
-    # time is ambiguous (the 2020-11-01 fall-back hour) or missing (the
-    # 2020-03-08 spring-forward gap).
-    ts = ["2020-11-01 00:30:00", "2020-11-01 01:30:00", "2020-03-08 02:30:00"]
+    # Partitioned by a timestamp. 08:30 and 09:30 UTC on 2020-11-01 are
+    # the two instants of Los Angeles' fall-back hour (01:30 there); the
+    # other values spell, in the session zone (UTC), wall times that are
+    # ambiguous (2020-11-01 01:30) or missing (2020-03-08 02:30) in Los
+    # Angeles.
+    ts = ["2020-11-01 00:30:00", "2020-11-01 01:30:00", "2020-03-08 02:30:00",
+          "2020-11-01 08:30:00", "2020-11-01 09:30:00"]
     df = local_frame(
         spark, [(t, i) for i, t in enumerate(ts)], "t string, v int"
     ).selectExpr("CAST(t AS TIMESTAMP) AS t", "v")
@@ -199,6 +205,35 @@ def ntz_ms_stats(spark, uri):
     df = local_frame(spark, rows, "n timestamp_ntz, v int")
     write_delta(df.repartitionByRange(4, "n"), uri)
     restate_stats(uri, "n", lambda v: v.isoformat(timespec="milliseconds"))
+
+
+FLOATS = [0.1, 0.3, 2.5, 7.0]
+
+
+def float_parts(spark, uri):
+    # p float partitions (Spark reads "0.1" as 0.1f = 0.10000000149...)
+    # holding f float values 0.1 and 0.3, with f's bounds as their
+    # shortest text, as delta-spark writes them (0.3 for 0.3f, a double
+    # below the true max)
+    rows = [(p, f, i) for i, (p, f) in enumerate(
+        (p, f) for p in FLOATS for f in FLOATS[:2]
+    )]
+    df = local_frame(spark, rows, "p float, f float, v int")
+    write_delta(df, uri, partition_by=["p"])
+    restate_stats(uri, "f", lambda v: float(str(np.float32(v))))
+
+
+def binary_keys(spark, uri):
+    rows = [(bytes([k]), f"old-{k}") for k in range(12)] + [(None, "old-null")]
+    df = local_frame(spark, rows, "k binary, v string")
+    write_delta(df.repartitionByRange(4, "v"), uri)
+
+
+def array_keys(spark, uri):
+    rows = [([k, k + 1], f"old-{k}") for k in range(12)]
+    rows += [([], "old-empty"), ([None], "old-null-element"), (None, "old-null")]
+    df = local_frame(spark, rows, "k array<int>, v string")
+    write_delta(df.repartitionByRange(4, "v"), uri)
 
 
 def with_dvs(spark, uri):
@@ -294,12 +329,28 @@ CASES = {
          ("new dir=", 99, "n99")],
         "s string, k long, v string", {"on": ["s", "k"]},
     ),
+    "float_key": (
+        float_parts, None, [(0.1, 0.3, -1), (2.5, 0.3, -2), (7.0, 9.5, -3)],
+        "p float, f float, v int", {"on": ["p", "f"]},
+    ),
+    "binary_key": (
+        binary_keys, None,
+        [(bytes([3]), "n3"), (bytes([11]), "n11"), (b"new", "n-new"),
+         (None, "n-null")],
+        "k binary, v string", {},
+    ),
+    "array_key": (
+        array_keys, None,
+        [([3, 4], "n3"), ([], "n-empty"), ([None], "n-null-element"),
+         ([99], "n99")],
+        "k array<int>, v string", {},
+    ),
 }
 # the cases whose table is partitioned, so its reads can take either
 # path (delta_table._hive_layout)
 PARTITIONED = [
     "partition_key", "timestamp_key", "double_keys_int_partition",
-    "string_partition",
+    "string_partition", "float_key",
 ]
 
 
@@ -368,6 +419,75 @@ def test_merge_on_a_column_named_count(spark, tmp_path, monkeypatch, key_max):
     )
     with pytest.raises(ValueError, match="duplicate merge keys"):
         merge_delta(spark, uri, dup, on=["count"])
+
+
+# -- keys Spark groups as one -------------------------------------------------
+
+NAN = float("nan")
+
+
+@pytest.mark.parametrize("key_max", [None, 0], ids=["collected", "whole"])
+@pytest.mark.parametrize(
+    "ddl, keys",
+    [
+        ("k double", [0.0, -0.0]),
+        ("k double", [NAN, NAN]),
+        ("k array<double>", [[NAN, 0.0], [NAN, -0.0]]),
+        ("k struct<a: double, b: string>", [(-0.0, None), (0.0, None)]),
+    ],
+    ids=["signed_zeros", "nans", "array", "struct"],
+)
+def test_keys_spark_groups_as_one_are_duplicates(
+    spark, tmp_path, monkeypatch, key_max, ddl, keys
+):
+    """An update source whose keys Spark's ``groupBy`` puts in one group
+    (NaN with NaN, -0.0 with 0.0, nested values by value) has duplicate
+    keys, whether the check runs on the collected keys or in Spark."""
+    if key_max is not None:
+        monkeypatch.setattr(delta_writer, "MERGE_KEY_PRUNE_MAX", key_max)
+    uri = str(tmp_path / "t")
+    write_delta(local_frame(spark, [(keys[0], 0)], f"{ddl}, v long"), uri)
+    src = local_frame(spark, [(k, i) for i, k in enumerate(keys)], f"{ddl}, v long")
+    with pytest.raises(ValueError, match="duplicate merge keys"):
+        merge_delta(spark, uri, src, on=["k"])
+
+
+# -- source rows in the table's types ----------------------------------------
+
+
+def test_merge_writes_source_rows_in_the_table_types(spark, bases, tmp_path):
+    """``int`` source rows merged into a ``long`` column are written as
+    ``long``, also when no target row is rewritten with them."""
+    uri = str(tmp_path / "t")
+    shutil.copytree(bases / "ints", uri)
+    src = local_frame(spark, [(90, "n90"), (91, "n91")], "k int, v string")
+    merge_delta(spark, uri, src, on=["k"])
+    for add in DeltaLog(uri).snapshot().files:
+        schema = pq.read_schema(os.path.join(uri, unquote(add.path)))
+        assert schema.field("k").type == pa.int64(), add.path
+
+
+def test_a_source_type_spark_cannot_up_cast_is_refused_before_any_job(
+    spark, tmp_path
+):
+    """A ``double`` key 7.0 merged into a table partitioned by ``p int``
+    raises, names the column and runs no job; the table stays readable."""
+    uri = str(tmp_path / "t")
+    int_partitions(spark, uri)
+    before = table_rows(spark, uri)
+    src = local_frame(spark, [(1.0, -1), (7.0, -7)], "p double, v long")
+
+    def refused():
+        with pytest.raises(ValueError, match="'p'.*table has int, source has double"):
+            merge_delta(spark, uri, src, on=["p"])
+
+    assert _group_jobs(spark, "merge-refused-pin", refused) == []
+    assert table_rows(spark, uri) == before
+    # a delete writes no source row, so it is not refused
+    merge_delta(
+        spark, uri, src, on=["p"], when_matched="delete", when_not_matched=None
+    )
+    assert len(table_rows(spark, uri)) == 20
 
 
 # -- what the pruned merge runs ----------------------------------------------
@@ -442,7 +562,10 @@ def test_keys_of_another_type_prune_the_target_scan(spark, tmp_path, monkeypatch
 
     monkeypatch.setattr(DeltalakeTable, "_read_from_log", spy)
     src = local_frame(spark, [(1.0, -1)], "p double, v long")
-    merge_delta(spark, uri, src, on=["p"], when_not_matched=None)
+    # a delete: an update would write a double into the int column
+    merge_delta(
+        spark, uri, src, on=["p"], when_matched="delete", when_not_matched=None
+    )
     assert len(scans[0].inputFiles()) == len(want) < len(files)
 
 
@@ -456,3 +579,61 @@ def test_noop_merge_runs_no_job(spark, clustered):
         ),
     )
     assert tasks == []
+
+
+def _plans_after(spark, execution_id):
+    """The physical plan descriptions of the SQL executions after
+    ``execution_id``, oldest first."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plans = []
+    for i in reversed(range(executions.size())):
+        execution = executions.apply(i)
+        if execution.executionId() <= execution_id:
+            break
+        plans.append(execution.physicalPlanDescription())
+    return plans[::-1]
+
+
+def _last_execution_id(spark):
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    size = executions.size()
+    return executions.apply(size - 1).executionId() if size else -1
+
+
+def _final_tree(plan):
+    """The tree of a formatted physical plan; with AQE, its final plan."""
+    return plan.split("\n\n\n")[0].split("== Initial Plan ==")[0]
+
+
+def _scanned(plan):
+    """The ``Location`` of every file scan in ``plan``'s final tree."""
+    return [
+        re.search(rf"^\({i}\) Scan .*?^Location: (.*?)$", plan, re.M | re.S)[1]
+        for i in re.findall(r"Scan \w+ +\((\d+)\)", _final_tree(plan))
+    ]
+
+
+def test_an_upsert_reads_its_source_keys_once(spark, clustered, tmp_path):
+    """Under the bound an upsert runs at most 6 jobs. Its touched-file
+    query and its write query take their key side from the collected
+    keys (a ``LocalTableScan``): only the write reads the source, once."""
+    uri = str(tmp_path / "t")
+    shutil.copytree(clustered, uri)
+    source_dir = str(tmp_path / "source")
+    spark.range(101, 105).selectExpr("id AS k", "-id AS v").write.parquet(source_dir)
+    src = spark.read.parquet(source_dir)
+    last = _last_execution_id(spark)
+    tasks = _group_jobs(
+        spark, "merge-keys-once-pin", lambda: merge_delta(spark, uri, src, on=["k"])
+    )
+    assert len(tasks) <= 6, tasks
+    plans = _plans_after(spark, last)
+    touched = [p for p in plans if "LeftSemi" in p]
+    writes = [p for p in plans if "InsertIntoHadoopFsRelationCommand" in p]
+    assert len(touched) == len(writes) == 1, plans
+    for plan, source_scans in ((touched[0], 0), (writes[0], 1)):
+        assert "LocalTableScan" in _final_tree(plan), plan
+        scans = [s for s in _scanned(plan) if source_dir in s]
+        assert len(scans) == source_scans, plan

@@ -49,6 +49,8 @@ COLUMNS = {
     "i": ("int", [-2, 0, 3, 7, 2**31 - 1, -(2**31), None, 5]),
     "l": ("bigint", [2**53 + 1, -1, 0, 5, 2**62, None, 3, 7]),
     "x": ("double", [NAN, -0.0, 0.0, INF, -INF, 1.5, 0.1, None]),
+    # Spark reads a float's 0.1 as 0.10000000149..., above the double 0.1
+    "f": ("float", [0.1, 2.5, -0.0, NAN, None, 1.5, 0.3, 7.0]),
     "m": ("decimal(4,2)", [Decimal(v) if v else None for v in (
         "0.10", "1.50", "-3.25", "99.99", "0.00", None, "7.00", "0.30")]),
     "b": ("boolean", [True, False, None, True, False, True, False, True]),
@@ -175,11 +177,13 @@ def texts(column):
     return st.one_of(variants, fixed)
 
 
-SAME = {"i": ints, "l": ints, "x": floats, "m": decimals, "b": st.booleans(),
-        "s": st.text("ab cé07B", max_size=3), "d": dates, "t": aware, "n": naive}
+SAME = {"i": ints, "l": ints, "x": floats, "f": floats, "m": decimals,
+        "b": st.booleans(), "s": st.text("ab cé07B", max_size=3), "d": dates,
+        "t": aware, "n": naive}
 NEIGHBOUR = {
     "i": st.one_of(floats, decimals), "l": st.one_of(floats, decimals),
-    "x": st.one_of(ints, decimals), "m": st.one_of(ints, floats),
+    "x": st.one_of(ints, decimals), "f": st.one_of(ints, decimals),
+    "m": st.one_of(ints, floats),
     "b": ints, "s": st.one_of(ints, floats, dates),
     "d": st.one_of(naive, aware), "t": st.one_of(dates, naive),
     "n": st.one_of(dates, aware),
@@ -232,6 +236,8 @@ EDGES = [Filter(*f) for f in [
     ("i", "in", ["3", 5.0]), ("i", "=", Decimal("3.0")),
     ("x", "=", NAN), ("x", "in", [NAN]), ("x", ">", 2.0), ("x", "<", NAN),
     ("x", "=", "-0.0"), ("x", "=", Decimal("0.1")), ("x", "=", 7),
+    ("f", ">", 0.1), ("f", "<=", 0.1), ("f", "in", [0.3, 7]), ("f", "=", 2.5),
+    ("f", "<", NAN), ("f", "=", "0.1"),
     ("m", "=", 0.1), ("m", ">", 0.3), ("m", "=", "0.1"), ("m", "<", 7),
     ("m", "in", [1.5, Decimal("0.3")]), ("m", "<", 0.105), ("m", ">=", 0.295),
     ("b", "=", "no"), ("b", "!=", "TRUE"), ("b", "in", ["t", "0"]),
