@@ -252,8 +252,9 @@ def write_dv_file(
     table_uri: str, positions: Iterable[int]
 ) -> tuple[dict, str]:
     """Write a storageType='u' DV file; returns (descriptor, abs path).
-    Test/tooling helper — the engine's own writer path does not produce
-    DVs (it rewrites files instead)."""
+    DELETE, UPDATE and ``overwrite_where`` write their soft deletes
+    through it, one file per touched data file, from the Python workers
+    of ``delta_writer._dv_soft_delete_actions``."""
     import uuid as _uuid
 
     positions = sorted(set(positions))

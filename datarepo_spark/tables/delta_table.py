@@ -394,11 +394,14 @@ def _names_differ(
 
 
 def _remap_to_logical(
-    df: DataFrame, snapshot: DeltaSnapshot, keep_rel: bool = False
+    df: DataFrame, snapshot: DeltaSnapshot, keep_rel: bool, keep_pos: bool
 ) -> DataFrame:
     """Rename a column-mapped scan's physical names (col-<uuid>) back to
     the table's logical names, recursing through structs, arrays, and
-    map values. Pure projection — whole-stage codegen, no shuffle."""
+    map keys and values, so the result has ``snapshot.schema``'s names
+    at every level. Pure projection — whole-stage codegen, no shuffle.
+    The scan holds every partition column, and the bookkeeping columns
+    the ``keep_*`` flags name."""
 
     def conv(col: Column, pdt: T.DataType, ldt: T.DataType) -> Column:
         if isinstance(ldt, T.StructType):
@@ -420,18 +423,21 @@ def _remap_to_logical(
                 col, lambda x: conv(x, pdt.elementType, ldt.elementType)
             )
         if isinstance(ldt, T.MapType):
-            if not isinstance(
-                ldt.valueType, (T.StructType, T.ArrayType, T.MapType)
-            ):
-                return col
-            return F.transform_values(
-                col, lambda _k, v: conv(v, pdt.valueType, ldt.valueType)
-            )
+            nested = (T.StructType, T.ArrayType, T.MapType)
+            if isinstance(ldt.keyType, nested):
+                col = F.transform_keys(
+                    col, lambda k, _v: conv(k, pdt.keyType, ldt.keyType)
+                )
+            if isinstance(ldt.valueType, nested):
+                col = F.transform_values(
+                    col, lambda _k, v: conv(v, pdt.valueType, ldt.valueType)
+                )
+            return col
         return col
 
     pdata = snapshot.physical_data_schema
     ldata = snapshot.data_schema
-    out: list[Column] = []
+    out: list[Union[str, Column]] = []
     for pf, lf in zip(pdata.fields, ldata.fields):
         if _names_differ(snapshot, pf, lf):
             out.append(
@@ -439,14 +445,14 @@ def _remap_to_logical(
                 .alias(lf.name)
             )
         else:
-            out.append(F.col(f"`{pf.name}`"))
+            out.append(f"`{pf.name}`")
     # partition columns (restored with logical names) and bookkeeping
     # columns pass through untouched
-    out.extend(F.col(c) for c in snapshot.partition_columns if c in df.columns)
-    if keep_rel and "__delta_rel" in df.columns:
-        out.append(F.col("__delta_rel"))
-    if "__delta_pos" in df.columns:
-        out.append(F.col("__delta_pos"))
+    out.extend(snapshot.partition_columns)
+    if keep_rel:
+        out.append("__delta_rel")
+    if keep_pos:
+        out.append("__delta_pos")
     return df.select(*out)
 
 
@@ -563,9 +569,11 @@ class DeltalakeTable:
         )
         typed = typed_dnf(session, snapshot, dnf)
         df = self._read_from_log(session, snapshot, typed, dnf=dnf)
+        source = snapshot.schema  # the scan's columns, known on the driver
         if df is None:  # no files after pruning → exact-schema empty
-            df = empty_normalized_df(session, self._declared_schema(snapshot))
-        return self._finish(df, sql_filter, dnf, columns, snapshot)
+            source = self._declared_schema(snapshot)
+            df = empty_normalized_df(session, source)
+        return self._finish(df, source, sql_filter, dnf, columns, snapshot)
 
     def _read_from_log(
         self,
@@ -581,7 +589,10 @@ class DeltalakeTable:
         ``__delta_rel`` column (each row's add.path) — merge_delta uses it
         to find which files contain matched keys, the copy-on-write
         rewrite unit. ``keep_pos=True`` also keeps ``__delta_pos`` (each
-        LIVE row's parquet row index) — delete_delta's DV coordinate."""
+        LIVE row's parquet row index) — delete_delta's DV coordinate.
+        The other columns are ``snapshot.schema``'s, with its names and
+        types at every nesting level: callers project from that schema
+        without asking the JVM for the frame's."""
         tz = partition_zone(spark, snapshot)
         files = _partition_prune(snapshot, typed, tz)
         # With column mapping the parquet files carry PHYSICAL column
@@ -635,7 +646,8 @@ class DeltalakeTable:
             df = df.withColumn("__delta_pos", F.col("_metadata.row_index"))
         join_parts = bool(part_fields) and not hive
         nseg = len(part_fields) + 1
-        if keep_rel or has_dv or keep_pos or join_parts:
+        with_rel = keep_rel or has_dv or keep_pos or join_parts
+        if with_rel:
             # Each row's file as its RELATIVE path — the only identifier
             # the protocol guarantees unique (basenames can repeat across
             # partition dirs, e.g. compacted tables writing data.parquet
@@ -751,10 +763,10 @@ class DeltalakeTable:
                 )
             if not keep_pos:
                 df = df.drop("__delta_pos")
-        if "__delta_rel" in df.columns and not (keep_rel or keep_pos):
+        if with_rel and not (keep_rel or keep_pos):
             df = df.drop("__delta_rel")
         if mapping:
-            df = _remap_to_logical(df, snapshot, keep_rel=keep_rel)
+            df = _remap_to_logical(df, snapshot, keep_rel or keep_pos, keep_pos)
         return df
 
     # -- post-read semantics ---------------------------------------------------
@@ -769,11 +781,14 @@ class DeltalakeTable:
     def _finish(
         self,
         df: DataFrame,
+        source: T.StructType,
         sql_filter: Optional[str],
         dnf: NormalizedFilters,
         columns: Optional[Sequence[str]],
         snapshot: DeltaSnapshot,
     ) -> DataFrame:
+        """Filter ``df``, whose schema is ``source``, and project it to
+        the declared schema and ``columns``."""
         schema = self._declared_schema(snapshot)
         extra_names = [name for name, _ in self.extra_cols]
         schema_names = [f.name for f in schema.fields]
@@ -808,14 +823,17 @@ class DeltalakeTable:
             if c not in read_set and c in schema_names:
                 read_set.append(c)
 
-        df = normalize_df(df, schema, read_set)
+        df = normalize_df(df, schema, read_set, source)
 
         # extra_cols: computed, schema-readonly columns
         # (reference deltalake_table.py:83,222-229,263-264).
+        out_names = list(read_set)
         for name, expr in self.extra_cols:
             if name in selected:
                 col = F.expr(expr) if isinstance(expr, str) else expr
                 df = df.withColumn(name, col)
+                if name not in out_names:
+                    out_names.append(name)
 
         # Dedup by unique key. Reference keeps first-in-scan-order
         # (deltalake_table.py:266-279); scan order is not defined across
@@ -825,7 +843,9 @@ class DeltalakeTable:
         if self.unique_columns:
             df = df.dropDuplicates(self.unique_columns)
 
-        return df.select(*selected)
+        if out_names != selected:
+            df = df.select(*selected)
+        return df
 
     # -- introspection ----------------------------------------------------------
 

@@ -83,8 +83,8 @@ def _remap_to_physical(df: DataFrame, snapshot, schema=None):
     """Inverse of delta_table._remap_to_logical: project a LOGICAL-layout
     frame into the table's PHYSICAL parquet layout (col-<uuid> names from
     ``delta.columnMapping.physicalName`` field metadata), recursing
-    through structs, arrays, and map values. Pure projection — codegen,
-    no shuffle. Partition columns are renamed too, so partitionBy
+    through structs, arrays, and map keys and values. Pure projection —
+    codegen, no shuffle. Partition columns are renamed too, so partitionBy
     staging produces physically-keyed directory names → physically-keyed
     partitionValues, as the mapped protocol requires. ``schema``
     overrides the snapshot's (schema-merge writes map against the
@@ -114,12 +114,14 @@ def _remap_to_physical(df: DataFrame, snapshot, schema=None):
             elem = T.StructField("element", dt.elementType, True)
             return F.transform(col, lambda x: conv(x, elem))
         if isinstance(dt, T.MapType):
-            if not isinstance(
-                dt.valueType, (T.StructType, T.ArrayType, T.MapType)
-            ):
-                return col
-            val = T.StructField("value", dt.valueType, True)
-            return F.transform_values(col, lambda _k, v: conv(v, val))
+            nested = (T.StructType, T.ArrayType, T.MapType)
+            if isinstance(dt.keyType, nested):
+                key = T.StructField("key", dt.keyType, False)
+                col = F.transform_keys(col, lambda k, _v: conv(k, key))
+            if isinstance(dt.valueType, nested):
+                val = T.StructField("value", dt.valueType, True)
+                col = F.transform_values(col, lambda _k, v: conv(v, val))
+            return col
         return col
 
     out = []

@@ -9,8 +9,13 @@ from heterogeneous files must come back with
 
 Spark's ``mergeSchema`` only widens the read schema; it does not reorder or
 add absent columns, so normalization is an explicit select. It is a pure
-projection — Catalyst collapses it into the scan, so it costs nothing at
-any scale.
+projection, and Catalyst collapses it into the scan, so executing it is
+free at any scale. Building it is not: each ``select`` costs one
+driver-side analysis pass, and each ``Column`` built in Python costs
+py4j round trips (PySpark captures a call site for every one). So the
+projection is computed from a schema the driver already holds (a Delta
+snapshot's, a table's declared schema) when the caller passes it, and an
+unchanged column goes in as its plain name.
 """
 
 from __future__ import annotations
@@ -51,12 +56,15 @@ def normalize_df(
     df: DataFrame,
     schema: T.StructType,
     columns: Optional[Sequence[str]] = None,
+    source: Optional[T.StructType] = None,
 ) -> DataFrame:
-    """Normalize ``df`` to ``schema`` (order, types, missing→typed NULL)."""
-    present = set(df.columns)
+    """Normalize ``df`` to ``schema`` (order, types, missing→typed NULL).
+    ``source`` is ``df``'s schema when the caller already holds it; by
+    default it is read back from the JVM."""
+    source = df.schema if source is None else source
+    read_types = {f.name: f.dataType for f in source.fields}
     wanted = list(columns) if columns is not None else [f.name for f in schema]
     by_name = {f.name: f for f in schema.fields}
-    read_types = dict(zip(df.schema.names, [f.dataType for f in df.schema]))
     exprs = []
     for name in wanted:
         field = by_name.get(name)
@@ -65,10 +73,10 @@ def normalize_df(
                 f"Column {name!r} not in declared schema "
                 f"(schema has: {[f.name for f in schema.fields]})"
             )
-        if name in present:
+        if name in read_types:
             target = _strip_nullability(field.dataType)
             if _strip_nullability(read_types[name]) == target:
-                exprs.append(F.col(name).alias(name))  # no-op cast elided
+                exprs.append(name)  # no-op cast elided
             else:
                 exprs.append(F.col(name).cast(target).alias(name))
         else:

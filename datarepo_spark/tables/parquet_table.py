@@ -23,8 +23,6 @@ Spark-first notes:
 
 from __future__ import annotations
 
-import os
-import re
 from typing import Any, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -282,14 +280,19 @@ class ParquetTable:
             # basePath keeps the pruned-away k=v segments as columns.
             reader = reader.option("basePath", self.uri)
         df = reader.parquet(uri)
-        # Enforce declared partition types (discovery infers int/string).
-        for partition in self.partitioning:
-            if partition.column in df.columns:
-                df = df.withColumn(
-                    partition.column,
-                    F.col(partition.column).cast(partition.col_type),
-                )
-        return df
+        # Enforce declared partition types where the read schema does not
+        # already give them (discovery infers int/string). Without a
+        # declared schema only the JVM knows which columns the scan has.
+        if full_schema is None:
+            read_types = dict.fromkeys(df.columns)
+        else:
+            read_types = {f.name: f.dataType for f in full_schema.fields}
+        casts = {
+            p.column: F.col(p.column).cast(p.col_type)
+            for p in self.partitioning
+            if p.column in read_types and read_types[p.column] != p.col_type
+        }
+        return df.withColumns(casts) if casts else df
 
     def _read_directory(
         self,
@@ -303,30 +306,25 @@ class ParquetTable:
         if data_schema is not None:
             reader = reader.schema(data_schema)
         df = reader.parquet(uri)
+        parts: dict[str, Any] = {}
         # Reconstruct un-pruned partition columns from each row's file path —
         # distributed (uses the hidden _metadata column), no driver listing.
         if remaining:
-            path = F.col("_metadata.file_path")
-            base_depth = len(self.partitioning) - len(remaining)
             # Path shape: .../<base>/<p1>/<p2>/.../<file>. Segment i (from the
             # file, counting backwards) = partition len(remaining)-i.
-            segments = F.split(path, "/")
+            segments = F.split(F.col("_metadata.file_path"), "/")
             n = F.size(segments)
             for i, partition in enumerate(remaining):
                 # element_at is 1-based; file name is the last element.
                 idx = n - (len(remaining) - i)
-                df = df.withColumn(
-                    partition.column,
-                    F.element_at(segments, idx).cast(partition.col_type),
+                parts[partition.column] = F.element_at(segments, idx).cast(
+                    partition.col_type
                 )
-            _ = base_depth  # depth implied by trailing segments
         # Re-add pruned partition values as typed literals (reference
         # parquet_table.py:290-303).
         for partition, value in applied:
-            df = df.withColumn(
-                partition.column, F.lit(value).cast(partition.col_type)
-            )
-        return df
+            parts[partition.column] = F.lit(value).cast(partition.col_type)
+        return df.withColumns(parts) if parts else df
 
     # -- introspection ----------------------------------------------------
 
@@ -358,37 +356,3 @@ class ParquetTable:
             if f.name not in part_names
         ]
         return TableSchema(columns=columns, partitions=partitions)
-
-
-def write_partitioned_fixture(
-    df_rows: list[dict],
-    schema: T.StructType,
-    base: str,
-    partitions: Sequence[str],
-    scheme: PartitioningScheme,
-) -> None:
-    """Test helper: write rows as one parquet file per partition tuple in
-    either layout (mirrors the reference fixture,
-    test_parquet_table.py:34-92). Uses pyarrow directly — tiny data only."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from collections import defaultdict
-
-    groups: dict[tuple, list[dict]] = defaultdict(list)
-    for row in df_rows:
-        groups[tuple(row[p] for p in partitions)].append(row)
-    data_fields = [f for f in schema.fields if f.name not in partitions]
-    for key, rows in groups.items():
-        if scheme is PartitioningScheme.HIVE:
-            segs = [f"{p}={v}" for p, v in zip(partitions, key)]
-        else:
-            segs = [str(v) for v in key]
-        d = os.path.join(base, *segs)
-        os.makedirs(d, exist_ok=True)
-        cols = {
-            f.name: [r.get(f.name) for r in rows] for f in data_fields
-        }
-        pq.write_table(pa.table(cols), os.path.join(d, "data.parquet"))
-
-
-_PART_SEGMENT_RE = re.compile(r"^([^=/]+)=([^/]*)$")

@@ -8,16 +8,46 @@ like the reference does (:118-121).
 """
 
 import datetime as dt
+import os
+from collections import defaultdict
+from typing import Sequence
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import types as T
 
 from datarepo_spark.core.filters import Filter
 from datarepo_spark.tables.metadata import Partition, PartitioningScheme
-from datarepo_spark.tables.parquet_table import (
-    ParquetTable,
-    write_partitioned_fixture,
-)
+from datarepo_spark.tables.parquet_table import ParquetTable
+
+
+def write_partitioned_fixture(
+    df_rows: list[dict],
+    schema: T.StructType,
+    base: str,
+    partitions: Sequence[str],
+    scheme: PartitioningScheme,
+) -> None:
+    """Write rows as one parquet file per partition tuple in either
+    layout (mirrors the reference fixture, test_parquet_table.py:34-92).
+    Uses pyarrow directly — tiny data only."""
+    groups: dict[tuple, list[dict]] = defaultdict(list)
+    for row in df_rows:
+        groups[tuple(row[p] for p in partitions)].append(row)
+    data_fields = [f for f in schema.fields if f.name not in partitions]
+    for key, rows in groups.items():
+        if scheme is PartitioningScheme.HIVE:
+            segs = [f"{p}={v}" for p, v in zip(partitions, key)]
+        else:
+            segs = [str(v) for v in key]
+        d = os.path.join(base, *segs)
+        os.makedirs(d, exist_ok=True)
+        cols = {
+            f.name: [r.get(f.name) for r in rows] for f in data_fields
+        }
+        pq.write_table(pa.table(cols), os.path.join(d, "data.parquet"))
+
 
 SCHEMA = T.StructType(
     [
