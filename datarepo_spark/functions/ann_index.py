@@ -301,10 +301,7 @@ def _finish_build(spark, assigned, uri, index, nlist, quantizer=None):
 
     from ..tables.delta_writer import write_delta
 
-    write_delta(
-        assigned.drop("__sim"), uri, partition_by=["cell"],
-        checkpoint_interval=None,
-    )
+    write_delta(assigned.drop("__sim"), uri, partition_by=["cell"])
     cpath = os.path.join(uri, _CENTROID_REL)
     os.makedirs(os.path.dirname(cpath), exist_ok=True)
     cents = np.asarray(index.centroids, dtype=np.float64)
@@ -424,49 +421,43 @@ def append_to_ann_index(
     neither the Delta write nor the stats file runs, so stats can never
     record rows the ledger refused."""
     from ..tables.delta_log import DeltaLog
-    from ..tables.delta_writer import write_delta
+    from ..tables.delta_writer import _idempotent_txn, write_delta
 
-    if (txn_app_id is None) != (txn_version is None):
-        raise ValueError(
-            "txn_app_id and txn_version must be set together"
-        )
     _check_rebuild_lock(uri)
-    if txn_app_id is not None:
-        snap = DeltaLog(uri).snapshot()
-        last = snap.app_transactions.get(txn_app_id)
-        if last is not None and txn_version <= last:
-            # Replayed epoch: the Delta rows are already committed. But
-            # a crash BETWEEN that commit and the stats write would have
-            # lost this epoch's drift stats forever (the early return
-            # would skip the very file designed to survive replays) —
-            # so if accounting is enabled and the stamped file is
-            # missing, recompute the batch stats and write it now. The
-            # deterministic name makes this an idempotent overwrite.
-            stats_enabled = os.path.exists(
-                os.path.join(uri.rstrip("/"), _STATS_DIR_REL, "base.parquet")
-            ) or os.path.exists(os.path.join(uri.rstrip("/"), _STATS_REL))
-            stamp = f"{txn_app_id}-{txn_version}"
-            stamped = os.path.join(
-                uri.rstrip("/"), _STATS_DIR_REL, _stamped_stats_name(stamp)
+    snap = DeltaLog(uri).snapshot() if txn_app_id is not None else None
+    if _idempotent_txn(snap, txn_app_id, txn_version)[1]:
+        # Replayed epoch: the Delta rows are already committed. But
+        # a crash BETWEEN that commit and the stats write would have
+        # lost this epoch's drift stats forever (the early return
+        # would skip the very file designed to survive replays) —
+        # so if accounting is enabled and the stamped file is
+        # missing, recompute the batch stats and write it now. The
+        # deterministic name makes this an idempotent overwrite.
+        stats_enabled = os.path.exists(
+            os.path.join(uri.rstrip("/"), _STATS_DIR_REL, "base.parquet")
+        ) or os.path.exists(os.path.join(uri.rstrip("/"), _STATS_REL))
+        stamp = f"{txn_app_id}-{txn_version}"
+        stamped = os.path.join(
+            uri.rstrip("/"), _STATS_DIR_REL, _stamped_stats_name(stamp)
+        )
+        # ... UNLESS the epoch predates the current generation: a
+        # rebuild trained on those rows (they ARE the new base) and
+        # reset the stats dir, so the stamped file is missing by
+        # design — backfilling against the NEW centroids would
+        # double-count the rows and push index_health toward a
+        # spurious rebuild.
+        if txn_version <= _generation_ledger(uri).get(txn_app_id, -1):
+            return snap.version
+        if stats_enabled and not os.path.exists(stamped):
+            replay_index = load_ann_index(uri)
+            replay_assigned = replay_index.assign(
+                df, vec_col=vec_col, id_col=id_col, nprobe=1,
+                with_sim=True,
             )
-            # ... UNLESS the epoch predates the current generation: a
-            # rebuild trained on those rows (they ARE the new base) and
-            # reset the stats dir, so the stamped file is missing by
-            # design — backfilling against the NEW centroids would
-            # double-count the rows and push index_health toward a
-            # spurious rebuild.
-            if txn_version <= _generation_ledger(uri).get(txn_app_id, -1):
-                return snap.version
-            if stats_enabled and not os.path.exists(stamped):
-                replay_index = load_ann_index(uri)
-                replay_assigned = replay_index.assign(
-                    df, vec_col=vec_col, id_col=id_col, nprobe=1,
-                    with_sim=True,
-                )
-                _write_append_stats(
-                    uri, _aggregate_cell_stats(replay_assigned), stamp=stamp
-                )
-            return snap.version  # replayed epoch: Delta write is a no-op
+            _write_append_stats(
+                uri, _aggregate_cell_stats(replay_assigned), stamp=stamp
+            )
+        return snap.version  # replayed epoch: Delta write is a no-op
 
     index = load_ann_index(uri)
     assigned = index.assign(
@@ -486,7 +477,7 @@ def append_to_ann_index(
     try:
         version = write_delta(
             assigned.drop("__sim"), uri, partition_by=["cell"],
-            checkpoint_interval=None, **txn,
+            **txn,
         )
         # existence probe only — never read/merge the stats files here
         # (that would be O(appends) parquet reads per append)

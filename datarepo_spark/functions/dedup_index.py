@@ -143,12 +143,10 @@ def build_dedup_index(
         _bucket_rows(banded, id_col).repartition(bands, F.col("band")),
         os.path.join(uri.rstrip("/"), "buckets"),
         partition_by=["band"],
-        checkpoint_interval=None,
     )
     write_delta(
         banded.select(F.col(id_col).alias("id"), F.col("__sig").alias("sig")),
         os.path.join(uri.rstrip("/"), "signatures"),
-        checkpoint_interval=None,
     )
     os.makedirs(os.path.dirname(_meta_path(uri)), exist_ok=True)
     tmp = _meta_path(uri) + ".tmp"
@@ -205,7 +203,6 @@ def append_to_dedup_index(
         ),
         os.path.join(uri.rstrip("/"), "buckets"),
         partition_by=["band"],
-        checkpoint_interval=None,
         **txn,
     )
     write_delta(
@@ -213,7 +210,6 @@ def append_to_dedup_index(
             F.col(meta["id_col"]).alias("id"), F.col("__sig").alias("sig")
         ),
         os.path.join(uri.rstrip("/"), "signatures"),
-        checkpoint_interval=None,
         **txn,
     )
 

@@ -160,15 +160,9 @@ def _maintenance_fixture(spark: SparkSession, sf_dir: str) -> str:
         src.filter(F.col("o_orderkey") % 3 == i) for i in range(3)
     ]
     for epoch, part in enumerate(thirds):
-        write_delta(
-            part, uri, txn_app_id="ingest", txn_version=epoch,
-            checkpoint_interval=None,
-        )
+        write_delta(part, uri, txn_app_id="ingest", txn_version=epoch)
     # failure replay of epoch 1: must be a no-op
-    write_delta(
-        thirds[1], uri, txn_app_id="ingest", txn_version=1,
-        checkpoint_interval=None,
-    )
+    write_delta(thirds[1], uri, txn_app_id="ingest", txn_version=1)
     stats = compact(spark, uri)
     assert stats["files_added"] >= 1 and stats["files_removed"] >= 3
     removed = vacuum(uri)
@@ -307,7 +301,8 @@ def _dv_fixture(spark: SparkSession, sf_dir: str) -> str:
     import json as _json
 
     from ..tables.delta_dv import write_dv_file
-    from ..tables.delta_log import DeltaLog, invalidate_snapshot_cache
+    from ..tables.delta_log import DeltaLog
+    from ..tables.delta_writer import _commit_atomically
 
     base = session_tmp("datarepo_delta_dv_")
     uri = os.path.join(base, "orders_dv")
@@ -318,31 +313,28 @@ def _dv_fixture(spark: SparkSession, sf_dir: str) -> str:
         .coalesce(1)
         .sortWithinPartitions("o_orderkey")
     )
-    write_delta(src, uri, checkpoint_interval=None)
+    write_delta(src, uri)
     snap = DeltaLog(uri).snapshot()
     (add,) = snap.files
     n_rows = _json.loads(add.stats)["numRecords"]
     descriptor, _path = write_dv_file(uri, range(0, n_rows, 7))
-    with open(
-        os.path.join(uri, "_delta_log", f"{1:020d}.json"), "w"
-    ) as fh:
-        fh.write(
-            _json.dumps(
-                {
-                    "add": {
-                        "path": add.path,
-                        "partitionValues": {},
-                        "size": add.size,
-                        "modificationTime": 0,
-                        "dataChange": False,
-                        "stats": add.stats,
-                        "deletionVector": descriptor,
-                    }
+    _commit_atomically(
+        uri,
+        [
+            {
+                "add": {
+                    "path": add.path,
+                    "partitionValues": {},
+                    "size": add.size,
+                    "modificationTime": 0,
+                    "dataChange": False,
+                    "stats": add.stats,
+                    "deletionVector": descriptor,
                 }
-            )
-            + "\n"
-        )
-    invalidate_snapshot_cache(uri)
+            }
+        ],
+        snapshot=snap,
+    )
     _BUILT_DV[key] = uri
     return uri
 
@@ -394,10 +386,7 @@ def _dv_delete_fixture(spark: SparkSession, sf_dir: str) -> str:
         .filter(F.col("o_orderkey") <= 1200)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
     )
-    write_delta(
-        src.repartitionByRange(3, "o_orderkey"), uri,
-        checkpoint_interval=None,
-    )
+    write_delta(src.repartitionByRange(3, "o_orderkey"), uri)
     r1 = delete_delta(
         spark, uri, [Filter("o_totalprice", ">", 150000.0)]
     )
@@ -452,10 +441,7 @@ def _update_fixture(spark: SparkSession, sf_dir: str) -> str:
         .filter(F.col("o_orderkey") <= 1200)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
     )
-    write_delta(
-        src.repartitionByRange(3, "o_orderkey"), uri,
-        checkpoint_interval=None,
-    )
+    write_delta(src.repartitionByRange(3, "o_orderkey"), uri)
     res = update_delta(
         spark, uri,
         [Filter("o_totalprice", ">", 150000.0)],
@@ -511,16 +497,12 @@ def _cdf_fixture(spark: SparkSession, sf_dir: str) -> str:
     uri = os.path.join(base, "orders_cdf")
     cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
     src = load(spark, sf_dir, "orders").select(*cols)
-    write_delta(
-        src.filter(F.col("o_orderkey") <= 800), uri,
-        checkpoint_interval=None,
-    )
+    write_delta(src.filter(F.col("o_orderkey") <= 800), uri)
     write_delta(
         src.filter(
             (F.col("o_orderkey") > 800) & (F.col("o_orderkey") <= 1200)
         ),
         uri,
-        checkpoint_interval=None,
     )
     res = delete_delta(spark, uri, [Filter("o_totalprice", ">", 150000.0)])
     assert res["rows_deleted"] > 0
@@ -618,16 +600,13 @@ def _ivm_fixture(spark: SparkSession, sf_dir: str):
         src, dst, os.path.join(base, "cursor.json"),
         group_cols=["o_orderstatus"], sum_cols=["o_totalprice"],
     )
-    write_delta(
-        orders.filter(F.col("o_orderkey") <= 1200), src,
-        checkpoint_interval=None,
-    )
+    write_delta(orders.filter(F.col("o_orderkey") <= 1200), src)
     agg.advance(spark)
     write_delta(
         orders.filter(
             (F.col("o_orderkey") > 1200) & (F.col("o_orderkey") <= 1800)
         ),
-        src, checkpoint_interval=None,
+        src,
     )
     delete_delta(spark, src, [Filter("o_totalprice", ">", 150000.0)])
     agg.advance(spark)
@@ -688,7 +667,7 @@ def _clone_fixture(spark: SparkSession, sf_dir: str) -> str:
         .filter(F.col("o_orderkey") <= 1500)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
     )
-    write_delta(orders, src, checkpoint_interval=None)
+    write_delta(orders, src)
     delete_delta(spark, src, [Filter("o_totalprice", ">", 150000.0)])
     clone_delta(src, dst, shallow=True)
     # DML in the clone only
@@ -748,16 +727,13 @@ def _ivm_mm_fixture(spark: SparkSession, sf_dir: str):
         minmax_cols=["o_totalprice"],
         avg_cols=["o_totalprice"],
     )
-    write_delta(
-        orders.filter(F.col("o_orderkey") <= 1200), src,
-        checkpoint_interval=None,
-    )
+    write_delta(orders.filter(F.col("o_orderkey") <= 1200), src)
     agg.advance(spark)
     write_delta(
         orders.filter(
             (F.col("o_orderkey") > 1200) & (F.col("o_orderkey") <= 1800)
         ),
-        src, checkpoint_interval=None,
+        src,
     )
     # removes the stored max of every status group → re-derivation
     delete_delta(spark, src, [Filter("o_totalprice", ">", 150000.0)])
@@ -818,7 +794,7 @@ def _restore_fixture(spark: SparkSession, sf_dir: str) -> str:
         .filter(F.col("o_orderkey") <= 1000)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
     )
-    write_delta(src, uri, checkpoint_interval=None)
+    write_delta(src, uri)
     res = delete_delta(spark, uri, [Filter("o_totalprice", ">", 100000.0)])
     assert res["rows_deleted"] > 0
     rres = restore_table(spark, uri, 0)
@@ -914,7 +890,6 @@ def _identity_fixture(spark: SparkSession, sf_dir: str) -> str:
     write_delta(
         orders.filter(F.col("o_orderkey") <= 1000),
         uri,
-        checkpoint_interval=None,
         identity_cols={"row_id": {"start": 1, "step": 1}},
     )
     write_delta(
@@ -922,7 +897,6 @@ def _identity_fixture(spark: SparkSession, sf_dir: str) -> str:
             (F.col("o_orderkey") > 1000) & (F.col("o_orderkey") <= 1500)
         ),
         uri,
-        checkpoint_interval=None,
     )
     _BUILT_IDENTITY[key] = uri
     return uri
@@ -999,16 +973,13 @@ def _ivm_join_fixture(spark: SparkSession, sf_dir: str):
         sum_cols=["o_totalprice"],
         minmax_cols=["o_totalprice"],
     )
-    write_delta(
-        orders.filter(F.col("o_orderkey") <= 1200), src,
-        checkpoint_interval=None,
-    )
+    write_delta(orders.filter(F.col("o_orderkey") <= 1200), src)
     agg.advance(spark)
     write_delta(
         orders.filter(
             (F.col("o_orderkey") > 1200) & (F.col("o_orderkey") <= 1800)
         ),
-        src, checkpoint_interval=None,
+        src,
     )
     # removes stored maxima -> the dim-enriched re-derivation path runs
     delete_delta(spark, src, [Filter("o_totalprice", ">", 150000.0)])
@@ -1076,16 +1047,13 @@ def _ivm_distinct_fixture(spark: SparkSession, sf_dir: str):
         src, dst, os.path.join(base, "cursor.json"),
         group_cols=["o_orderstatus"], distinct_col="o_custkey",
     )
-    write_delta(
-        orders.filter(F.col("o_orderkey") <= 1200), src,
-        checkpoint_interval=None,
-    )
+    write_delta(orders.filter(F.col("o_orderkey") <= 1200), src)
     agg.advance(spark)
     write_delta(
         orders.filter(
             (F.col("o_orderkey") > 1200) & (F.col("o_orderkey") <= 1800)
         ),
-        src, checkpoint_interval=None,
+        src,
     )
     delete_delta(spark, src, [Filter("o_totalprice", ">", 150000.0)])
     agg.advance(spark)
@@ -1148,16 +1116,13 @@ def _ivm_topk_fixture(spark: SparkSession, sf_dir: str):
         group_cols=["o_orderstatus"],
         id_col="o_orderkey", val_col="o_totalprice", k=3,
     )
-    write_delta(
-        orders.filter(F.col("o_orderkey") <= 1200), src,
-        checkpoint_interval=None,
-    )
+    write_delta(orders.filter(F.col("o_orderkey") <= 1200), src)
     agg.advance(spark)
     write_delta(
         orders.filter(
             (F.col("o_orderkey") > 1200) & (F.col("o_orderkey") <= 1800)
         ),
-        src, checkpoint_interval=None,
+        src,
     )
     delete_delta(spark, src, [Filter("o_totalprice", ">", 150000.0)])
     agg.advance(spark)
@@ -1216,10 +1181,7 @@ def _replace_where_fixture(spark: SparkSession, sf_dir: str) -> str:
         .filter(F.col("o_orderkey") <= 1200)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
     )
-    write_delta(
-        src.repartitionByRange(3, "o_orderkey"), uri,
-        checkpoint_interval=None,
-    )
+    write_delta(src.repartitionByRange(3, "o_orderkey"), uri)
     repl = (
         src.filter(F.col("o_orderstatus") == "F")
         .select(

@@ -701,7 +701,6 @@ def streaming_delta_sink_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
             dest,
             txn_app_id=app_id,
             txn_version=batch_id,
-            checkpoint_interval=None,
         )
 
     with _stream_shuffle_partitions(spark, path):
@@ -767,7 +766,6 @@ def streaming_running_total_twin(
             dest,
             txn_app_id=app_id,
             txn_version=batch_id,
-            checkpoint_interval=None,
         )
 
     with _stream_shuffle_partitions(spark, path):
@@ -874,7 +872,6 @@ def streaming_quantile_sketch_twin(
             dest,
             txn_app_id=app_id,
             txn_version=batch_id,
-            checkpoint_interval=None,
         )
 
     with _stream_shuffle_partitions(spark, path):

@@ -277,9 +277,7 @@ def admit_novel_documents(
                 if epoch_id is not None
                 else {}
             )
-            write_delta(
-                admitted, out_uri, checkpoint_interval=None, **txn
-            )
+            write_delta(admitted, out_uri, **txn)
             if n:
                 append_to_dedup_index(
                     spark,

@@ -163,10 +163,8 @@ def clone_delta(
                 add_action["deletionVector"] = dv
         actions.append({"add": add_action})
 
-    log_dir = os.path.join(dst_uri, "_delta_log")
-    os.makedirs(log_dir, exist_ok=True)
     return _commit_atomically(
-        log_dir,
+        dst_uri,
         actions,
         operation="CLONE",
         operation_params={
@@ -174,4 +172,4 @@ def clone_delta(
             "isShallow": shallow,
             "sourceVersion": json.dumps(snapshot.version),
         },
-    )
+    ).version

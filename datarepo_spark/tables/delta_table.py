@@ -43,6 +43,7 @@ from urllib.parse import unquote
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.utils import is_timestamp_ntz_preferred
 
 from ..core.compile import filters_to_column
 from ..core.exec import local_frame
@@ -284,9 +285,26 @@ def typed_dnf(
     """``dnf`` with its literals typed once (:func:`typed_literal`) for
     every prune of ``snapshot``. A filter no prune can read (UNPRUNABLE,
     an unknown column or operator, ``contains`` on a non-string column)
-    leaves its conjunction, which only weakens it."""
+    leaves its conjunction, which only weakens it.
+
+    A ``datetime`` on a ``timestamp_ntz`` column is typed as pyspark
+    sends it: an instant (a naive one in the process's local zone,
+    unless the session prefers ``timestamp_ntz`` literals), which Spark
+    compares with the column read in the session zone, so as the
+    literal's wall time in that zone. (MERGE keys, which are wall times,
+    do not pass here.)"""
     types = {f.name: f.dataType for f in snapshot.schema.fields}
     zone = functools.cache(lambda: session_zone(spark))
+    ntz_preferred = functools.cache(is_timestamp_ntz_preferred)
+
+    def sent(value: Any, dtype: T.DataType) -> Any:
+        if not (
+            isinstance(value, _dt.datetime)
+            and isinstance(dtype, T.TimestampNTZType)
+        ) or (value.tzinfo is None and ntz_preferred()):
+            return value
+        instant = typed_literal(value, T.TimestampType(), zone)
+        return instant.astimezone(zone()).replace(tzinfo=None)
 
     def typed(f: Filter) -> Optional[Filter]:
         dtype = types.get(f.column)
@@ -296,7 +314,7 @@ def typed_dnf(
         ) or listed != isinstance(f.value, (list, tuple, set, frozenset)):
             return None
         values = f.value if listed else [f.value]
-        values = [typed_literal(v, dtype, zone) for v in values]
+        values = [typed_literal(sent(v, dtype), dtype, zone) for v in values]
         if UNPRUNABLE in values:
             return None
         return f._replace(value=values if listed else values[0])

@@ -12,17 +12,21 @@ put-if-absent for the next ``NNN.json`` (same contract delta-rs uses);
 this local-FS implementation uses O_EXCL create and, on collision,
 validates the intervening commits against the transaction's snapshot
 (WriteSerializable conflict rules — see :func:`_check_commit_conflicts`)
-before retrying at the next version number.
+before retrying at the next version number. Every write ends in
+:func:`_commit_atomically`, which also keeps the idempotent-writer
+ledger and writes a checkpoint at every :data:`CHECKPOINT_INTERVAL`-th
+version, whatever the operation.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
 import tempfile
 import uuid
-from typing import Optional, Sequence
+from typing import NamedTuple, Optional, Sequence
 from urllib.parse import quote, unquote
 
 from pyspark.sql import DataFrame
@@ -49,6 +53,11 @@ DEFAULT_MAX_AFFECTED_FILES = 1_000_000
 # 0.25-0.45 s at 20k-40k). 10k is where the spread case stops breaking
 # even.
 MERGE_KEY_PRUNE_MAX = 10_000
+
+# Delta's default delta.checkpointInterval: every commit that lands on a
+# multiple of it writes a checkpoint, whatever the operation, so a log
+# replays O(files) + at most this many JSON commits
+CHECKPOINT_INTERVAL = 10
 
 
 def _check_affected_cap(n_collected: int, cap: int, op: str) -> None:
@@ -276,12 +285,11 @@ def enable_column_mapping(uri: str, mode: str = "name") -> int:
         {"metaData": meta},
     ]
     return _commit_atomically(
-        os.path.join(uri, "_delta_log"),
-        actions,
-        read_version=snapshot.version,
+        uri, actions,
+        snapshot=snapshot,
         operation="SET TBLPROPERTIES",
         operation_params={"columnMapping.mode": mode},
-    )
+    ).version
 
 
 class _micros_timestamps:
@@ -683,12 +691,12 @@ def add_check_constraint(
         )
     actions.append({"metaData": meta})
     return _commit_atomically(
-        os.path.join(uri, "_delta_log"), actions,
-        read_version=snapshot.version,
+        uri, actions,
+        snapshot=snapshot,
         operation="ADD CONSTRAINT",
         operation_params={"name": name, "expr": expression},
         strict=True,
-    )
+    ).version
 
 
 def drop_check_constraint(uri: str, name: str) -> int:
@@ -706,11 +714,11 @@ def drop_check_constraint(uri: str, name: str) -> int:
     del conf[key]
     meta["configuration"] = conf
     return _commit_atomically(
-        os.path.join(uri, "_delta_log"), [{"metaData": meta}],
-        read_version=snapshot.version,
+        uri, [{"metaData": meta}],
+        snapshot=snapshot,
         operation="DROP CONSTRAINT",
         operation_params={"name": name},
-    )
+    ).version
 
 
 def write_delta(
@@ -718,7 +726,6 @@ def write_delta(
     uri: str,
     mode: str = "append",
     partition_by: Sequence[str] = (),
-    checkpoint_interval: Optional[int] = 10,
     txn_app_id: Optional[str] = None,
     txn_version: Optional[int] = None,
     schema_mode: str = "strict",
@@ -745,10 +752,12 @@ def write_delta(
     batch with an eager localCheckpoint (one extra materialization of
     the APPEND batch, never the table).
 
-    ``checkpoint_interval``: write a checkpoint after every Nth commit
-    (versions N, 2N, …) — delta's own default cadence of 10. At 100 TB
+    Checkpoints: every commit to a Delta table — this append, and
+    equally a MERGE, DELETE, UPDATE, OPTIMIZE, RESTORE or constraint
+    change — that lands on a multiple of :data:`CHECKPOINT_INTERVAL`
+    (10, delta's own default cadence) writes a checkpoint. At 100 TB
     log replay without checkpoints is O(commits); with them it is
-    O(files) + a handful of JSON tails. ``None`` disables.
+    O(files) + a handful of JSON tails.
 
     ``txn_app_id``/``txn_version``: idempotent-writer ledger (protocol
     SetTransaction). When set, the commit records
@@ -769,21 +778,17 @@ def write_delta(
         raise ValueError(f"mode must be append|overwrite, got {mode!r}")
     if schema_mode not in ("strict", "merge"):
         raise ValueError(f"schema_mode must be strict|merge, got {schema_mode!r}")
-    if (txn_app_id is None) != (txn_version is None):
-        raise ValueError("txn_app_id and txn_version must be set together")
     uri = uri.rstrip("/")
-    log_dir = os.path.join(uri, "_delta_log")
-    exists = os.path.isdir(log_dir)
+    exists = os.path.isdir(os.path.join(uri, "_delta_log"))
+    snapshot = DeltaLog(uri).snapshot() if exists else None
+    txn, landed = _idempotent_txn(snapshot, txn_app_id, txn_version)
+    if landed:
+        # replayed micro-batch: already landed — exactly-once skip
+        return snapshot.version
 
     previous_files: list[str] = []
     partition_cols = list(partition_by)
     if exists:
-        snapshot = DeltaLog(uri).snapshot()
-        if txn_app_id is not None:
-            last = snapshot.app_transactions.get(txn_app_id)
-            if last is not None and txn_version <= last:
-                # replayed micro-batch: already landed — exactly-once skip
-                return snapshot.version
         if partition_by and list(partition_by) != snapshot.partition_columns:
             raise ValueError(
                 f"partition_by {list(partition_by)} != table partitioning "
@@ -918,7 +923,6 @@ def write_delta(
 
     actions: list[dict] = []
     if not exists:
-        os.makedirs(log_dir, exist_ok=True)
         actions.append(
             {
                 "protocol": {
@@ -993,37 +997,16 @@ def write_delta(
             }
             for path in previous_files
         )
-    if txn_app_id is not None:
-        actions.append(
-            {
-                "txn": {
-                    "appId": txn_app_id,
-                    "version": int(txn_version),
-                    "lastUpdated": 0,
-                }
-            }
-        )
     actions.extend(adds)
-
-    try:
-        version = _commit_atomically(
-            log_dir, actions,
-            read_version=snapshot.version if exists else None,
-            operation="WRITE",
-            operation_params={"mode": mode.capitalize()},
-        )
-    except _TxnAlreadyLanded as landed:
-        # racing replay of our idempotent batch won: drop our staged
-        # files; the table already contains the batch exactly once
-        _discard_files(uri, [a["add"]["path"] for a in adds])
-        return landed.version
-    if (
-        checkpoint_interval
-        and version > 0
-        and version % checkpoint_interval == 0
-    ):
-        write_checkpoint(uri, version)
-    return version
+    # if a racing replay of this batch landed first: the racer's version
+    return _commit_atomically(
+        uri, actions,
+        snapshot=snapshot,
+        txn=txn,
+        staged=_staged(adds),
+        operation="WRITE",
+        operation_params={"mode": mode.capitalize()},
+    ).version
 
 
 def checkpoint_arrow_schema():
@@ -1259,7 +1242,7 @@ def carry_transactions(
     version, or None when there was nothing to carry."""
     if not app_transactions:
         return None
-    log_dir = os.path.join(uri.rstrip("/"), "_delta_log")
+    uri = uri.rstrip("/")
     snap = DeltaLog(uri).snapshot()
     actions = [
         {"txn": {"appId": app, "version": int(v), "lastUpdated": 0}}
@@ -1270,12 +1253,11 @@ def carry_transactions(
     if not actions:
         return snap.version
     return _commit_atomically(
-        log_dir,
-        actions,
-        read_version=snap.version,
+        uri, actions,
+        snapshot=snap,
         operation="SET TRANSACTION",
         operation_params={},
-    )
+    ).version
 
 
 def compact(
@@ -1447,11 +1429,11 @@ def compact(
         )
 
     version = _commit_atomically(
-        os.path.join(uri, "_delta_log"), actions,
-        read_version=snapshot.version,
+        uri, actions,
+        snapshot=snapshot,
         operation="OPTIMIZE",
         operation_params={"auto": False},
-    )
+    ).version
     n_removed = sum(len(fs) for fs in todo.values())
     return {
         "files_before": len(snapshot.files),
@@ -1523,24 +1505,21 @@ def merge_delta(
     on = list(on)
     if not on:
         raise ValueError("merge_delta requires at least one key column")
-    if (txn_app_id is None) != (txn_version is None):
-        raise ValueError("txn_app_id and txn_version must be set together")
     uri = uri.rstrip("/")
     snapshot = DeltaLog(uri).snapshot()
+    txn, landed = _idempotent_txn(snapshot, txn_app_id, txn_version)
+
+    def unchanged(version: int = snapshot.version) -> dict[str, int]:
+        return {"version": version, "files_rewritten": 0, "files_added": 0}
+
     if _identity_fields(snapshot):
         raise NotImplementedError(
             "merge_delta on a table with identity columns: the source "
             "frame would supply identity values (explicit insert, which "
             "the columns forbid); delete + append instead"
         )
-    if txn_app_id is not None:
-        last = snapshot.app_transactions.get(txn_app_id)
-        if last is not None and txn_version <= last:
-            return {
-                "version": snapshot.version,
-                "files_rewritten": 0,
-                "files_added": 0,
-            }
+    if landed:
+        return unchanged()
     table_cols = [f.name for f in snapshot.schema.fields]
     if set(source.columns) != set(table_cols):
         raise ValueError(
@@ -1553,11 +1532,7 @@ def merge_delta(
         raise ValueError(f"merge keys not in table schema: {missing_keys}")
     source = source.select(*table_cols)
     if when_matched is None and when_not_matched is None:
-        return {
-            "version": snapshot.version,
-            "files_rewritten": 0,
-            "files_added": 0,
-        }
+        return unchanged()
 
     written = (
         _as_table_types(spark, snapshot, source)
@@ -1652,11 +1627,7 @@ def merge_delta(
         # 'delete': matched rows simply don't reappear
 
     if not pieces and not affected:
-        return {
-            "version": snapshot.version,
-            "files_rewritten": 0,
-            "files_added": 0,
-        }
+        return unchanged()
 
     new_data = pieces[0]
     for p in pieces[1:]:
@@ -1667,13 +1638,11 @@ def merge_delta(
     stage_df, part_cols, file_schema = _stage_frame_for(
         snapshot, new_data
     )
-    actions: list[dict] = _stage_adds(
+    adds = _stage_adds(
         spark, stage_df, uri, part_cols, file_schema,
         data_change=True,
     )
-
-    n_added = len(actions)
-    actions.extend(
+    removes = [
         {
             "remove": {
                 "path": f.path,
@@ -1682,52 +1651,29 @@ def merge_delta(
             }
         }
         for f in affected
-    )
-    if not actions:
+    ]
+    if not adds and not removes:
         # nothing matched, nothing to insert: no empty commit
-        return {
-            "version": snapshot.version,
-            "files_rewritten": 0,
-            "files_added": 0,
-        }
-    if txn_app_id is not None:
-        actions.append(
-            {
-                "txn": {
-                    "appId": txn_app_id,
-                    "version": int(txn_version),
-                    "lastUpdated": 0,
-                }
-            }
-        )
-    try:
-        version = _commit_atomically(
-            os.path.join(uri, "_delta_log"), actions,
-            read_version=snapshot.version,
-            operation="MERGE",
-            operation_params={"predicate": on},
-            # a concurrent dataChange append may hold a matched key (the
-            # key pruning saw only this snapshot's files): past the
-            # bound any append conflicts, under it one whose stats can
-            # hold a key
-            read_predicate=key_dnf,
-            read_whole_table=key_dnf is None,
-            data_schema=snapshot.data_schema,
-        )
-    except _TxnAlreadyLanded as landed:
-        _discard_files(
-            uri,
-            [a["add"]["path"] for a in actions if "add" in a],
-        )
-        return {
-            "version": landed.version,
-            "files_rewritten": 0,
-            "files_added": 0,
-        }
+        return unchanged()
+    commit = _commit_atomically(
+        uri, adds + removes,
+        snapshot=snapshot,
+        txn=txn,
+        staged=_staged(adds),
+        operation="MERGE",
+        operation_params={"predicate": on},
+        # a concurrent dataChange append may hold a matched key (the
+        # key pruning saw only this snapshot's files): past the bound
+        # any append conflicts, under it one whose stats can hold a key
+        read_predicate=key_dnf,
+        read_whole_table=key_dnf is None,
+    )
+    if commit.superseded:
+        return unchanged(commit.version)
     return {
-        "version": version,
+        "version": commit.version,
         "files_rewritten": len(affected),
-        "files_added": n_added,
+        "files_added": len(adds),
     }
 
 
@@ -1954,20 +1900,6 @@ def _dv_feature_actions(snapshot) -> list[dict]:
     ]
 
 
-def _new_dv_paths(dv_actions) -> list[str]:
-    """Relative paths of the DV files a _dv_soft_delete_actions batch
-    created (storageType 'u' descriptors on its add actions)."""
-    from .delta_dv import dv_relative_path
-
-    out = []
-    for a in dv_actions:
-        add = a.get("add")
-        dv = add.get("deletionVector") if add else None
-        if dv and dv.get("storageType") == "u":
-            out.append(dv_relative_path(dv["pathOrInlineDv"]))
-    return out
-
-
 def _dv_soft_delete_actions(
     spark,
     uri: str,
@@ -2181,25 +2113,26 @@ def delete_delta(
     from ..core.filters import normalize_filters, validate_filters
     from .delta_table import DeltalakeTable, typed_dnf
 
-    if (txn_app_id is None) != (txn_version is None):
-        raise ValueError("txn_app_id and txn_version must be set together")
     uri = uri.rstrip("/")
     snapshot = DeltaLog(uri).snapshot()
+    txn, landed = _idempotent_txn(snapshot, txn_app_id, txn_version)
+
+    def unchanged(version: int = snapshot.version) -> dict[str, int]:
+        return {
+            "version": version,
+            "rows_deleted": 0,
+            "files_rewritten": 0,
+            "files_removed": 0,
+            "files_added": 0,
+        }
+
     # Column-mapped tables are SUPPORTED here, unlike the staging write
     # paths: a DV delete writes no data files — the re-added add action
     # copies partitionValues/stats verbatim (already physical-keyed) and
     # the DV blob itself has no column names, so nothing logical ever
     # lands in the mapped layout.
-    if txn_app_id is not None:
-        last = snapshot.app_transactions.get(txn_app_id)
-        if last is not None and txn_version <= last:
-            return {
-                "version": snapshot.version,
-                "rows_deleted": 0,
-                "files_rewritten": 0,
-                "files_removed": 0,
-                "files_added": 0,
-            }
+    if landed:
+        return unchanged()
     dnf = normalize_filters(filters)
     if not dnf:
         raise ValueError(
@@ -2213,15 +2146,8 @@ def delete_delta(
     df = table._read_from_log(
         spark, snapshot, typed, keep_rel=True, keep_pos=True
     )
-    result_unchanged = {
-        "version": snapshot.version,
-        "rows_deleted": 0,
-        "files_rewritten": 0,
-        "files_removed": 0,
-        "files_added": 0,
-    }
     if df is None:
-        return result_unchanged
+        return unchanged()
     predicate = filters_to_column(dnf)
     matched_df = df.filter(predicate)
     dv_actions, counters, rewrite_rels = _dv_soft_delete_actions(
@@ -2230,7 +2156,7 @@ def delete_delta(
         max_affected_files=max_affected_files,
     )
     if not dv_actions:
-        return result_unchanged
+        return unchanged()
 
     add_actions: list[dict] = []
     if rewrite_rels:
@@ -2255,42 +2181,22 @@ def delete_delta(
             data_change=True,
         )
 
-    actions = _dv_feature_actions(snapshot)
-    actions.extend(dv_actions)
-    actions.extend(add_actions)
-    if txn_app_id is not None:
-        actions.append(
-            {
-                "txn": {
-                    "appId": txn_app_id,
-                    "version": int(txn_version),
-                    "lastUpdated": 0,
-                }
-            }
-        )
-
-    try:
-        version = _commit_atomically(
-            os.path.join(uri, "_delta_log"), actions,
-            read_version=snapshot.version,
-            operation="DELETE",
-            operation_params={"predicate": [str(f) for c in dnf for f in c]},
-            read_predicate=typed,
-            data_schema=snapshot.data_schema,
-        )
-    except _TxnAlreadyLanded as landed:
-        _discard_files(uri, _new_dv_paths(dv_actions))
-        _discard_files(
-            uri, [unquote(a["add"]["path"]) for a in add_actions]
-        )
-        return {
-            "version": landed.version,
-            "rows_deleted": 0,
-            "files_rewritten": 0,
-            "files_removed": 0,
-            "files_added": 0,
-        }
-    return {"version": version, **counters, "files_added": len(add_actions)}
+    commit = _commit_atomically(
+        uri, _dv_feature_actions(snapshot) + dv_actions + add_actions,
+        snapshot=snapshot,
+        txn=txn,
+        staged=_staged(add_actions, dv_actions),
+        operation="DELETE",
+        operation_params={"predicate": [str(f) for c in dnf for f in c]},
+        read_predicate=typed,
+    )
+    if commit.superseded:
+        return unchanged(commit.version)
+    return {
+        "version": commit.version,
+        **counters,
+        "files_added": len(add_actions),
+    }
 
 
 def update_delta(
@@ -2342,20 +2248,21 @@ def update_delta(
     from ..core.filters import normalize_filters, validate_filters
     from .delta_table import DeltalakeTable, typed_dnf
 
-    if (txn_app_id is None) != (txn_version is None):
-        raise ValueError("txn_app_id and txn_version must be set together")
     uri = uri.rstrip("/")
     snapshot = DeltaLog(uri).snapshot()
-    if txn_app_id is not None:
-        last = snapshot.app_transactions.get(txn_app_id)
-        if last is not None and txn_version <= last:
-            return {
-                "version": snapshot.version,
-                "rows_updated": 0,
-                "files_rewritten": 0,
-                "files_removed": 0,
-                "files_added": 0,
-            }
+    txn, landed = _idempotent_txn(snapshot, txn_app_id, txn_version)
+
+    def unchanged(version: int = snapshot.version) -> dict[str, int]:
+        return {
+            "version": version,
+            "rows_updated": 0,
+            "files_rewritten": 0,
+            "files_removed": 0,
+            "files_added": 0,
+        }
+
+    if landed:
+        return unchanged()
     if not assignments:
         raise ValueError("update_delta requires at least one assignment")
     field_types = {f.name: f.dataType for f in snapshot.schema.fields}
@@ -2388,15 +2295,8 @@ def update_delta(
     df = table._read_from_log(
         spark, snapshot, typed, keep_rel=True, keep_pos=True
     )
-    result_unchanged = {
-        "version": snapshot.version,
-        "rows_updated": 0,
-        "files_rewritten": 0,
-        "files_removed": 0,
-        "files_added": 0,
-    }
     if df is None:
-        return result_unchanged
+        return unchanged()
     predicate = filters_to_column(dnf)
     matched_df = df.filter(predicate)
     dv_actions, counters, rewrite_rels = _dv_soft_delete_actions(
@@ -2405,7 +2305,7 @@ def update_delta(
         max_affected_files=max_affected_files,
     )
     if not dv_actions:
-        return result_unchanged
+        return unchanged()
 
     def assigned(col: str):
         v = assignments[col]
@@ -2444,46 +2344,22 @@ def update_delta(
         data_change=True,
     )
 
-    actions = _dv_feature_actions(snapshot)
-    actions.extend(dv_actions)
-    actions.extend(add_actions)
-    if txn_app_id is not None:
-        actions.append(
-            {
-                "txn": {
-                    "appId": txn_app_id,
-                    "version": int(txn_version),
-                    "lastUpdated": 0,
-                }
-            }
-        )
-
-    try:
-        version = _commit_atomically(
-            os.path.join(uri, "_delta_log"), actions,
-            read_version=snapshot.version,
-            operation="UPDATE",
-            operation_params={
-                "predicate": [str(f) for c in dnf for f in c],
-                "columns": sorted(assignments),
-            },
-            read_predicate=typed,
-            data_schema=snapshot.data_schema,
-        )
-    except _TxnAlreadyLanded as landed:
-        _discard_files(uri, _new_dv_paths(dv_actions))
-        _discard_files(
-            uri, [unquote(a["add"]["path"]) for a in add_actions]
-        )
-        return {
-            "version": landed.version,
-            "rows_updated": 0,
-            "files_rewritten": 0,
-            "files_removed": 0,
-            "files_added": 0,
-        }
+    commit = _commit_atomically(
+        uri, _dv_feature_actions(snapshot) + dv_actions + add_actions,
+        snapshot=snapshot,
+        txn=txn,
+        staged=_staged(add_actions, dv_actions),
+        operation="UPDATE",
+        operation_params={
+            "predicate": [str(f) for c in dnf for f in c],
+            "columns": sorted(assignments),
+        },
+        read_predicate=typed,
+    )
+    if commit.superseded:
+        return unchanged(commit.version)
     return {
-        "version": version,
+        "version": commit.version,
         "rows_updated": counters["rows_deleted"],
         "files_rewritten": counters["files_rewritten"],
         "files_removed": counters["files_removed"],
@@ -2638,11 +2514,11 @@ def zorder_by(
         for f in snapshot.files
     )
     version = _commit_atomically(
-        os.path.join(uri, "_delta_log"), actions,
-        read_version=snapshot.version,
+        uri, actions,
+        snapshot=snapshot,
         operation="OPTIMIZE",
         operation_params={"zOrderBy": columns},
-    )
+    ).version
     return {
         "files_removed": len(snapshot.files),
         "files_added": n_added,
@@ -2711,33 +2587,12 @@ class ConcurrentModificationError(RuntimeError):
     ConcurrentDeleteReadException / MetadataChangedException family)."""
 
 
-class _TxnAlreadyLanded(Exception):
-    """Raised inside the commit loop when a racing writer already
-    committed this transaction's SetTransaction (appId, version) — the
-    caller must treat its own work as superseded: discard files it
-    staged and report zero effect at the racer's version."""
-
-    def __init__(self, version: int):
-        super().__init__(version)
-        self.version = version
-
-
-def _discard_files(uri: str, rel_paths) -> None:
-    """Delete files this transaction created under the table root after
-    its commit was superseded — without this they linger unreferenced
-    until vacuum."""
-    for rel in rel_paths:
-        try:
-            os.remove(os.path.join(uri, unquote(rel)))
-        except FileNotFoundError:
-            pass
-
-
 def _check_commit_conflicts(
     log_dir: str,
     actions: list[dict],
     read_version: int,
     latest: int,
+    txn: Optional[tuple[str, int]] = None,
     read_predicate=None,
     read_whole_table: bool = False,
     data_schema=None,
@@ -2748,15 +2603,16 @@ def _check_commit_conflicts(
     still valid (WriteSerializable, the semantics delta-spark defaults
     to):
 
+    - an intervening SetTransaction for OUR appId (``txn``) at ≥ our
+      version → the work already landed (a replayed idempotent batch
+      racing itself): return that committed version to short-circuit,
+      whatever else the commits hold — this transaction commits nothing;
     - a file WE remove that an intervening commit already removed →
       :class:`ConcurrentModificationError` (our rewrite/delete was
       computed from content that no longer exists — blind retry would
       double-remove and could drop the other writer's re-add);
     - an intervening metaData or protocol action → conflict (the
       schema/feature gate we validated against changed under us);
-    - an intervening SetTransaction for OUR appId at ≥ our version →
-      the work already landed (a replayed idempotent batch racing
-      itself): return that committed version to short-circuit;
     - a concurrent dataChange APPEND that could fall inside this
       transaction's READ SET (delta-spark's
       ConcurrentAppendException): when ``read_whole_table`` (MERGE —
@@ -2773,18 +2629,24 @@ def _check_commit_conflicts(
     our_removes = {
         a["remove"]["path"] for a in actions if "remove" in a
     }
-    our_txn = next(
-        (a["txn"] for a in actions if "txn" in a), None
-    )
     from .delta_log import AddFile, read_commit_actions
     from .delta_stats import stats_prune
 
+    intervening = {}
     for v in range(read_version + 1, latest + 1):
-        try:
-            intervening = read_commit_actions(log_dir, v)
-        except FileNotFoundError:
-            continue
-        for action in intervening:
+        with contextlib.suppress(FileNotFoundError):
+            intervening[v] = read_commit_actions(log_dir, v)
+    if txn is not None:
+        for v, commit in intervening.items():
+            if any(
+                "txn" in a
+                and a["txn"].get("appId") == txn[0]
+                and int(a["txn"].get("version", -1)) >= txn[1]
+                for a in commit
+            ):
+                return v
+    for v, commit in intervening.items():
+        for action in commit:
             if "metaData" in action or "protocol" in action:
                 raise ConcurrentModificationError(
                     f"Concurrent metadata/protocol change at version {v} "
@@ -2824,42 +2686,98 @@ def _check_commit_conflicts(
                         f"the rows it planned from are stale — re-run "
                         f"the operation"
                     )
-            if (
-                our_txn is not None
-                and "txn" in action
-                and action["txn"].get("appId") == our_txn.get("appId")
-                and int(action["txn"].get("version", -1))
-                >= int(our_txn.get("version", 0))
-            ):
-                # our idempotent batch already landed via a racing writer
-                return v
     return None
 
 
+class _Commit(NamedTuple):
+    """What :func:`_commit_atomically` did: committed ``version``, or
+    (``superseded``) found this transaction's SetTransaction already
+    landed at ``version`` by a racing replay and committed nothing."""
+
+    version: int
+    superseded: bool = False
+
+
+def _idempotent_txn(
+    snapshot, app_id: Optional[str], version: Optional[int]
+) -> tuple[Optional[tuple[str, int]], bool]:
+    """The idempotent-writer ledger entry (protocol SetTransaction) of a
+    write given ``txn_app_id``/``txn_version``: ``(txn, landed)``, where
+    ``txn`` is the ``(appId, version)`` pair for
+    :func:`_commit_atomically`'s ``txn=`` (None when unset) and
+    ``landed`` says ``snapshot``'s ledger already holds this version or
+    a later one, so the write is a replay and must do nothing
+    (``snapshot`` is None for a table not created yet)."""
+    if (app_id is None) != (version is None):
+        raise ValueError("txn_app_id and txn_version must be set together")
+    if app_id is None:
+        return None, False
+    last = (
+        snapshot.app_transactions.get(app_id) if snapshot is not None else None
+    )
+    return (app_id, int(version)), last is not None and version <= last
+
+
+def _staged(adds, dv_actions=()) -> list[str]:
+    """Paths (as add actions carry them) of the files a transaction
+    wrote into the table: its new data files and the DV files of
+    ``dv_actions`` (storageType 'u' descriptors)."""
+    from .delta_dv import dv_relative_path
+
+    dvs = [a["add"].get("deletionVector") for a in dv_actions if "add" in a]
+    return [a["add"]["path"] for a in adds] + [
+        dv_relative_path(dv["pathOrInlineDv"])
+        for dv in dvs
+        if dv and dv.get("storageType") == "u"
+    ]
+
+
 def _commit_atomically(
-    log_dir: str,
+    uri: str,
     actions: list[dict],
-    read_version: Optional[int] = None,
+    *,
+    snapshot=None,
+    txn: Optional[tuple[str, int]] = None,
+    staged: Sequence[str] = (),
     operation: Optional[str] = None,
     operation_params: Optional[dict] = None,
     strict: bool = False,
     read_predicate=None,
     read_whole_table: bool = False,
-    data_schema=None,
-) -> int:
-    """Write the next NNN.json with O_EXCL; on collision validate the
-    intervening commits against ``read_version`` (the snapshot this
-    transaction planned from) and retry — optimistic concurrency with
-    WriteSerializable conflict rules, as the protocol prescribes.
-    ``read_version=None`` skips validation (brand-new table, or caller
-    accepts last-writer-wins). ``operation`` prepends a ``commitInfo``
-    action (the freeform provenance record delta-spark writes and
-    DESCRIBE HISTORY reads); timestamp is 0 like every other clock in
-    this writer — determinism over wall time. ``strict=True`` refuses
-    ANY intervening commit (Serializable, not WriteSerializable) — for
-    operations whose correctness depends on a full-table validation at
-    the read snapshot, e.g. ADD CONSTRAINT: a concurrent append could
-    land rows the validation never saw."""
+) -> _Commit:
+    """End a Delta transaction on the table at ``uri``: write the next
+    NNN.json with O_EXCL; on collision validate the intervening commits
+    against ``snapshot.version`` (the snapshot this transaction planned
+    from) and retry — optimistic concurrency with WriteSerializable
+    conflict rules, as the protocol prescribes. Every Delta write ends
+    here.
+
+    ``snapshot=None`` skips validation (brand-new table, whose log
+    directory this creates, or a caller that accepts last-writer-wins).
+    ``operation`` prepends a ``commitInfo`` action (the freeform
+    provenance record delta-spark writes and DESCRIBE HISTORY reads);
+    timestamp is 0 like every other clock in this writer — determinism
+    over wall time. ``strict=True`` refuses ANY intervening commit
+    (Serializable, not WriteSerializable) — for operations whose
+    correctness depends on a full-table validation at the read
+    snapshot, e.g. ADD CONSTRAINT: a concurrent append could land rows
+    the validation never saw. ``read_predicate`` (a DNF typed against
+    ``snapshot``) and ``read_whole_table`` name the read set a
+    concurrent append may conflict with.
+
+    ``txn`` (``(appId, version)``, from :func:`_idempotent_txn`)
+    appends the SetTransaction action. When a racing replay of the same
+    batch has already landed it, nothing is committed: the ``staged``
+    files (add-action paths relative to ``uri``) are deleted, so they
+    do not linger unreferenced until vacuum, and the result is
+    ``superseded`` at the racer's version.
+
+    A commit that lands on a multiple of :data:`CHECKPOINT_INTERVAL`
+    then writes its checkpoint (delta-spark's ``postCommit``)."""
+    log_dir = os.path.join(uri, "_delta_log")
+    if snapshot is None:
+        os.makedirs(log_dir, exist_ok=True)
+    read_version = None if snapshot is None else snapshot.version
     if operation is not None:
         info: dict = {
             "timestamp": 0,
@@ -2871,6 +2789,17 @@ def _commit_atomically(
             "engineInfo": "datarepo-spark",
         }
         actions = [{"commitInfo": info}] + list(actions)
+    if txn is not None:
+        app_id, txn_version = txn
+        actions = list(actions) + [
+            {
+                "txn": {
+                    "appId": app_id,
+                    "version": txn_version,
+                    "lastUpdated": 0,
+                }
+            }
+        ]
     payload = "".join(json.dumps(a) + "\n" for a in actions)
     for _ in range(50):
         versions = [
@@ -2888,12 +2817,18 @@ def _commit_atomically(
         if read_version is not None and version > read_version + 1:
             landed = _check_commit_conflicts(
                 log_dir, actions, read_version, version - 1,
+                txn=txn,
                 read_predicate=read_predicate,
                 read_whole_table=read_whole_table,
-                data_schema=data_schema,
+                data_schema=snapshot.data_schema,
             )
             if landed is not None:
-                raise _TxnAlreadyLanded(landed)
+                # our idempotent batch already landed via a racing
+                # writer: the table holds it exactly once without ours
+                for rel in staged:
+                    with contextlib.suppress(FileNotFoundError):
+                        os.remove(os.path.join(uri, unquote(rel)))
+                return _Commit(landed, superseded=True)
             read_version = version - 1  # validated up to here
         path = os.path.join(log_dir, f"{version:020d}.json")
         try:
@@ -2906,8 +2841,10 @@ def _commit_atomically(
         # commit immediately
         from .delta_log import invalidate_snapshot_cache
 
-        invalidate_snapshot_cache(os.path.dirname(log_dir))
-        return version
+        invalidate_snapshot_cache(uri)
+        if version and version % CHECKPOINT_INTERVAL == 0:
+            write_checkpoint(uri, version)
+        return _Commit(version)
     raise RuntimeError(f"Could not commit to {log_dir} after 50 attempts")
 
 
@@ -3100,11 +3037,11 @@ def restore_table(spark, uri: str, version: int) -> dict[str, int]:
             "files_removed": 0,
         }
     new_version = _commit_atomically(
-        os.path.join(uri, "_delta_log"), actions,
-        read_version=cur.version,
+        uri, actions,
+        snapshot=cur,
         operation="RESTORE",
         operation_params={"version": version},
-    )
+    ).version
     return {
         "version": new_version,
         "files_added": n_added,
@@ -3135,8 +3072,7 @@ def convert_to_delta(
     Refuses if a ``_delta_log`` already exists (the table is already
     Delta — converting again would shadow its history)."""
     uri = uri.rstrip("/")
-    log_dir = os.path.join(uri, "_delta_log")
-    if os.path.isdir(log_dir):
+    if os.path.isdir(os.path.join(uri, "_delta_log")):
         raise ValueError(
             f"{uri} already has a _delta_log; it is already a Delta table"
         )
@@ -3237,11 +3173,10 @@ def convert_to_delta(
             add_action["stats"] = stats
         actions.append({"add": add_action})
 
-    os.makedirs(log_dir, exist_ok=True)
     return _commit_atomically(
-        log_dir, actions, operation="CONVERT",
+        uri, actions, operation="CONVERT",
         operation_params={"numFiles": len(data_files)},
-    )
+    ).version
 
 
 def overwrite_where(
@@ -3288,20 +3223,21 @@ def overwrite_where(
     from ..core.filters import normalize_filters, validate_filters
     from .delta_table import DeltalakeTable, typed_dnf
 
-    if (txn_app_id is None) != (txn_version is None):
-        raise ValueError("txn_app_id and txn_version must be set together")
     uri = uri.rstrip("/")
     snapshot = DeltaLog(uri).snapshot()
-    if txn_app_id is not None:
-        last = snapshot.app_transactions.get(txn_app_id)
-        if last is not None and txn_version <= last:
-            return {
-                "version": snapshot.version,
-                "rows_replaced": 0,
-                "files_rewritten": 0,
-                "files_removed": 0,
-                "files_added": 0,
-            }
+    txn, landed = _idempotent_txn(snapshot, txn_app_id, txn_version)
+
+    def unchanged(version: int = snapshot.version) -> dict[str, int]:
+        return {
+            "version": version,
+            "rows_replaced": 0,
+            "files_rewritten": 0,
+            "files_removed": 0,
+            "files_added": 0,
+        }
+
+    if landed:
+        return unchanged()
     if _identity_fields(snapshot):
         raise ValueError(
             "overwrite_where is not supported on IDENTITY tables — "
@@ -3370,45 +3306,23 @@ def overwrite_where(
         spark, stage_df, uri, stage_parts, file_schema, data_change=True
     )
 
-    actions = _dv_feature_actions(snapshot) if dv_actions else []
-    actions.extend(dv_actions)
-    actions.extend(add_actions)
-    if txn_app_id is not None:
-        actions.append(
-            {
-                "txn": {
-                    "appId": txn_app_id,
-                    "version": int(txn_version),
-                    "lastUpdated": 0,
-                }
-            }
-        )
-    try:
-        version = _commit_atomically(
-            os.path.join(uri, "_delta_log"), actions,
-            read_version=snapshot.version,
-            operation="WRITE",
-            operation_params={
-                "mode": "Overwrite",
-                "predicate": [str(f) for c in dnf for f in c],
-            },
-            read_predicate=typed,
-            data_schema=snapshot.data_schema,
-        )
-    except _TxnAlreadyLanded as landed:
-        _discard_files(uri, _new_dv_paths(dv_actions))
-        _discard_files(
-            uri, [unquote(a["add"]["path"]) for a in add_actions]
-        )
-        return {
-            "version": landed.version,
-            "rows_replaced": 0,
-            "files_rewritten": 0,
-            "files_removed": 0,
-            "files_added": 0,
-        }
+    features = _dv_feature_actions(snapshot) if dv_actions else []
+    commit = _commit_atomically(
+        uri, features + dv_actions + add_actions,
+        snapshot=snapshot,
+        txn=txn,
+        staged=_staged(add_actions, dv_actions),
+        operation="WRITE",
+        operation_params={
+            "mode": "Overwrite",
+            "predicate": [str(f) for c in dnf for f in c],
+        },
+        read_predicate=typed,
+    )
+    if commit.superseded:
+        return unchanged(commit.version)
     return {
-        "version": version,
+        "version": commit.version,
         "rows_replaced": counters["rows_deleted"],
         "files_rewritten": counters["files_rewritten"],
         "files_removed": counters["files_removed"],

@@ -327,7 +327,6 @@ class IncrementalAggregate:
                 self.dest_uri,
                 txn_app_id=self.app_id,
                 txn_version=2 * version,
-                checkpoint_interval=None,
             )
         else:
             current = DeltalakeTable(
@@ -641,7 +640,6 @@ class IncrementalTopK:
                 self.dest_uri,
                 txn_app_id=self.app_id,
                 txn_version=2 * version,
-                checkpoint_interval=None,
             )
             self.stream.ack(version)
             return version

@@ -842,7 +842,7 @@ class TestRebuildSwapGuards:
                 vec_col="embedding", id_col="vec_id", nprobe=1,
             )
             write_delta(
-                rogue, uri, partition_by=["cell"], checkpoint_interval=None
+                rogue, uri, partition_by=["cell"]
             )
             return out
 

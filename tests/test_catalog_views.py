@@ -7,7 +7,7 @@ from pyspark.sql import types as T
 from datarepo_spark import Catalog, DictDatabase, ParquetTable
 from datarepo_spark.tables.delta_log import DeltaLog
 from datarepo_spark.tables.delta_table import DeltalakeTable
-from datarepo_spark.tables.delta_testing import DeltaFixtureWriter
+from delta_testing import DeltaFixtureWriter
 
 
 class TestRegisterTempViews:

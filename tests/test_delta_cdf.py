@@ -28,8 +28,8 @@ def _changes(spark, uri, start, end=None):
 class TestTableChanges:
     def test_appends_are_inserts(self, spark, tmp_path):
         uri = str(tmp_path / "t")
-        write_delta(_df(spark, 0, 3), uri, checkpoint_interval=None)
-        write_delta(_df(spark, 3, 5), uri, checkpoint_interval=None)
+        write_delta(_df(spark, 0, 3), uri)
+        write_delta(_df(spark, 3, 5), uri)
         assert _changes(spark, uri, 0) == [
             (0, "insert", 0),
             (0, "insert", 1),
@@ -47,7 +47,7 @@ class TestTableChanges:
         uri = str(tmp_path / "t")
         write_delta(
             _df(spark, 0, 10).coalesce(1).sortWithinPartitions("id"),
-            uri, checkpoint_interval=None,
+            uri,
         )
         delete_delta(spark, uri, [Filter("id", "=", 4)])
         delete_delta(spark, uri, [Filter("id", "=", 7)])
@@ -60,10 +60,9 @@ class TestTableChanges:
 
     def test_overwrite_is_delete_plus_insert(self, spark, tmp_path):
         uri = str(tmp_path / "t")
-        write_delta(_df(spark, 0, 3), uri, checkpoint_interval=None)
+        write_delta(_df(spark, 0, 3), uri)
         write_delta(
             _df(spark, 10, 12), uri, mode="overwrite",
-            checkpoint_interval=None,
         )
         assert _changes(spark, uri, 1) == [
             (1, "delete", 0),
@@ -75,16 +74,16 @@ class TestTableChanges:
 
     def test_compaction_contributes_nothing(self, spark, tmp_path):
         uri = str(tmp_path / "t")
-        write_delta(_df(spark, 0, 3), uri, checkpoint_interval=None)
-        write_delta(_df(spark, 3, 6), uri, checkpoint_interval=None)
+        write_delta(_df(spark, 0, 3), uri)
+        write_delta(_df(spark, 3, 6), uri)
         stats = compact(spark, uri)
         assert stats["version"] == 2
         assert _changes(spark, uri, 2) == []
 
     def test_full_file_delete(self, spark, tmp_path):
         uri = str(tmp_path / "t")
-        write_delta(_df(spark, 0, 5), uri, checkpoint_interval=None)
-        write_delta(_df(spark, 5, 8), uri, checkpoint_interval=None)
+        write_delta(_df(spark, 0, 5), uri)
+        write_delta(_df(spark, 5, 8), uri)
         delete_delta(spark, uri, [Filter("id", ">=", 5)])
         assert _changes(spark, uri, 2) == [
             (2, "delete", 5),
@@ -94,12 +93,12 @@ class TestTableChanges:
 
     def test_schema_evolution_null_fills(self, spark, tmp_path):
         uri = str(tmp_path / "t")
-        write_delta(_df(spark, 0, 2), uri, checkpoint_interval=None)
+        write_delta(_df(spark, 0, 2), uri)
         evolved = _df(spark, 2, 4).withColumn(
             "extra", (F.col("id") * 10).cast("long")
         )
         write_delta(
-            evolved, uri, schema_mode="merge", checkpoint_interval=None
+            evolved, uri, schema_mode="merge"
         )
         rows = {
             r["id"]: r["extra"]
@@ -109,7 +108,7 @@ class TestTableChanges:
 
     def test_out_of_range_raises(self, spark, tmp_path):
         uri = str(tmp_path / "t")
-        write_delta(_df(spark, 0, 2), uri, checkpoint_interval=None)
+        write_delta(_df(spark, 0, 2), uri)
         with pytest.raises(ValueError, match="out of range"):
             table_changes(spark, uri, 5)
 
@@ -117,7 +116,7 @@ class TestTableChanges:
         uri = str(tmp_path / "t")
         for lo in (0, 2, 4):
             write_delta(
-                _df(spark, lo, lo + 2), uri, checkpoint_interval=None
+                _df(spark, lo, lo + 2), uri
             )
         got = _changes(spark, uri, 1, end=1)
         assert got == [(1, "insert", 2), (1, "insert", 3)]
@@ -128,7 +127,7 @@ class TestTableChanges:
             F.col("id"), (F.col("id") % 2).cast("string").alias("par")
         )
         write_delta(
-            df, uri, partition_by=["par"], checkpoint_interval=None
+            df, uri, partition_by=["par"]
         )
         delete_delta(spark, uri, [Filter("par", "=", "1")])
         got = _changes(spark, uri, 1)
@@ -141,7 +140,7 @@ class TestDeltaChangeStream:
 
         uri = str(tmp_path / "src")
         ckpt = str(tmp_path / "ckpt.json")
-        write_delta(_df(spark, 0, 3), uri, checkpoint_interval=None)
+        write_delta(_df(spark, 0, 3), uri)
         stream = DeltaChangeStream(uri, ckpt)
 
         df, v = stream.poll(spark)
@@ -153,7 +152,7 @@ class TestDeltaChangeStream:
         stream.ack(v2)
         assert stream.poll(spark) is None
 
-        write_delta(_df(spark, 3, 5), uri, checkpoint_interval=None)
+        write_delta(_df(spark, 3, 5), uri)
         df3, v3 = stream.poll(spark)
         assert v3 == 1
         assert sorted(r["id"] for r in df3.collect()) == [3, 4]
@@ -166,7 +165,7 @@ class TestDeltaChangeStream:
         uri = str(tmp_path / "src")
         ckpt = str(tmp_path / "c.json")
         write_delta(
-            _df(spark, 0, 6).coalesce(1), uri, checkpoint_interval=None
+            _df(spark, 0, 6).coalesce(1), uri
         )
         stream = DeltaChangeStream(uri, ckpt)
         _, v = stream.poll(spark)
@@ -183,7 +182,7 @@ class TestDeltaChangeStream:
         ckpt = str(tmp_path / "c.json")
         for lo in (0, 2, 4):
             write_delta(
-                _df(spark, lo, lo + 2), uri, checkpoint_interval=None
+                _df(spark, lo, lo + 2), uri
             )
         stream = DeltaChangeStream(uri, ckpt)
         df, v = stream.poll(spark, max_versions=2)
@@ -203,14 +202,13 @@ class TestDeltaChangeStream:
         src = str(tmp_path / "src")
         dst = str(tmp_path / "dst")
         ckpt = str(tmp_path / "c.json")
-        write_delta(_df(spark, 0, 4), src, checkpoint_interval=None)
+        write_delta(_df(spark, 0, 4), src)
         stream = DeltaChangeStream(src, ckpt)
 
         df, v = stream.poll(spark)
         out = df.select("id", "v")
         write_delta(
             out, dst, txn_app_id=stream.stream_id, txn_version=v,
-            checkpoint_interval=None,
         )
         # crash before ack → batch re-polled and re-written
         df2, v2 = stream.poll(spark)
@@ -218,7 +216,6 @@ class TestDeltaChangeStream:
         write_delta(
             df2.select("id", "v"), dst,
             txn_app_id=stream.stream_id, txn_version=v2,
-            checkpoint_interval=None,
         )
         stream.ack(v2)
         got = DeltalakeTable("dst", dst)(spark=spark).count()
@@ -234,7 +231,7 @@ class TestReviewFixes:
         uri = str(tmp_path / "t")
         write_delta(
             _df(spark, 0, 6).coalesce(1).sortWithinPartitions("id"),
-            uri, checkpoint_interval=None,
+            uri,
         )
         delete_delta(spark, uri, [Filter("id", "=", 2)])
         restore_table(spark, uri, 0)
@@ -254,12 +251,12 @@ class TestReviewFixes:
 
         uri = str(tmp_path / "src")
         ckpt = str(tmp_path / "c.json")
-        write_delta(_df(spark, 0, 2), uri, checkpoint_interval=None)
+        write_delta(_df(spark, 0, 2), uri)
         stream = DeltaChangeStream(uri, ckpt)
         df1, v1 = stream.poll(spark)
         assert v1 == 0
         # new version lands before the (crashed) consumer acks
-        write_delta(_df(spark, 2, 4), uri, checkpoint_interval=None)
+        write_delta(_df(spark, 2, 4), uri)
         df2, v2 = stream.poll(spark)
         assert v2 == 0  # pinned: same window, same batch identity
         assert df2.count() == df1.count() == 2
@@ -285,16 +282,16 @@ class TestReviewFixes:
         def srcdf(rows):
             return spark.createDataFrame(rows, ["k", "grp", "x"])
 
-        write_delta(srcdf([(1, "a", 10.0)]), src, checkpoint_interval=None)
+        write_delta(srcdf([(1, "a", 10.0)]), src)
         agg.advance(spark)
-        write_delta(srcdf([(2, "a", 5.0)]), src, checkpoint_interval=None)
+        write_delta(srcdf([(2, "a", 5.0)]), src)
         agg.advance(spark)
 
         # crash before ack of version 1: rewind cursor, then a NEW
         # source version arrives before the replay
         with open(ckpt, "w", encoding="utf-8") as fh:
             _json.dump({"last_version": 0, "inflight": 1}, fh)
-        write_delta(srcdf([(3, "b", 2.0)]), src, checkpoint_interval=None)
+        write_delta(srcdf([(3, "b", 2.0)]), src)
         agg.advance(spark)   # replays pinned [1..1] — ledger swallows
         agg.advance(spark)   # then applies [2..2]
         assert agg.advance(spark) is None

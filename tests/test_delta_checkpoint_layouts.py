@@ -26,11 +26,9 @@ def _seed(spark, tmp_path):
     uri = str(tmp_path / "t")
     write_delta(
         spark.createDataFrame([(1, "a"), (2, "b")], ["v", "k"]), uri,
-        checkpoint_interval=None,
     )
     write_delta(
         spark.createDataFrame([(3, "c")], ["v", "k"]), uri,
-        checkpoint_interval=None,
     )
     write_checkpoint(uri)
     return uri

@@ -29,7 +29,7 @@ def _src(spark, tmp_path, partitioned=False):
         F.concat(F.lit("r"), "id").alias("v"),
     )
     write_delta(
-        df, uri, checkpoint_interval=None,
+        df, uri,
         partition_by=["par"] if partitioned else [],
     )
     return uri

@@ -86,9 +86,8 @@ def _dv_table(spark, tmp_path, deleted, inline=False):
     b = spark.range(10, 20).select(
         F.col("id"), F.concat(F.lit("r"), "id").alias("v")
     )
-    write_delta(a.coalesce(1).sortWithinPartitions("id"), uri,
-                checkpoint_interval=None)
-    write_delta(b.coalesce(1), uri, checkpoint_interval=None)
+    write_delta(a.coalesce(1).sortWithinPartitions("id"), uri)
+    write_delta(b.coalesce(1), uri)
     snap = DeltaLog(uri).snapshot()
     # file A is the one whose stats say min id == 0
     file_a = next(
@@ -274,7 +273,7 @@ def _plain_table(spark, tmp_path, partition_by=()):
         if not partition_by:
             df = df.coalesce(1).sortWithinPartitions("id")
         write_delta(
-            df, uri, checkpoint_interval=None,
+            df, uri,
             partition_by=list(partition_by),
         )
     return uri
@@ -558,7 +557,7 @@ class TestDistributedDV:
         df = spark.range(0, 200_000).select(
             F.col("id"), (F.col("id") % 7).alias("m")
         )
-        write_delta(df.repartition(4), uri, checkpoint_interval=None)
+        write_delta(df.repartition(4), uri)
 
         # serialize_bitmap_array must run ONLY in executor tasks: poison
         # it on the driver for the duration of the delete. (local-mode

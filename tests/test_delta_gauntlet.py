@@ -54,13 +54,11 @@ def test_full_lifecycle_composes(spark, tmp_path):
         write_delta(
             df_of(spark, rows), uri,
             txn_app_id="gauntlet", txn_version=epoch,
-            checkpoint_interval=None,
         )
         if epoch == 1:
             write_delta(
                 df_of(spark, rows), uri,
                 txn_app_id="gauntlet", txn_version=epoch,
-                checkpoint_interval=None,
             )
         for k, v in rows:
             model[k] = (k, v)
@@ -70,7 +68,7 @@ def test_full_lifecycle_composes(spark, tmp_path):
     # v3: overwrite with a subset
     write_delta(
         df_of(spark, [(10, "x"), (11, "y")]), uri,
-        mode="overwrite", checkpoint_interval=None,
+        mode="overwrite",
     )
     model = {10: (10, "x"), 11: (11, "y")}
     assert read_all(spark, uri) == sorted(model.values())
@@ -86,7 +84,7 @@ def test_full_lifecycle_composes(spark, tmp_path):
             SCHEMA.fields + [T.StructField("score", T.DoubleType())]
         ),
     )
-    write_delta(widened, uri, schema_mode="merge", checkpoint_interval=None)
+    write_delta(widened, uri, schema_mode="merge")
     write_checkpoint(uri)
     snap = DeltaLog(uri).snapshot()
     assert snap.version == 4
@@ -107,13 +105,13 @@ def test_full_lifecycle_composes(spark, tmp_path):
     before = DeltaLog(uri).snapshot().version
     write_delta(
         df_of(spark, [(99, "dup")]), uri,
-        txn_app_id="gauntlet", txn_version=2, checkpoint_interval=None,
+        txn_app_id="gauntlet", txn_version=2,
     )
     assert DeltaLog(uri).snapshot().version == before
 
     # v5-v6: two more appends (strict mode, subset of evolved schema ok)
-    write_delta(df_of(spark, [(13, "m")]), uri, checkpoint_interval=None)
-    write_delta(df_of(spark, [(14, "n")]), uri, checkpoint_interval=None)
+    write_delta(df_of(spark, [(13, "m")]), uri)
+    write_delta(df_of(spark, [(14, "n")]), uri)
 
     # compact everything into one file per (unpartitioned) table
     n_before = len(DeltaLog(uri).snapshot().files)
@@ -189,7 +187,7 @@ class TestRandomLifecycles:
             if op[0] == "append":
                 rows = [(op[1] * 10 + j, f"v{op[1]}") for j in range(2)]
                 write_delta(
-                    df_of(spark, rows), uri, checkpoint_interval=None
+                    df_of(spark, rows), uri
                 )
                 model.extend(rows)
                 version += 1
@@ -197,7 +195,7 @@ class TestRandomLifecycles:
                 rows = [(op[1] * 10 + j, f"o{op[1]}") for j in range(2)]
                 write_delta(
                     df_of(spark, rows), uri,
-                    mode="overwrite", checkpoint_interval=None,
+                    mode="overwrite",
                 )
                 model = list(rows)
                 version += 1

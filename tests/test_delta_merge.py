@@ -191,7 +191,6 @@ class TestAffectedFilesCap:
         )
         write_delta(
             df.repartition(parts, "p"), uri, partition_by=["p"],
-            checkpoint_interval=None,
         )
         return uri
 

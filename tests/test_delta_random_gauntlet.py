@@ -68,7 +68,7 @@ def _run_program(spark, tmp_path, seed, n_ops=12):
     # seed commit
     rows = fresh_rows(rng.randint(3, 8))
     write_delta(
-        spark.createDataFrame(rows, SCHEMA), uri, checkpoint_interval=None
+        spark.createDataFrame(rows, SCHEMA), uri
     )
     for k, v, x in rows:
         model[k] = (v, x)
@@ -83,7 +83,6 @@ def _run_program(spark, tmp_path, seed, n_ops=12):
             rows = fresh_rows(rng.randint(1, 6))
             write_delta(
                 spark.createDataFrame(rows, SCHEMA), uri,
-                checkpoint_interval=None,
             )
             for k, v, x in rows:
                 model[k] = (v, x)

@@ -14,7 +14,7 @@ from pyspark.sql import types as T
 from datarepo_spark.core.filters import Filter
 from datarepo_spark.tables.delta_log import DeltaLog
 from datarepo_spark.tables.delta_table import DeltalakeTable
-from datarepo_spark.tables.delta_testing import DeltaFixtureWriter
+from delta_testing import DeltaFixtureWriter
 
 SCHEMA = T.StructType(
     [

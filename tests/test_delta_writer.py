@@ -5,6 +5,7 @@ time travel, and streaming foreachBatch ingestion."""
 import os
 import json
 import threading
+from urllib.parse import unquote
 
 import pytest
 from pyspark.sql import functions as F
@@ -137,14 +138,12 @@ class TestSnapshotCache:
         uri = str(tmp_path / "snapcache")
         write_delta(
             spark.createDataFrame([(1,)], ["v"]), uri,
-            checkpoint_interval=None,
         )
         log = DeltaLog(uri)
         s1 = log.snapshot()
         assert log.snapshot() is s1  # fingerprint-validated memo hit
         write_delta(
             spark.createDataFrame([(2,)], ["v"]), uri,
-            checkpoint_interval=None,
         )
         s2 = log.snapshot()
         assert s2 is not s1 and s2.version == 1
@@ -379,7 +378,6 @@ class TestCompactionAndVacuum:
                 ),
                 uri,
                 partition_by=["part"],
-                checkpoint_interval=None,
             )
         before = DeltaLog(uri).snapshot()
         t = DeltalakeTable("cmp", uri)
@@ -403,7 +401,6 @@ class TestCompactionAndVacuum:
         uri = str(tmp_path / "cmp1")
         write_delta(
             spark.createDataFrame([(1,)], ["v"]).coalesce(1), uri,
-            checkpoint_interval=None,
         )
         stats = compact(spark, uri)
         assert stats == {
@@ -425,7 +422,6 @@ class TestCompactionAndVacuum:
         for i in range(3):
             write_delta(
                 spark.createDataFrame([(i,)], ["v"]), uri,
-                checkpoint_interval=None,
             )
         before = DeltaLog(uri).snapshot()
         compact(spark, uri)
@@ -590,12 +586,11 @@ class TestCheckpointing:
         df = spark.createDataFrame(
             [(1, "a"), (2, "b"), (3, "a")], ["v", "p"]
         )
-        write_delta(df, uri, partition_by=["p"], checkpoint_interval=None)
+        write_delta(df, uri, partition_by=["p"])
         write_delta(
             spark.createDataFrame([(4, "b")], ["v", "p"]),
             uri,
             partition_by=["p"],
-            checkpoint_interval=None,
         )
         write_checkpoint(uri)
         t = DeltalakeTable("t", uri)
@@ -623,14 +618,12 @@ class TestCheckpointing:
             spark.createDataFrame([(1, "a"), (2, "b")], ["v", "p"]),
             uri,
             partition_by=["p"],
-            checkpoint_interval=None,
         )
         # overwrite creates remove tombstones for version-0 files
         write_delta(
             spark.createDataFrame([(9, "a")], ["v", "p"]),
             uri,
             mode="overwrite",
-            checkpoint_interval=None,
         )
         path = write_checkpoint(uri)
         schema = pq.read_schema(path)
@@ -680,7 +673,6 @@ class TestCheckpointing:
         uri = str(tmp_path / "gaphead")
         write_delta(
             spark.createDataFrame([(0,)], ["v"]), uri,
-            checkpoint_interval=None,
         )
         log_dir = os.path.join(uri, "_delta_log")
         os.rename(
@@ -713,7 +705,6 @@ class TestCheckpointing:
         uri = str(tmp_path / "readd")
         write_delta(
             spark.createDataFrame([(1,)], ["v"]), uri,
-            checkpoint_interval=None,
         )
         snap = DeltaLog(uri).snapshot()
         path0 = snap.files[0].path
@@ -743,7 +734,7 @@ class TestCommitConflicts:
         df = spark.range(0, 10).select(
             F.col("id"), F.concat(F.lit("r"), "id").alias("v")
         )
-        write_delta(df, uri, checkpoint_interval=None)
+        write_delta(df, uri)
         return uri
 
     def _land(self, uri, actions, version):
@@ -772,13 +763,13 @@ class TestCommitConflicts:
             1,
         )
         v = _commit_atomically(
-            os.path.join(uri, "_delta_log"),
+            uri,
             [{"add": {"path": "mine.parquet", "partitionValues": {},
                       "size": 1, "modificationTime": 0,
                       "dataChange": True}}],
-            read_version=0,
+            snapshot=DeltaLog(uri).snapshot(0),
         )
-        assert v == 2
+        assert v.version == 2
 
     def test_concurrent_remove_conflicts(self, spark, tmp_path):
         from datarepo_spark.tables.delta_log import DeltaLog
@@ -798,10 +789,10 @@ class TestCommitConflicts:
         )
         with pytest.raises(ConcurrentModificationError, match="stale"):
             _commit_atomically(
-                os.path.join(uri, "_delta_log"),
+                uri,
                 [{"remove": {"path": victim, "deletionTimestamp": 0,
                              "dataChange": True}}],
-                read_version=0,
+                snapshot=DeltaLog(uri).snapshot(0),
             )
 
     def test_concurrent_metadata_conflicts(self, spark, tmp_path):
@@ -822,18 +813,15 @@ class TestCommitConflicts:
             ConcurrentModificationError, match="metadata/protocol"
         ):
             _commit_atomically(
-                os.path.join(uri, "_delta_log"),
+                uri,
                 [{"add": {"path": "mine.parquet", "partitionValues": {},
                           "size": 1, "modificationTime": 0,
                           "dataChange": True}}],
-                read_version=0,
+                snapshot=DeltaLog(uri).snapshot(0),
             )
 
     def test_racing_idempotent_txn_short_circuits(self, spark, tmp_path):
-        from datarepo_spark.tables.delta_writer import (
-            _TxnAlreadyLanded,
-            _commit_atomically,
-        )
+        from datarepo_spark.tables.delta_writer import _commit_atomically
 
         uri = self._table(spark, tmp_path)
         self._land(
@@ -848,73 +836,98 @@ class TestCommitConflicts:
             1,
         )
         before = sorted(os.listdir(os.path.join(uri, "_delta_log")))
-        with pytest.raises(_TxnAlreadyLanded) as exc:
-            _commit_atomically(
-                os.path.join(uri, "_delta_log"),
-                [
-                    {"txn": {"appId": "ingest", "version": 7,
-                             "lastUpdated": 0}},
-                    {"add": {"path": "mine.parquet", "partitionValues": {},
-                             "size": 1, "modificationTime": 0,
-                             "dataChange": True}},
-                ],
-                read_version=0,
-            )
+        commit = _commit_atomically(
+            uri,
+            [{"add": {"path": "mine.parquet", "partitionValues": {},
+                      "size": 1, "modificationTime": 0,
+                      "dataChange": True}}],
+            snapshot=DeltaLog(uri).snapshot(0),
+            txn=("ingest", 7),
+        )
         # the racing batch already landed: nothing new was committed,
         # and the caller is told which version holds the batch
-        assert exc.value.version == 1
+        assert commit == (1, True)
         after = sorted(os.listdir(os.path.join(uri, "_delta_log")))
         assert before == after
 
-    def test_superseded_write_discards_staged_files(self, spark, tmp_path):
-        """write_delta whose idempotent commit loses the race must
-        remove the parquet files it staged into the table and report
-        the racer's version."""
-        import glob
-
+    @pytest.mark.parametrize(
+        "op",
+        ["write_delta", "merge_delta", "delete_delta_dv",
+         "delete_delta_rewrite", "update_delta", "overwrite_where"],
+    )
+    def test_superseded_write_discards_staged_files(
+        self, spark, tmp_path, monkeypatch, op
+    ):
+        """An idempotent write whose commit loses the race to a replay
+        of its own batch must remove every data and DV file it staged
+        into the table and report zero effect at the racer's version."""
+        from datarepo_spark.core.exec import local_frame
         from datarepo_spark.tables import delta_writer as dw
 
         uri = self._table(spark, tmp_path)
-        df = spark.range(100, 105).select(
-            F.col("id"), F.concat(F.lit("r"), "id").alias("v")
-        )
-
         real_commit = dw._commit_atomically
-        state = {"raced": False}
+        staged = []
 
-        def racing_commit(log_dir, actions, **kw):
+        def racing_commit(uri, actions, **kw):
             # land the same txn from a 'concurrent writer' after this
             # transaction staged its files but before its commit
-            if not state["raced"]:
-                state["raced"] = True
-                real_commit(
-                    log_dir,
-                    [
-                        {"txn": {"appId": "app", "version": 3,
-                                 "lastUpdated": 0}},
-                        {"add": {"path": "racer.parquet",
-                                 "partitionValues": {}, "size": 1,
-                                 "modificationTime": 0,
-                                 "dataChange": True}},
-                    ],
-                )
-            return real_commit(log_dir, actions, **kw)
-
-        n_files_before = len(glob.glob(os.path.join(uri, "*.parquet")))
-        dw._commit_atomically, saved = racing_commit, dw._commit_atomically
-        try:
-            v = dw.write_delta(
-                df, uri, txn_app_id="app", txn_version=3,
-                checkpoint_interval=None,
+            monkeypatch.setattr(dw, "_commit_atomically", real_commit)
+            staged.extend(kw["staged"])
+            assert all(
+                os.path.exists(os.path.join(uri, unquote(p))) for p in staged
             )
-        finally:
-            dw._commit_atomically = saved
-        assert v == 1  # the racer's commit
-        # our staged files were discarded — only the racer's phantom add
-        assert (
-            len(glob.glob(os.path.join(uri, "*.parquet")))
-            == n_files_before
-        )
+            real_commit(
+                uri,
+                [{"add": {"path": "racer.parquet", "partitionValues": {},
+                          "size": 1, "modificationTime": 0,
+                          "dataChange": True}}],
+                txn=("app", 3),
+            )
+            return real_commit(uri, actions, **kw)
+
+        def on_disk():
+            return {
+                os.path.relpath(os.path.join(root, n), uri)
+                for root, _dirs, names in os.walk(uri)
+                if "_delta_log" not in root
+                for n in names
+            }
+
+        def frame(*rows):
+            return local_frame(spark, list(rows), "id long, v string")
+
+        txn = {"txn_app_id": "app", "txn_version": 3}
+        one = [Filter("id", "=", 1)]
+        calls = {
+            "write_delta": lambda: dw.write_delta(
+                frame((100, "a")), uri, **txn),
+            "merge_delta": lambda: dw.merge_delta(
+                spark, uri, frame((1, "x"), (100, "y")), on=["id"], **txn),
+            "delete_delta_dv": lambda: dw.delete_delta(
+                spark, uri, one, **txn),
+            "delete_delta_rewrite": lambda: dw.delete_delta(
+                spark, uri, one, rewrite_threshold=0.0, **txn),
+            "update_delta": lambda: dw.update_delta(
+                spark, uri, one, {"v": "'x'"}, **txn),
+            "overwrite_where": lambda: dw.overwrite_where(
+                spark, uri, frame((1, "x")), one, **txn),
+        }
+        before = on_disk()
+        monkeypatch.setattr(dw, "_commit_atomically", racing_commit)
+        result = calls[op]()
+        if op == "write_delta":
+            assert result == 1  # the racer's commit
+        else:
+            assert result["version"] == 1
+            assert all(v == 0 for k, v in result.items() if k != "version")
+        # it staged data files, and DV files where it soft-deletes; none
+        # is left on disk
+        kinds = {os.path.splitext(p)[1] for p in staged}
+        dv = op in ("delete_delta_dv", "update_delta", "overwrite_where")
+        assert kinds == ({".bin"} if op == "delete_delta_dv" else
+                         {".parquet", ".bin"} if dv else {".parquet"})
+        assert on_disk() == before
+        assert DeltaLog(uri).snapshot().version == 1
 
     def test_strict_mode_refuses_any_intervening_commit(
         self, spark, tmp_path
@@ -936,11 +949,11 @@ class TestCommitConflicts:
             ConcurrentModificationError, match="full-table snapshot"
         ):
             _commit_atomically(
-                os.path.join(uri, "_delta_log"),
+                uri,
                 [{"metaData": {"id": "x", "schemaString": "{}",
                                "partitionColumns": [],
                                "configuration": {}}}],
-                read_version=0,
+                snapshot=DeltaLog(uri).snapshot(0),
                 strict=True,
             )
 
@@ -956,12 +969,12 @@ class TestCommitConflicts:
             1,
         )
         v = _commit_atomically(
-            os.path.join(uri, "_delta_log"),
+            uri,
             [{"add": {"path": "mine.parquet", "partitionValues": {},
                       "size": 1, "modificationTime": 0,
                       "dataChange": True}}],
         )
-        assert v == 2
+        assert v.version == 2
 
 
 class TestCheckConstraints:
@@ -970,7 +983,7 @@ class TestCheckConstraints:
         df = spark.range(0, 10).select(
             F.col("id"), (F.col("id") * 2.0).alias("x")
         )
-        write_delta(df, uri, checkpoint_interval=None)
+        write_delta(df, uri)
         return uri
 
     def test_add_enforce_drop(self, spark, tmp_path):
@@ -989,15 +1002,15 @@ class TestCheckConstraints:
         good = spark.range(10, 12).select(
             F.col("id"), (F.col("id") * 1.0).alias("x")
         )
-        write_delta(good, uri, checkpoint_interval=None)
+        write_delta(good, uri)
         bad = spark.range(12, 14).select(
             F.col("id"), (F.col("id") * -1.0).alias("x")
         )
         with pytest.raises(ConstraintViolationError, match="x_nonneg"):
-            write_delta(bad, uri, checkpoint_interval=None)
+            write_delta(bad, uri)
 
         drop_check_constraint(uri, "x_nonneg")
-        write_delta(bad, uri, checkpoint_interval=None)
+        write_delta(bad, uri)
         t = DeltalakeTable("con", uri)
         assert t(spark=spark).count() == 14
 
@@ -1041,7 +1054,7 @@ class TestCheckConstraints:
         with_null = spark.range(20, 21).select(
             F.col("id"), F.lit(None).cast("double").alias("x")
         )
-        write_delta(with_null, uri, checkpoint_interval=None)
+        write_delta(with_null, uri)
         assert DeltalakeTable("con", uri)(spark=spark).count() == 11
 
     def test_feature_table_gets_writer_feature(self, spark, tmp_path):
@@ -1073,7 +1086,7 @@ class TestHistoryAndRestore:
             df = spark.range(lo, lo + 5).select(
                 F.col("id"), (F.col("id") * 1.0).alias("x")
             )
-            write_delta(df, uri, checkpoint_interval=None)
+            write_delta(df, uri)
         return uri
 
     def test_describe_history(self, spark, tmp_path):
@@ -1116,7 +1129,7 @@ class TestHistoryAndRestore:
             spark.range(100, 102).select(
                 F.col("id"), (F.col("id") * 1.0).alias("x")
             ),
-            uri, mode="overwrite", checkpoint_interval=None,
+            uri, mode="overwrite",
         )
         assert DeltalakeTable("t", uri)(spark=spark).count() == 2
         restore_table(spark, uri, 1)
@@ -1136,7 +1149,7 @@ class TestHistoryAndRestore:
             spark.range(50, 52).select(
                 F.col("id"), (F.col("id") * 1.0).alias("x")
             ),
-            uri, mode="overwrite", checkpoint_interval=None,
+            uri, mode="overwrite",
         )
         vacuum(uri)
         with pytest.raises(ValueError, match="vacuumed"):
@@ -1167,7 +1180,7 @@ class TestConstraintReviewFixes:
         df = spark.range(0, 6).select(
             F.col("id"), (F.col("id") * 1.0).alias("x")
         )
-        write_delta(df, uri, checkpoint_interval=None)
+        write_delta(df, uri)
         add_check_constraint(spark, uri, "x_nonneg", "x >= 0")
         delete_delta(spark, uri, [Filter("id", "=", 1)])
         proto = DeltaLog(uri).snapshot().raw_protocol
@@ -1187,10 +1200,10 @@ class TestConstraintReviewFixes:
         df = spark.range(0, 3).select(
             F.col("id"), (F.col("id") * 1.0).alias("x")
         )
-        write_delta(df, uri, checkpoint_interval=None)
+        write_delta(df, uri)
         add_check_constraint(spark, uri, "x_nonneg", "x >= 0")
         subset = spark.range(10, 12).select(F.col("id"))
-        write_delta(subset, uri, checkpoint_interval=None)
+        write_delta(subset, uri)
         rows = {
             r["id"]: r["x"]
             for r in DeltalakeTable("t", uri)(spark=spark).collect()
@@ -1205,7 +1218,7 @@ class TestGeneratedColumns:
             F.col("id"), (F.col("id") * 2.5).alias("x")
         )
         write_delta(
-            df, uri, checkpoint_interval=None,
+            df, uri,
             generated_cols={"bucket": "CAST(id % 3 AS BIGINT)"},
         )
         return uri
@@ -1230,7 +1243,7 @@ class TestGeneratedColumns:
         more = spark.range(10, 12).select(
             F.col("id"), (F.col("id") * 1.0).alias("x")
         )
-        write_delta(more, uri, checkpoint_interval=None)
+        write_delta(more, uri)
         rows = {
             r["id"]: r["bucket"]
             for r in DeltalakeTable("t", uri)(spark=spark).collect()
@@ -1247,7 +1260,7 @@ class TestGeneratedColumns:
             F.col("id"), F.lit(0.0).alias("x"),
             (F.col("id") % 3).cast("long").alias("bucket"),
         )
-        write_delta(ok, uri, checkpoint_interval=None)
+        write_delta(ok, uri)
         bad = spark.range(21, 22).select(
             F.col("id"), F.lit(0.0).alias("x"),
             F.lit(99).cast("long").alias("bucket"),
@@ -1255,7 +1268,7 @@ class TestGeneratedColumns:
         with pytest.raises(
             ConstraintViolationError, match="GENERATED ALWAYS AS"
         ):
-            write_delta(bad, uri, checkpoint_interval=None)
+            write_delta(bad, uri)
 
     def test_update_recomputes_generated(self, spark, tmp_path):
         from datarepo_spark.tables.delta_writer import update_delta
@@ -1281,7 +1294,7 @@ class TestGeneratedColumns:
         )
         with pytest.raises(ValueError, match="creation"):
             write_delta(
-                more, uri, checkpoint_interval=None,
+                more, uri,
                 generated_cols={"other": "id"},
             )
 
@@ -1341,7 +1354,7 @@ class TestConvertToDelta:
             spark.range(10, 12).select(
                 F.col("id"), (F.col("id") * 1.0).alias("x")
             ),
-            plain, checkpoint_interval=None,
+            plain,
         )
         delete_delta(spark, plain, [Filter("id", "=", 0)])
         got = sorted(
@@ -1354,7 +1367,7 @@ class TestConvertToDelta:
 
         uri = str(tmp_path / "d")
         write_delta(
-            spark.range(3).select("id"), uri, checkpoint_interval=None
+            spark.range(3).select("id"), uri
         )
         with pytest.raises(ValueError, match="already"):
             convert_to_delta(spark, uri)
@@ -1395,7 +1408,7 @@ class TestCompactWhere:
                 F.col("id"), (F.col("id") % 2).cast("string").alias("par")
             ).coalesce(1)
             write_delta(
-                df, uri, partition_by=["par"], checkpoint_interval=None
+                df, uri, partition_by=["par"]
             )
         stats = compact(spark, uri, where=[Filter("par", "=", "1")])
         assert stats["files_removed"] == 3 and stats["files_added"] == 1
@@ -1412,7 +1425,7 @@ class TestCompactWhere:
         df = spark.range(0, 4).select(
             F.col("id"), (F.col("id") % 2).cast("string").alias("par")
         )
-        write_delta(df, uri, partition_by=["par"], checkpoint_interval=None)
+        write_delta(df, uri, partition_by=["par"])
         with pytest.raises(ValueError, match="partition columns only"):
             compact(spark, uri, where=[Filter("id", ">", 1)])
 
@@ -1428,7 +1441,7 @@ class TestConcurrentAppendReadSet:
         df = spark.range(0, 10).select(
             F.col("id"), F.concat(F.lit("r"), "id").alias("v")
         )
-        write_delta(df, uri, checkpoint_interval=None)
+        write_delta(df, uri)
         return uri
 
     def _land_append(self, uri, version, lo, hi, data_change=True, stats=True):
@@ -1480,12 +1493,11 @@ class TestConcurrentAppendReadSet:
             ConcurrentModificationError, match="read\\s*set|read set"
         ):
             _commit_atomically(
-                os.path.join(uri, "_delta_log"),
+                uri,
                 [{"remove": {"path": "x.parquet", "deletionTimestamp": 0,
                              "dataChange": True}}],
-                read_version=0,
+                snapshot=snap,
                 read_predicate=normalize_filters([Filter("id", "<", 5)]),
-                data_schema=snap.data_schema,
             )
 
     def test_append_outside_predicate_commutes(self, spark, tmp_path):
@@ -1497,15 +1509,14 @@ class TestConcurrentAppendReadSet:
         snap = DeltaLog(uri).snapshot()
         self._land_append(uri, 1, lo=100, hi=110)  # provably not id < 5
         v = _commit_atomically(
-            os.path.join(uri, "_delta_log"),
+            uri,
             [{"add": {"path": "mine.parquet", "partitionValues": {},
                       "size": 1, "modificationTime": 0,
                       "dataChange": True}}],
-            read_version=0,
+            snapshot=snap,
             read_predicate=normalize_filters([Filter("id", "<", 5)]),
-            data_schema=snap.data_schema,
         )
-        assert v == 2
+        assert v.version == 2
 
     def test_merge_whole_table_read_conflicts_on_any_append(
         self, spark, tmp_path
@@ -1519,11 +1530,11 @@ class TestConcurrentAppendReadSet:
         self._land_append(uri, 1, lo=100, hi=110)
         with pytest.raises(ConcurrentModificationError, match="append"):
             _commit_atomically(
-                os.path.join(uri, "_delta_log"),
+                uri,
                 [{"add": {"path": "mine.parquet", "partitionValues": {},
                           "size": 1, "modificationTime": 0,
                           "dataChange": True}}],
-                read_version=0,
+                snapshot=DeltaLog(uri).snapshot(0),
                 read_whole_table=True,
             )
 
@@ -1537,15 +1548,14 @@ class TestConcurrentAppendReadSet:
         # dataChange: false rewrite (compaction) fully inside the band
         self._land_append(uri, 1, lo=0, hi=10, data_change=False)
         v = _commit_atomically(
-            os.path.join(uri, "_delta_log"),
+            uri,
             [{"add": {"path": "mine.parquet", "partitionValues": {},
                       "size": 1, "modificationTime": 0,
                       "dataChange": True}}],
-            read_version=0,
+            snapshot=snap,
             read_predicate=normalize_filters([Filter("id", "<", 5)]),
-            data_schema=snap.data_schema,
         )
-        assert v == 2
+        assert v.version == 2
 
     def test_end_to_end_racing_append_vs_delete(self, spark, tmp_path):
         """delete_delta planned against a snapshot; an append lands in
@@ -1560,11 +1570,11 @@ class TestConcurrentAppendReadSet:
         real = W._commit_atomically
         raced = {"done": False}
 
-        def racing_commit(log_dir, actions, **kw):
+        def racing_commit(uri, actions, **kw):
             if not raced["done"]:
                 raced["done"] = True
                 self._land_append(uri, 1, lo=0, hi=3)
-            return real(log_dir, actions, **kw)
+            return real(uri, actions, **kw)
 
         W._commit_atomically = racing_commit
         try:
@@ -1605,11 +1615,11 @@ class TestConcurrentAppendReadSet:
         real = W._commit_atomically
         raced = {"done": False}
 
-        def racing_commit(log_dir, actions, **kw):
+        def racing_commit(uri, actions, **kw):
             if not raced["done"]:
                 raced["done"] = True
                 self._land_append(uri, 1, lo=lo, hi=hi, stats=stats)
-            return real(log_dir, actions, **kw)
+            return real(uri, actions, **kw)
 
         monkeypatch.setattr(W, "_commit_atomically", racing_commit)
         src = local_frame(

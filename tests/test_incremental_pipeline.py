@@ -80,7 +80,6 @@ def test_stream_to_delta_to_ivm_full_loop(
             delta_uri,
             txn_app_id="ingest-q",
             txn_version=int(epoch_id),
-            checkpoint_interval=None,
         )
         if epoch_id == 1:
             # crash-replay the micro-batch: the ledger must swallow it
@@ -91,7 +90,6 @@ def test_stream_to_delta_to_ivm_full_loop(
                 delta_uri,
                 txn_app_id="ingest-q",
                 txn_version=int(epoch_id),
-                checkpoint_interval=None,
             )
 
     stream = SE.read_events_stream(

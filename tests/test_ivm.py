@@ -58,7 +58,7 @@ class TestIncrementalAggregate:
 
         write_delta(
             _src_df(spark, [(1, "a", 10.0), (2, "a", 5.0), (3, "b", 1.0)]),
-            src, checkpoint_interval=None,
+            src,
         )
         assert agg.advance(spark) == 0
         assert _view(spark, agg) == _recompute(spark, src)
@@ -66,7 +66,7 @@ class TestIncrementalAggregate:
         # more appends + a DV delete, applied in ONE advance
         write_delta(
             _src_df(spark, [(4, "b", 2.0), (5, "c", 7.5)]),
-            src, checkpoint_interval=None,
+            src,
         )
         delete_delta(spark, src, [Filter("k", "=", 2)])
         assert agg.advance(spark) == 2
@@ -78,7 +78,7 @@ class TestIncrementalAggregate:
         agg = IncrementalAggregate(src, dst, ckpt, ["grp"], ["x"])
         write_delta(
             _src_df(spark, [(1, "a", 1.0), (2, "b", 2.0)]),
-            src, checkpoint_interval=None,
+            src,
         )
         agg.advance(spark)
         delete_delta(spark, src, [Filter("grp", "=", "b")])
@@ -91,12 +91,10 @@ class TestIncrementalAggregate:
         agg = IncrementalAggregate(src, dst, ckpt, ["grp"], ["x"])
         write_delta(
             _src_df(spark, [(1, "a", 10.0)]), src,
-            checkpoint_interval=None,
         )
         agg.advance(spark)
         write_delta(
             _src_df(spark, [(2, "a", 5.0)]), src,
-            checkpoint_interval=None,
         )
         agg.advance(spark)
         want = _view(spark, agg)
@@ -113,12 +111,11 @@ class TestIncrementalAggregate:
         src, dst, ckpt = _mk(tmp_path)
         agg = IncrementalAggregate(src, dst, ckpt, ["grp"], ["x"])
         rows = [(i, "abc"[i % 3], float(i)) for i in range(30)]
-        write_delta(_src_df(spark, rows), src, checkpoint_interval=None)
+        write_delta(_src_df(spark, rows), src)
         agg.advance(spark)
         delete_delta(spark, src, [Filter("k", "<", 10)])
         write_delta(
             _src_df(spark, [(100, "d", 1.25)]), src,
-            checkpoint_interval=None,
         )
         agg.advance(spark)
         assert _view(spark, agg) == _recompute(spark, src)
@@ -131,12 +128,11 @@ class TestIncrementalAggregate:
         agg = IncrementalAggregate(src, dst, ckpt, ["grp"], ["x"])
         write_delta(
             _src_df(spark, [(1, None, 5.0), (2, "a", 1.0)]),
-            src, checkpoint_interval=None,
+            src,
         )
         agg.advance(spark)
         write_delta(
             _src_df(spark, [(3, None, 2.0)]), src,
-            checkpoint_interval=None,
         )
         agg.advance(spark)
         got = _view(spark, agg)
@@ -163,7 +159,7 @@ class TestIncrementalAggregate:
             spark.createDataFrame(
                 rows, "k long, grp string, grp2 string, x double"
             ),
-            src, checkpoint_interval=None,
+            src,
         )
         agg.advance(spark)
         df = agg.read(spark)
@@ -227,13 +223,13 @@ class TestMinMaxAvg:
         agg = self._agg(src, dst, ckpt)
         write_delta(
             _src_df(spark, [(1, "a", 10.0), (2, "a", 5.0), (3, "b", 1.0)]),
-            src, checkpoint_interval=None,
+            src,
         )
         agg.advance(spark)
         assert _view_mm(spark, agg) == _recompute_mm(spark, src)
         write_delta(
             _src_df(spark, [(4, "a", -3.0), (5, "b", 99.0)]),
-            src, checkpoint_interval=None,
+            src,
         )
         agg.advance(spark)
         assert _view_mm(spark, agg) == _recompute_mm(spark, src)
@@ -252,7 +248,7 @@ class TestMinMaxAvg:
                     (5, "b", 2.0),
                 ],
             ),
-            src, checkpoint_interval=None,
+            src,
         )
         agg.advance(spark)
         # delete BOTH of a's extrema; b untouched
@@ -271,7 +267,7 @@ class TestMinMaxAvg:
                 spark,
                 [(1, "a", 10.0), (2, "a", 5.0), (3, "a", -1.0)],
             ),
-            src, checkpoint_interval=None,
+            src,
         )
         agg.advance(spark)
         delete_delta(spark, src, [Filter("k", "=", 2)])  # middle value
@@ -285,14 +281,14 @@ class TestMinMaxAvg:
         agg = self._agg(src, dst, ckpt)
         write_delta(
             _src_df(spark, [(1, "a", 4.0), (2, "a", 8.0)]),
-            src, checkpoint_interval=None,
+            src,
         )
         agg.advance(spark)
         # one advance sees: insert 1.0, delete the old min 4.0,
         # insert 6.0 → true state {1.0, 6.0, 8.0}? no: {1.0, 6.0, 8.0}
         write_delta(
             _src_df(spark, [(3, "a", 1.0), (4, "a", 6.0)]),
-            src, checkpoint_interval=None,
+            src,
         )
         delete_delta(spark, src, [Filter("k", "=", 1)])
         agg.advance(spark)
@@ -301,7 +297,7 @@ class TestMinMaxAvg:
         # insert (classic fold hazard)
         write_delta(
             _src_df(spark, [(5, "a", -9.0)]),
-            src, checkpoint_interval=None,
+            src,
         )
         delete_delta(spark, src, [Filter("k", "=", 5)])
         agg.advance(spark)
@@ -315,7 +311,7 @@ class TestMinMaxAvg:
         agg = self._agg(src, dst, ckpt)
         write_delta(
             _src_df(spark, [(1, "a", 3.0), (2, "a", 9.0)]),
-            src, checkpoint_interval=None,
+            src,
         )
         agg.advance(spark)
         delete_delta(spark, src, [Filter("k", "=", 2)])
@@ -337,13 +333,13 @@ class TestMinMaxAvg:
         src, dst, ckpt = _mk(tmp_path)
         agg = self._agg(src, dst, ckpt)
         write_delta(
-            _src_df(spark, [(1, "a", 1.0)]), src, checkpoint_interval=None
+            _src_df(spark, [(1, "a", 1.0)]), src
         )
         agg.advance(spark)
         batch = agg.stream.poll(spark)
         assert batch is None  # caught up; now craft the NEXT batch
         write_delta(
-            _src_df(spark, [(2, "a", 2.0)]), src, checkpoint_interval=None
+            _src_df(spark, [(2, "a", 2.0)]), src
         )
         changes, version = agg.stream.poll(spark)
         delta = agg._delta_frame(changes)
@@ -417,7 +413,7 @@ class TestIncrementalJoinAggregate:
         src, agg = self._make(spark, tmp_path)
         write_delta(
             self._fact(spark, [(1, 1, 5.0), (2, 2, 7.0), (3, 3, 1.0)]),
-            src, checkpoint_interval=None,
+            src,
         )
         agg.advance(spark)
         assert self._view(spark, agg) == self._recompute(spark, src)
@@ -425,7 +421,6 @@ class TestIncrementalJoinAggregate:
         # one advance window: exercises the dim-enriched re-derivation
         write_delta(
             self._fact(spark, [(4, 2, 2.0), (5, 1, 9.0)]), src,
-            checkpoint_interval=None,
         )
         delete_delta(spark, src, [Filter("x", ">", 6.0)])
         agg.advance(spark)
@@ -437,7 +432,6 @@ class TestIncrementalJoinAggregate:
         src, agg = self._make(spark, tmp_path)
         write_delta(
             self._fact(spark, [(1, 1, 5.0), (2, 99, 100.0)]), src,
-            checkpoint_interval=None,
         )
         agg.advance(spark)
         assert self._view(spark, agg) == self._recompute(spark, src)
@@ -450,7 +444,6 @@ class TestIncrementalJoinAggregate:
         src, agg = self._make(spark, tmp_path)
         write_delta(
             self._fact(spark, [(1, 1, 5.0), (2, 2, 7.0)]), src,
-            checkpoint_interval=None,
         )
         agg.advance(spark)
         delete_delta(spark, src, [Filter("fk", "=", 2)])
@@ -488,7 +481,7 @@ class TestIncrementalDistinctCount:
             src, dst, str(tmp_path / "cursor.json"),
             group_cols=["o_orderstatus"], distinct_col="o_custkey",
         )
-        write_delta(df, src, checkpoint_interval=None)
+        write_delta(df, src)
         agg.advance(spark)
         got = {
             r.o_orderstatus: (r.n_distinct_o_custkey, r.n_rows)
@@ -543,7 +536,7 @@ class TestIncrementalTopK:
              ("b", 4, 5.0)],
             ["g", "id", "v"],
         )
-        write_delta(df, agg.source_uri, checkpoint_interval=None)
+        write_delta(df, agg.source_uri)
         agg.advance(spark)
         assert self._state(agg, spark) == {
             ("a", 1): (2, 30.0), ("a", 2): (3, 20.0), ("b", 1): (4, 5.0),
@@ -553,7 +546,7 @@ class TestIncrementalTopK:
             spark.createDataFrame(
                 [("a", 5, 25.0), ("a", 6, 1.0)], ["g", "id", "v"]
             ),
-            agg.source_uri, checkpoint_interval=None,
+            agg.source_uri,
         )
         agg.advance(spark)
         assert self._state(agg, spark) == {
@@ -572,7 +565,7 @@ class TestIncrementalTopK:
                 [("a", 1, 10.0), ("a", 2, 30.0), ("a", 3, 20.0)],
                 ["g", "id", "v"],
             ),
-            agg.source_uri, checkpoint_interval=None,
+            agg.source_uri,
         )
         agg.advance(spark)
         # id 1 (v=10) is NOT stored (k=2) — deleting it must not
@@ -596,7 +589,7 @@ class TestIncrementalTopK:
                  ("b", 4, 7.0), ("b", 5, 9.0)],
                 ["g", "id", "v"],
             ),
-            agg.source_uri, checkpoint_interval=None,
+            agg.source_uri,
         )
         agg.advance(spark)
         # delete a's #1 row: the evicted 10.0 row must RE-ENTER from
@@ -626,14 +619,14 @@ class TestIncrementalTopK:
             spark.createDataFrame(
                 [("a", 1, 10.0), ("a", 2, 30.0)], ["g", "id", "v"]
             ),
-            agg.source_uri, checkpoint_interval=None,
+            agg.source_uri,
         )
         agg.advance(spark)
         # one advance consumes BOTH the new append and the delete:
         # insert 40.0 and delete the old top in separate commits
         write_delta(
             spark.createDataFrame([("a", 9, 40.0)], ["g", "id", "v"]),
-            agg.source_uri, checkpoint_interval=None,
+            agg.source_uri,
         )
         delete_delta(spark, agg.source_uri, [Filter("id", "=", 2)])
         while agg.advance(spark) is not None:
@@ -658,14 +651,14 @@ class TestIncrementalTopK:
                 [("a", 1, 10.0), ("a", 2, 30.0), ("a", 3, 20.0)],
                 ["g", "id", "v"],
             ),
-            agg.source_uri, checkpoint_interval=None,
+            agg.source_uri,
         )
         agg.advance(spark)
         # id 9 (v=40, would out-rank everything) appears and vanishes
         # within the same window; no stored row of group a is deleted
         write_delta(
             spark.createDataFrame([("a", 9, 40.0)], ["g", "id", "v"]),
-            agg.source_uri, checkpoint_interval=None,
+            agg.source_uri,
         )
         delete_delta(spark, agg.source_uri, [Filter("id", "=", 9)])
         while agg.advance(spark) is not None:
@@ -689,13 +682,13 @@ class TestIncrementalTopK:
                 [("a", 1, 10.0), ("a", 2, 30.0), ("a", 3, 20.0)],
                 ["g", "id", "v"],
             ),
-            agg.source_uri, checkpoint_interval=None,
+            agg.source_uri,
         )
         agg.advance(spark)
         delete_delta(spark, agg.source_uri, [Filter("id", "=", 2)])
         write_delta(
             spark.createDataFrame([("a", 2, 30.0)], ["g", "id", "v"]),
-            agg.source_uri, checkpoint_interval=None,
+            agg.source_uri,
         )
         while agg.advance(spark) is not None:
             pass
@@ -718,7 +711,7 @@ class TestIncrementalTopK:
                 [("a", 1, 10.0), ("a", 2, 30.0), ("a", 3, 20.0)],
                 ["g", "id", "v"],
             ),
-            agg.source_uri, checkpoint_interval=None,
+            agg.source_uri,
         )
         delete_delta(spark, agg.source_uri, [Filter("id", "=", 2)])
         while agg.advance(spark) is not None:
@@ -796,7 +789,7 @@ class TestIncrementalTopKRandomGauntlet:
             next_id += 1
         write_delta(
             spark.createDataFrame(seed, ["g", "id", "v"]),
-            agg.source_uri, checkpoint_interval=None,
+            agg.source_uri,
         )
         agg.advance(spark)
         assert got() == expected()
@@ -824,7 +817,7 @@ class TestIncrementalTopKRandomGauntlet:
                     next_id += 1
                 write_delta(
                     spark.createDataFrame(batch, ["g", "id", "v"]),
-                    agg.source_uri, checkpoint_interval=None,
+                    agg.source_uri,
                 )
             while agg.advance(spark) is not None:
                 pass

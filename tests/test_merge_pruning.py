@@ -498,7 +498,7 @@ def clustered(spark, tmp_path_factory):
     """A 400-row table range-clustered on ``k`` into 40 files."""
     uri = str(tmp_path_factory.mktemp("clustered") / "t")
     df = spark.range(400).selectExpr("id AS k", "id * 2 AS v")
-    write_delta(df.repartitionByRange(40, "k"), uri, checkpoint_interval=None)
+    write_delta(df.repartitionByRange(40, "k"), uri)
     return uri
 
 

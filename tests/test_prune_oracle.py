@@ -18,6 +18,8 @@ sound.
 
 import datetime as dt
 import os
+import time
+from contextlib import contextmanager
 from decimal import Decimal
 from urllib.parse import unquote
 
@@ -315,3 +317,68 @@ def test_typed_literals_keep_no_more_files_than_before(spark, tables, case):
         assert want <= kept, (uri, flt)
         if want <= kept_before:
             assert kept <= kept_before, (uri, flt)
+
+
+# -- a datetime meets a timestamp_ntz column as pyspark sends it ---------------
+
+
+@contextmanager
+def process_tz(name):
+    """The Python process's local zone (what pyspark reads a naive
+    ``datetime`` literal in); the JVM's is untouched."""
+    old = os.environ.get("TZ")
+    os.environ["TZ"] = name
+    time.tzset()
+    try:
+        yield
+    finally:
+        if old is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = old
+        time.tzset()
+
+
+@pytest.mark.parametrize("partitioned", [True, False], ids=["parted", "flat"])
+@pytest.mark.parametrize(
+    "literal, timestamp_type, rows",
+    [
+        (T(2024, 1, 1), "TIMESTAMP_LTZ", [1]),
+        (T(2024, 1, 1, 8, tzinfo=UTC), "TIMESTAMP_LTZ", [1]),
+        (T(2024, 1, 1, 9, tzinfo=dt.timezone(dt.timedelta(hours=1))), "TIMESTAMP_LTZ", [1]),
+        # a session that prefers timestamp_ntz gets a naive datetime as one
+        (T(2024, 1, 1), "TIMESTAMP_NTZ", [0]),
+    ],
+    ids=["naive", "utc", "plus_one", "naive_ntz_session"],
+)
+def test_a_datetime_on_a_timestamp_ntz_column_is_typed_as_pyspark_sends_it(
+    spark, tmp_path, partitioned, literal, timestamp_type, rows
+):
+    """With the process in Los Angeles and a UTC session, pyspark sends
+    ``datetime(2024, 1, 1)`` as the instant 2024-01-01 08:00 UTC, and
+    Spark compares the column with it read in the session zone: the
+    pruned read keeps the 08:00 row, as Spark's filter over all files
+    does."""
+    uri = str(tmp_path / "ntz")
+    data = [(0, T(2024, 1, 1)), (1, T(2024, 1, 1, 8)), (2, T(2024, 1, 2))]
+    write_delta(
+        local_frame(spark, data, "id int, n timestamp_ntz").repartition(3),
+        uri,
+        partition_by=["n"] if partitioned else [],
+    )
+    table = DeltalakeTable("ntz", uri)
+    flt = Filter("n", "=", literal)
+    confs = {"spark.sql.session.timeZone": "UTC", "spark.sql.timestampType": timestamp_type}
+    old = {k: spark.conf.get(k) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        with process_tz("America/Los_Angeles"):
+            want = table(spark=spark).filter(filters_to_column([[flt]]))
+            want = sorted(r.id for r in want.collect())
+            got = sorted(r.id for r in table(spark=spark, filters=[flt]).collect())
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+    assert want == rows
+    assert got == want
